@@ -213,41 +213,6 @@ def link_prediction(
     )
 
 
-def link_prediction_sql(
-    min_common: int = 2, max_center_degree: int | None = None
-) -> str:
-    """DuckDB twin of :func:`link_prediction` over the event-derived
-    interaction graph (same ``und`` derivation as the x27 triangle oracle)."""
-    cap = (
-        f"""
-,small AS (
-  SELECT center FROM (
-    SELECT center, count(*) AS d FROM exp GROUP BY center) WHERE d <= {max_center_degree}
-),
-wsrc AS (SELECT e.* FROM exp e SEMI JOIN small s ON e.center = s.center)
-"""
-        if max_center_degree is not None
-        else ",wsrc AS (SELECT * FROM exp)"
-    )
-    return f"""
-WITH und AS (
-  SELECT DISTINCT least(a.user_id, b.user_id) AS u, greatest(a.user_id, b.user_id) AS v
-  FROM events a JOIN events b ON b.event_id = a.event_id + 1
-  WHERE a.user_id <> b.user_id
-),
-exp AS (SELECT u AS center, v AS leaf FROM und UNION ALL SELECT v, u FROM und)
-{cap},
-cand AS (
-  SELECT x.leaf AS a, y.leaf AS b, CAST(count(*) AS BIGINT) AS common_neighbors
-  FROM wsrc x JOIN wsrc y ON x.center = y.center AND x.leaf < y.leaf
-  GROUP BY x.leaf, y.leaf
-  HAVING count(*) >= {min_common}
-)
-SELECT c.a, c.b, c.common_neighbors
-FROM cand c ANTI JOIN und ON c.a = und.u AND c.b = und.v
-"""
-
-
 def funnel(
     events: DataFrame,
     steps: tuple[str, ...] = ("view", "click", "purchase"),

@@ -196,33 +196,6 @@ def containment_pairs(
     return out
 
 
-def containment_pairs_sql(
-    threshold: float = 0.5, table: str = "documents", where: str = ""
-) -> str:
-    """DuckDB twin of :func:`containment_pairs` (word trigrams)."""
-    w = "string_split(text, ' ')"
-    trigrams = (
-        f"list_transform(range(1, length({w}) - 1), "
-        f"i -> concat_ws(' ', {w}[i], {w}[i+1], {w}[i+2]))"
-    )
-    return f"""
-WITH sub AS (SELECT doc_id, text FROM {table} {where}),
-sh AS (
-  SELECT doc_id, unnest(list_distinct({trigrams})) AS shingle FROM sub
-),
-sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-inter AS (
-  SELECT a.doc_id AS a, b.doc_id AS b, count(*) AS n_inter
-  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-  GROUP BY a.doc_id, b.doc_id
-)
-SELECT a, b, n_inter, sa.n_sh AS n_a, sb.n_sh AS n_b,
-       (n_inter * 1000000) // least(sa.n_sh, sb.n_sh) AS containment_micro
-FROM inter JOIN sizes sa ON sa.doc_id = a JOIN sizes sb ON sb.doc_id = b
-WHERE (n_inter * 1000000) // least(sa.n_sh, sb.n_sh) >= {int(threshold * 1_000_000)}
-"""
-
-
 def release_caches(df: DataFrame) -> None:
     """Unpersist any internal caches attached to a result frame by the
     functions in this module (safe only after the result is materialized).

@@ -6,13 +6,32 @@ dot products are exact and order-independent, so Spark partial aggregation,
 numpy matmul, and any SQL oracle agree bit-for-bit — float reductions would
 not.  A 64-dim unit vector's quantized dot stays ≤ ~6.4e13, comfortably int64.
 
-Physical strategy:
-- brute-force top-k and near-dup pairs run as Arrow-native ``mapInArrow``
-  with a numpy int64 GEMM against a broadcast matrix — the legitimate
-  pandas-UDF use case (vector math), ~100× a per-element lambda chain.
-- LSH-bucketed ANN keeps pure column expressions: the bucket join shrinks the
-  candidate set so the per-row dot is cheap; this is the 100 TB path (the
-  broadcast-matrix variants assume one side fits in memory).
+Top-k ANN: one skeleton, a pruning stage plus an exact refine (the split of
+REPOSE, ICDE 2021, and of incremental top-k similarity search, EDBT 2020).
+Every Arrow-pass operator — ``brute_force_topk``, ``int8_ann_topk``,
+``pq_ann_topk``, ``pq_rerank_topk``, ``ivfpq_ann_topk``,
+``ivfpq_trained_ann_topk``, ``binary_ann_topk`` — is :func:`_ann_topk` plus
+a per-operator ``candidates`` callback:
+
+1. one :func:`_collect_legs` job fetches the query vectors and any index
+   seed rows; the operator's ``build`` turns them into driver state
+   (codebooks, ADC tables, probe cells, sketches), broadcast once;
+2. one ``mapInArrow`` corpus pass: the callback scores each Arrow batch
+   (int64 GEMM, int8 GEMM, PQ/ADC lookups, cell-restricted residual ADC,
+   Hamming popcount) into (query, row, key) triples; the skeleton drops
+   self-pairs and keeps each query's local top-k (:func:`_local_topk`);
+3. one query_id exchange ranks by (key, neighbor_id ASC) (:func:`_rank`);
+   with a rerank the cut keeps the candidate count and re-ranks by the
+   exact ``dot_micro2`` computed in the same pass.
+
+The shared index pieces are :func:`_pq_encode` (per-subspace argmin),
+:func:`_adc_tables`, :func:`_pq_train` (per-subspace Lloyd) and
+:func:`_cell_key` / :func:`_probe_cells` (coarse cells).  ``ivf_ann_topk``
+and ``lsh_ann_topk`` stay join-based — their candidate join runs in the JVM
+(LSH keeps pure column expressions: the bucket join is the 100 TB path when
+no broadcast matrix fits) — and share only :func:`_rank`.  Each ``*_sql``
+function is the DuckDB twin the oracle gate compares against; the twins
+share no code with the engine.
 """
 
 from __future__ import annotations
@@ -114,18 +133,22 @@ def _collect_legs(legs: list[DataFrame]) -> list[list]:
     that needs N tiny slices of the corpus (codebook seeds, training rows,
     query vectors, …) pays a single job-launch floor instead of N sequential
     ones — and at corpus scale the N scans run CONCURRENTLY inside one job
-    instead of back-to-back.  Row order within a leg is NOT guaranteed (a
-    union leg's sort may not survive collection); every caller must be
-    order-insensitive (this module's builders argsort by id on the driver).
+    instead of back-to-back.  A union leg's sort does not survive
+    collection, so each leg comes back sorted by its FIRST column (the id,
+    for every leg in this module): seed rows are id-ascending without an
+    argsort of their own.  The tag rides as the LAST column, so ``row[0]``
+    and ``row[1]`` are the leg's own first two columns.
 
     Returns one list of Rows per leg, in leg order."""
     tagged = None
     for i, leg in enumerate(legs):
-        t = leg.select(F.lit(i).alias("_leg"), "*")
+        t = leg.select("*", F.lit(i).alias("_leg"))
         tagged = t if tagged is None else tagged.unionByName(t)
     out: list[list] = [[] for _ in legs]
     for r in tagged.collect():
         out[r["_leg"]].append(r)
+    for rows in out:
+        rows.sort(key=lambda r: r[0])
     return out
 
 
@@ -147,6 +170,136 @@ def _gemm53(a, b) -> "np.ndarray":  # noqa: F821
     bound = int(np.abs(a).max()) * int(np.abs(b).max()) * a.shape[1]
     assert bound < (1 << 53), f"gemm53 exactness bound exceeded: {bound}"
     return (a.astype(np.float64) @ b.astype(np.float64)).astype(np.int64)
+
+
+# --- the top-k skeleton: candidates → local top-k → global rank -----------
+
+
+def _rows_matrix(rows):
+    """``(ids, int64 micro matrix)`` of ``(id, vector, …)`` rows, in row
+    order.  The matrix is 2-D even with no rows — ``(0, 0)``, as
+    :func:`_quantize_arrow` — where ``_np_quantize`` of an empty series is
+    1-D."""
+    import numpy as np
+    import pandas as pd
+
+    ids = np.array([r[0] for r in rows], dtype=np.int64)
+    if not rows:
+        return ids, np.zeros((0, 0), dtype=np.int64)
+    return ids, _np_quantize(pd.Series([r[1] for r in rows]))
+
+
+def _all_pairs(keys):
+    """``(query position, batch row, key)`` triples of a dense (|Q|, n)
+    key matrix."""
+    import numpy as np
+
+    n_q, n = keys.shape
+    return np.repeat(np.arange(n_q), n), np.tile(np.arange(n), n_q), keys.reshape(-1)
+
+
+def _local_topk(qcol, ncol, key, k: int):
+    """Indices of each query's first ``k`` rows under (key ASC, neighbor
+    ASC) — one lexsort.  Exact: a row of the global top-k is in its own
+    batch's local top-k, so ranking only the survivors gives the global
+    answer."""
+    import numpy as np
+
+    order = np.lexsort((ncol, key, qcol))
+    q = qcol[order]
+    starts = np.flatnonzero(np.r_[True, q[1:] != q[:-1]])
+    pos = np.arange(len(q)) - np.repeat(starts, np.diff(np.r_[starts, len(q)]))
+    return order[pos < k]
+
+
+def _rank(df: DataFrame, order: F.Column, k: int) -> DataFrame:
+    """Global top-k per query: ``rank`` = row_number over (``order``,
+    neighbor_id ASC), kept ≤ k."""
+    from pyspark.sql import Window
+
+    w = Window.partitionBy("query_id").orderBy(order, F.asc("neighbor_id"))
+    return df.withColumn("rank", F.row_number().over(w).cast("int")).where(F.col("rank") <= k)
+
+
+def _ann_topk(
+    scan: DataFrame, query_ids: list[int], candidates, key: str, k: int, *,
+    desc: bool = False, rerank: int | None = None, seeds=(), build=None,
+    query_rows=None, emit_vectors: bool = False,
+) -> DataFrame:
+    """The one plan of every Arrow-pass top-k operator.
+
+    ``scan`` projects the corpus to (id, float vector[, extra columns]).  One
+    :func:`_collect_legs` job fetches the ``seeds`` legs and the
+    ``query_ids`` rows of ``scan`` (a caller holding the query rows passes
+    ``query_rows`` and skips it); ``build(seed_rows, query_rows, q_mat)``
+    turns them into the operator's index state, broadcast with the query
+    matrix.  ONE ``mapInArrow`` corpus pass calls
+    ``candidates(v, batch, q_mat, state)`` per Arrow batch (``v`` = the
+    batch's micro matrix) for (query position, batch row, key) triples,
+    drops self-pairs and keeps each query's local top-k, so the shuffle
+    carries ≤ k rows per (query, batch).  ONE query_id exchange then ranks
+    by (key DESC if ``desc`` else ASC, neighbor_id ASC).
+
+    ``rerank=n``: the pass also emits each local winner's EXACT integer
+    dot (the batch's vectors are in hand — no second corpus gather), the
+    global cut keeps ``n`` candidates per query by key, and those re-rank
+    by (dot_micro2 DESC, neighbor_id ASC) — two windows, one exchange.
+    ``emit_vectors`` carries the winners' micro vectors as ``nv``.  The
+    broadcast rides the result as ``_flockdb_caches`` (the
+    dedup.release_caches convention).
+
+    Output: (query_id, neighbor_id, key | dot_micro2[, nv], rank)."""
+    import numpy as np
+
+    seed_rows: list[list] = []
+    if query_rows is None:
+        qids = [int(i) for i in query_ids]
+        *seed_rows, query_rows = _collect_legs(
+            [*seeds, scan.where(F.col(scan.columns[0]).isin(qids))]
+        )
+    if not query_rows:  # no query id in the corpus: score nothing, 0 rows
+        scan, build = scan.limit(0), None
+    q_ids, q_mat = _rows_matrix(query_rows)
+    state = build(seed_rows, query_rows, q_mat) if build else None
+    bc = scan.sparkSession.sparkContext.broadcast((q_ids, q_mat, state))
+    cut = k if rerank is None else rerank
+
+    def score(batches):
+        import pyarrow as pa
+
+        qids_np, qm, st = bc.value
+        for batch in batches:
+            if batch.num_rows == 0:
+                continue
+            ids = _i64_arrow(batch.column(0))
+            v = _quantize_arrow(batch.column(1))
+            qpos, row, kcol = candidates(v, batch, qm, st)
+            keep = qids_np[qpos] != ids[row]
+            qpos, row, kcol = qpos[keep], row[keep], kcol[keep]
+            sel = _local_topk(qids_np[qpos], ids[row], -kcol if desc else kcol, cut)
+            qpos, row = qpos[sel], row[sel]
+            cols = {"query_id": qids_np[qpos], "neighbor_id": ids[row], key: kcol[sel]}
+            if rerank is not None:
+                # row-wise over ≤ rerank·|Q| winners; exact in float64 on
+                # the micro grid (the _gemm53 bound)
+                cols["dot_micro2"] = np.einsum(
+                    "ij,ij->i", v[row].astype(np.float64), qm[qpos].astype(np.float64)
+                ).astype(np.int64)
+            if emit_vectors:
+                cols["nv"] = _list_array(v[row])
+            yield pa.record_batch(cols)
+
+    schema = f"query_id long, neighbor_id long, {key} long"
+    schema += ", dot_micro2 long" * (rerank is not None) + ", nv array<bigint>" * emit_vectors
+    scored = scan.mapInArrow(score, schema)
+    order = F.desc(key) if desc else F.asc(key)
+    if rerank is None:
+        out = _rank(scored, order, k)
+    else:
+        cand = _rank(scored, order, rerank).select("query_id", "neighbor_id", "dot_micro2")
+        out = _rank(cand, F.desc("dot_micro2"), k)
+    out._flockdb_caches = [bc]
+    return out
 
 
 def brute_force_topk(
@@ -174,57 +327,11 @@ def brute_force_topk(
     ``query_ids`` rows of ``emb``.
 
     Output: (query_id, neighbor_id, dot_micro2[, nv], rank)."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import Window
-
-    if query_rows is None:
-        q_rows = emb.where(F.col(id_col).isin([int(i) for i in query_ids])).select(id_col, vec_col).collect()
-        query_rows = [(r[id_col], r[vec_col]) for r in q_rows]
-    q_ids = np.array([i for i, _ in query_rows], dtype=np.int64)
-    q_mat = _np_quantize(pd.Series([v for _, v in query_rows]))
-    bc = emb.sparkSession.sparkContext.broadcast((q_ids, q_mat))
-
-    def score(batches):
-        import pyarrow as pa
-
-        qids, qmat = bc.value
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            e_ids = _i64_arrow(batch.column(0))
-            e_mat = _quantize_arrow(batch.column(1))
-            scores = _gemm53(e_mat, qmat.T)  # (n, n_q) int64 — exact
-            qcol = np.repeat(qids, len(e_ids))
-            ncol = np.tile(e_ids, len(qids))
-            icol = np.tile(np.arange(len(e_ids), dtype=np.int64), len(qids))
-            dcol = scores.T.reshape(-1)
-            mask = qcol != ncol
-            qcol, ncol, dcol, icol = qcol[mask], ncol[mask], dcol[mask], icol[mask]
-            # local top-k per query: exact global result after the final
-            # window — lexsort on (query, -dot, neighbor), take first k of
-            # each query run
-            order = np.lexsort((ncol, -dcol, qcol))
-            qcol, ncol, dcol, icol = qcol[order], ncol[order], dcol[order], icol[order]
-            starts = np.flatnonzero(np.r_[True, qcol[1:] != qcol[:-1]])
-            rank = np.arange(len(qcol)) - np.repeat(starts, np.diff(np.r_[starts, len(qcol)]))
-            topk = rank < k
-            cols = {"query_id": qcol[topk], "neighbor_id": ncol[topk], "dot_micro2": dcol[topk]}
-            if emit_vectors:
-                sel = e_mat[icol[topk]]  # (n_out, dims) int64, micro grid
-                n_out, dims_ = sel.shape
-                cols["nv"] = pa.ListArray.from_arrays(
-                    pa.array(np.arange(0, (n_out + 1) * dims_, dims_, dtype=np.int32)),
-                    pa.array(sel.reshape(-1)),
-                )
-            yield pa.record_batch(cols)
-
-    out_schema = "query_id long, neighbor_id long, dot_micro2 long" + (
-        ", nv array<bigint>" if emit_vectors else ""
+    return _ann_topk(
+        emb.select(id_col, vec_col), query_ids,
+        lambda v, batch, q_mat, _: _all_pairs(_gemm53(q_mat, v.T)),  # exact
+        "dot_micro2", k, desc=True, query_rows=query_rows, emit_vectors=emit_vectors,
     )
-    scored = emb.select(id_col, vec_col).mapInArrow(score, out_schema)
-    w = Window.partitionBy("query_id").orderBy(F.desc("dot_micro2"), F.asc("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w).cast("int")).where(F.col("rank") <= k)
 
 
 def neardup_pairs(
@@ -880,6 +987,24 @@ def lsh_neardup_pairs(
     return out
 
 
+def _cell_key(x, c_mat, by_d2: bool):
+    """(n, K) coarse-cell ranking key, smaller = nearer: ``−x·c`` (the
+    dot-argmax rule) or ``|c|² − 2x·c`` (argmin squared distance; ``|x|²``
+    is constant per row).  Exact int64 with centroid rows in ascending cid,
+    so argmin / a stable argsort break ties toward the lower cid — the
+    oracles' (key, cid ASC) order."""
+    g = _gemm53(x, c_mat.T)
+    return (c_mat * c_mat).sum(1)[None, :] - 2 * g if by_d2 else -g
+
+
+def _probe_cells(q_mat, c_mat, n_probe: int, by_d2: bool):
+    """Each query's ``n_probe`` nearest cells (row indices into ``c_mat``),
+    nearest first; clamped to the number of cells."""
+    import numpy as np
+
+    return np.argsort(_cell_key(q_mat, c_mat, by_d2), axis=1, kind="stable")[:, :n_probe]
+
+
 def ivf_ann_topk(
     emb: DataFrame,
     query_ids: list[int],
@@ -908,10 +1033,8 @@ def ivf_ann_topk(
     Output: (query_id, neighbor_id, dot_micro2, rank) — same contract as
     ``brute_force_topk`` / ``lsh_ann_topk``."""
     import numpy as np
-    from pyspark.sql import Window
 
     qids = [int(i) for i in query_ids]
-    import pandas as pd
 
     # ONE construction job (r11, guide §2.4/§5): centroids (the n_centroids
     # smallest ids) and the query vectors ride a single union collect, and
@@ -929,13 +1052,7 @@ def ivf_ann_topk(
             emb.where(F.col(id_col).isin(qids)).select(id_col, vec_col),
         ]
     )
-    # centroid columns ordered by ascending cid: a STABLE argsort of -dot
-    # then breaks exact-dot ties toward the lower cid, reproducing the
-    # (cdot DESC, cid ASC) assignment order of the SQL oracle
-    c_ids = np.array([r[id_col] for r in cent_rows], dtype=np.int64)
-    order = np.argsort(c_ids, kind="stable")
-    c_ids = c_ids[order]
-    c_mat = _np_quantize(pd.Series([r[vec_col] for r in cent_rows]))[order]
+    c_ids, c_mat = _rows_matrix(cent_rows)  # ascending cid (see _cell_key)
     bc = emb.sparkSession.sparkContext.broadcast((c_ids, c_mat))
 
     def assign(batches):
@@ -943,15 +1060,13 @@ def ivf_ann_topk(
 
         cids, cmat = bc.value
         for batch in batches:
-            n = batch.num_rows
-            if n == 0:
+            if batch.num_rows == 0:
                 continue
             ids = _i64_arrow(batch.column(0))
             v = _quantize_arrow(batch.column(1))
-            s = _gemm53(v, cmat.T)  # (n, n_centroids) int64 — exact
-            ranked = np.argsort(-s, axis=1, kind="stable")  # ties → lower cid
+            cell = cids[_cell_key(v, cmat, False).argmin(axis=1)]
             yield pa.RecordBatch.from_arrays(
-                [pa.array(ids), _list_array(v), pa.array(cids[ranked[:, 0]])],
+                [pa.array(ids), _list_array(v), pa.array(cell)],
                 names=["vid", "ev", "cell"],
             )
 
@@ -965,21 +1080,15 @@ def ivf_ann_topk(
     corpus = assigned.select(F.col("vid").alias("neighbor_id"), "ev", "cell")
     # driver-side probe cells: _np_quantize lands on the same micro grid as
     # the executors' _quantize_arrow (brute_force_topk's scoring already
-    # relies on that equality), and the stable argsort reproduces the
+    # relies on that equality), and the shared _cell_key reproduces the
     # (cdot DESC, cid ASC) tie order — so each query's probe-cell set is
-    # bit-identical to the one the old second corpus pass produced
-    if q_rows:
-        q_ids = np.array([r[id_col] for r in q_rows], dtype=np.int64)
-        q_mat = _np_quantize(pd.Series([r[vec_col] for r in q_rows]))
-        ranked_q = np.argsort(-_gemm53(q_mat, c_mat.T), axis=1, kind="stable")
-        n_p = min(n_probe, len(c_ids))
-        probe_rows = [
-            (int(q_ids[i]), [int(x) for x in q_mat[i]], int(c_ids[ranked_q[i, p]]))
-            for i in range(len(q_ids))
-            for p in range(n_p)
-        ]
-    else:
-        probe_rows = []
+    # bit-identical to the one a second corpus pass would produce
+    q_ids, q_mat = _rows_matrix(q_rows)
+    probe = _probe_cells(q_mat, c_mat, n_probe, False)
+    probe_rows = [
+        (int(q_ids[i]), [int(x) for x in q_mat[i]], int(c_ids[probe[i, p]]))
+        for i, p in np.ndindex(probe.shape)
+    ]
     probes = F.broadcast(
         emb.sparkSession.createDataFrame(
             probe_rows, "query_id long, qv array<long>, cell long"
@@ -990,8 +1099,89 @@ def ivf_ann_topk(
         .where(F.col("neighbor_id") != F.col("query_id"))
         .select("query_id", "neighbor_id", dot_q(F.col("qv"), F.col("ev")).alias("dot_micro2"))
     )
-    w_k = Window.partitionBy("query_id").orderBy(F.desc("dot_micro2"), F.asc("neighbor_id"))
-    return rerank.withColumn("rank", F.row_number().over(w_k).cast("int")).where(F.col("rank") <= k)
+    return _rank(rerank, F.desc("dot_micro2"), k)
+
+
+def _subspace_d2(x, cw, n_subspaces: int, sub: int):
+    """Per subspace m (columns ``m·sub … (m+1)·sub``), the (len(x), len(cw))
+    squared distances between the rows' and the codewords' sub-vectors —
+    ``x² + c² − 2xc``, every term exact int64 on the micro grid."""
+    for m in range(n_subspaces):
+        xs, cs = x[:, m * sub : (m + 1) * sub], cw[:, m * sub : (m + 1) * sub]
+        yield (xs * xs).sum(1)[:, None] + (cs * cs).sum(1)[None, :] - 2 * _gemm53(xs, cs.T)
+
+
+def _pq_encode(x, cw, n_subspaces: int, sub: int):
+    """(n, M) PQ codes: per subspace, the nearest codeword (ties fall to
+    the LOWER code — np.argmin takes the first minimum, matching the twins'
+    (d2 ASC, code ASC) row_number)."""
+    import numpy as np
+
+    return np.stack([d2.argmin(axis=1) for d2 in _subspace_d2(x, cw, n_subspaces, sub)], axis=1)
+
+
+def _adc_tables(x, cw, n_subspaces: int, sub: int):
+    """(n, M, C) ADC lookup tables: ``tables[i, m, c] = ||x_i,m − cw_c,m||²``
+    — for query rows, driver-bounded |Q|·M·C int64s."""
+    import numpy as np
+
+    return np.stack(list(_subspace_d2(x, cw, n_subspaces, sub)), axis=1)
+
+
+def _pq_train(x, cw, n_subspaces: int, sub: int, rounds: int):
+    """Deterministic per-subspace Lloyd refinement of codebook ``cw`` on the
+    sample ``x``: assignment ties fall to the lower code (argmin-first),
+    the update is the element-wise FLOOR integer mean (the twins'
+    floor(sum/count)), and an empty cluster keeps its previous codeword.
+    x113/x118 gate this loop bit-for-bit."""
+    import numpy as np
+
+    cw = cw.copy()
+    for _ in range(rounds):
+        codes = _pq_encode(x, cw, n_subspaces, sub)
+        for m, c in np.ndindex(n_subspaces, len(cw)):
+            members = x[codes[:, m] == c, m * sub : (m + 1) * sub]
+            if len(members):
+                cw[c, m * sub : (m + 1) * sub] = np.floor_divide(members.sum(0), len(members))
+    return cw
+
+
+def _pq_candidates(v, batch, q_mat, index):
+    """Encode the batch, then ADC: Σ_m tables[q, m, code_m] for every
+    (query, row) — M table lookups per pair instead of a dims-wide dot."""
+    import numpy as np
+
+    cw, tables, sub = index
+    codes = _pq_encode(v, cw, tables.shape[1], sub)
+    return _all_pairs(tables[:, np.arange(tables.shape[1]), codes].sum(axis=2))
+
+
+def _pq_topk(
+    emb: DataFrame, query_ids: list[int], k: int, rerank: int | None,
+    n_subspaces: int = 8, n_codes: int = 16, dims: int = 64,
+    id_col: str = "vec_id", vec_col: str = "embedding",
+    train_rounds: int = 0, n_train: int = 256,
+) -> DataFrame:
+    """:func:`pq_ann_topk`, or with ``rerank`` = a candidate count
+    :func:`pq_rerank_topk`'s exact-dot rerank of the ADC winners."""
+    # codebook seeds (the n_codes smallest ids) and, when training, the
+    # n_train sample ride the query vectors' collect job
+    seeds = [emb.orderBy(id_col).limit(n_codes).select(id_col, vec_col)]
+    if train_rounds > 0:
+        seeds.append(emb.orderBy(id_col).limit(n_train).select(id_col, vec_col))
+
+    sub = dims // n_subspaces
+
+    def build(seed_rows, q_rows, q_mat):
+        cw = _rows_matrix(seed_rows[0])[1]  # (C, dims), code id == id rank
+        if train_rounds > 0:
+            cw = _pq_train(_rows_matrix(seed_rows[1])[1], cw, n_subspaces, sub, train_rounds)
+        return cw, _adc_tables(q_mat, cw, n_subspaces, sub), sub
+
+    return _ann_topk(
+        emb.select(id_col, vec_col), query_ids, _pq_candidates, "adist", k,
+        rerank=rerank, seeds=seeds, build=build,
+    )
 
 
 def pq_ann_topk(
@@ -1005,7 +1195,6 @@ def pq_ann_topk(
     vec_col: str = "embedding",
     train_rounds: int = 0,
     n_train: int = 256,
-    emit_dot: bool = False,
 ) -> DataFrame:
     """Product-quantization ANN (Jégou et al. 2011): split each vector into
     ``n_subspaces`` sub-vectors, quantize each against a per-subspace
@@ -1021,7 +1210,8 @@ def pq_ann_topk(
     instead of a ``dims``-wide dot.  The codebooks here are deterministic
     (codewords = the sub-vectors of the ``n_codes`` smallest ids — the
     same oracle-checkable seeding as ``ivf_ann_topk``'s coarse quantizer;
-    production k-means-trains each subspace, plumbing identical).
+    ``train_rounds`` > 0 refines them by per-subspace Lloyd rounds on the
+    ``n_train`` smallest ids, :func:`_pq_train`).
 
     Plan shape: one Arrow pass encodes the corpus AND scores every query
     (codebooks + per-query ADC tables are a driver-bounded
@@ -1030,137 +1220,12 @@ def pq_ann_topk(
     arithmetic is exact int64 on the micro-quantized grid, so the DuckDB
     twin (x112) reproduces every distance bit-for-bit.
 
-    ``emit_dot=True`` additionally computes the EXACT integer dot for the
-    local top-k rows only (≤ k·|Q| per batch — einsum over the selected
-    rows, never the n×|Q| brute GEMM), so the two-stage rerank recipe
-    (pq_rerank_topk) rides this one corpus pass instead of paying a second
-    gather pass + joins.
-
-    Output: (query_id, neighbor_id, adist[, dot_micro2], rank) — adist ASC
-    (smaller is closer), ties broken by neighbor_id; rank ≤ k, self
-    excluded."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import Window
-
-    sub = dims // n_subspaces
-    qids = [int(i) for i in query_ids]
-
-    # ONE construction job (r11): codebook seeds, training rows (when
-    # training) and the query vectors fold into a single union collect —
-    # was 2-3 sequential jobs (and, at corpus scale, 2-3 back-to-back
-    # TakeOrdered/filter passes).  All three consumers argsort by id, so
-    # the helper's order-insensitivity contract holds.
-    legs = [emb.orderBy(id_col).limit(n_codes).select(id_col, vec_col)]
-    if train_rounds > 0:
-        legs.append(emb.orderBy(id_col).limit(n_train).select(id_col, vec_col))
-    legs.append(emb.where(F.col(id_col).isin(qids)).select(id_col, vec_col))
-    collected = _collect_legs(legs)
-    cw_rows, q_rows = collected[0], collected[-1]
-    order = np.argsort(np.array([r[id_col] for r in cw_rows]), kind="stable")
-    cw = _np_quantize(pd.Series([r[vec_col] for r in cw_rows]))[order]  # (C, dims)
-
-    if train_rounds > 0:
-        # deterministic per-subspace Lloyd refinement on the n_train
-        # smallest ids (PQ trains on a sample by design; driver state stays
-        # a bounded T×dims block).  Assignment ties fall to the lower code
-        # (argmin-first); centroid update is the element-wise FLOOR integer
-        # mean (matches the oracle's floor(sum/count)); an empty cluster
-        # keeps its previous codeword.  x113 gates this loop bit-for-bit.
-        cw = cw.copy()
-        t_rows = collected[1]
-        t_order = np.argsort(np.array([r[id_col] for r in t_rows]), kind="stable")
-        tmat = _np_quantize(pd.Series([r[vec_col] for r in t_rows]))[t_order]
-        sub_w = dims // n_subspaces
-        for m in range(n_subspaces):
-            xs = tmat[:, m * sub_w : (m + 1) * sub_w]
-            cs = cw[:, m * sub_w : (m + 1) * sub_w].copy()
-            for _ in range(train_rounds):
-                d2 = (
-                    (xs * xs).sum(1)[:, None]
-                    + (cs * cs).sum(1)[None, :]
-                    - 2 * _gemm53(xs, cs.T)
-                )
-                codes = np.argmin(d2, axis=1)
-                for c in range(cs.shape[0]):
-                    members = xs[codes == c]
-                    if len(members):
-                        cs[c] = np.floor_divide(members.sum(0), len(members))
-            cw[:, m * sub_w : (m + 1) * sub_w] = cs
-
-    q_ids = np.array([r[id_col] for r in q_rows], dtype=np.int64)
-    q_mat = _np_quantize(pd.Series([r[vec_col] for r in q_rows]))  # (Q, dims)
-
-    # ADC tables[q, m, c] = Σ_d (q_d − cw_c_d)² over subspace m — driver-
-    # bounded |Q|·M·C int64s (5·8·16 here), broadcast with the codebooks
-    C = cw.shape[0]
-    tables = np.empty((len(q_ids), n_subspaces, C), dtype=np.int64)
-    for m in range(n_subspaces):
-        qs = q_mat[:, m * sub : (m + 1) * sub]
-        cs = cw[:, m * sub : (m + 1) * sub]
-        # (q − c)² = q² + c² − 2qc, every term exact in int64 on the grid
-        tables[:, m, :] = (
-            (qs * qs).sum(1)[:, None]
-            + (cs * cs).sum(1)[None, :]
-            - 2 * _gemm53(qs, cs.T)
-        )
-    bc = emb.sparkSession.sparkContext.broadcast((cw, q_ids, tables, q_mat))
-
-    def score(batches):
-        import pyarrow as pa
-
-        cwm, qids_np, tabs, qm = bc.value
-        qpos_of = {int(q): i for i, q in enumerate(qids_np)}
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            ids = _i64_arrow(batch.column(0))
-            v = _quantize_arrow(batch.column(1))
-            n = len(ids)
-            # encode: per subspace, argmin distance to the codewords (ties
-            # fall to the LOWER code — np.argmin takes the first minimum,
-            # matching the oracle's (d2 ASC, code ASC) row_number)
-            adist = np.zeros((len(qids_np), n), dtype=np.int64)
-            for m in range(n_subspaces):
-                xs = v[:, m * sub : (m + 1) * sub]
-                cs = cwm[:, m * sub : (m + 1) * sub]
-                d2 = (
-                    (xs * xs).sum(1)[:, None]
-                    + (cs * cs).sum(1)[None, :]
-                    - 2 * _gemm53(xs, cs.T)
-                )  # (n, C)
-                codes = np.argmin(d2, axis=1)
-                adist += tabs[:, m, codes]  # (Q, n) lookup-sum — the ADC
-            qcol = np.repeat(qids_np, n)
-            ncol = np.tile(ids, len(qids_np))
-            icol = np.tile(np.arange(n, dtype=np.int64), len(qids_np))
-            dcol = adist.reshape(-1)
-            mask = qcol != ncol
-            qcol, ncol, dcol, icol = qcol[mask], ncol[mask], dcol[mask], icol[mask]
-            # local top-k per query (adist ASC, neighbor ASC)
-            order = np.lexsort((ncol, dcol, qcol))
-            qcol, ncol, dcol, icol = qcol[order], ncol[order], dcol[order], icol[order]
-            starts = np.flatnonzero(np.r_[True, qcol[1:] != qcol[:-1]])
-            pos = np.arange(len(qcol)) - np.repeat(starts, np.diff(np.r_[starts, len(qcol)]))
-            topk = pos < k
-            cols = {"query_id": qcol[topk], "neighbor_id": ncol[topk], "adist": dcol[topk]}
-            if emit_dot:
-                # exact dot for the selected rows only: row-wise einsum over
-                # ≤ k·|Q| (vector, query) pairs — exact in float64 on the
-                # micro grid (same 2^53 bound as _gemm53)
-                qsel = np.array([qpos_of[int(q)] for q in qcol[topk]], dtype=np.int64)
-                vsel = v[icol[topk]].astype(np.float64)
-                cols["dot_micro2"] = np.einsum(
-                    "ij,ij->i", vsel, qm[qsel].astype(np.float64)
-                ).astype(np.int64)
-            yield pa.record_batch(cols)
-
-    out_schema = "query_id long, neighbor_id long, adist long" + (
-        ", dot_micro2 long" if emit_dot else ""
+    Output: (query_id, neighbor_id, adist, rank) — adist ASC (smaller is
+    closer), ties broken by neighbor_id; rank ≤ k, self excluded."""
+    return _pq_topk(
+        emb, query_ids, k, None, n_subspaces, n_codes, dims, id_col, vec_col,
+        train_rounds, n_train,
     )
-    scored = emb.select(id_col, vec_col).mapInArrow(score, out_schema)
-    w = Window.partitionBy("query_id").orderBy(F.asc("adist"), F.asc("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w).cast("int")).where(F.col("rank") <= k)
 
 
 def pq_ann_sql(
@@ -1255,26 +1320,15 @@ def pq_rerank_topk(
     holds 0.74 of the true top-10 at sf1.0 vs 0.24 for raw ADC top-10)
     while the exact-scoring cost drops from corpus-sized to
     |Q|·candidates.  At 100 TB the exact rerank rides the ADC pass itself
-    (``emit_dot`` — the scorer already holds each batch's vectors, so the
-    exact dot of the ≤ k·|Q| local winners is a row-wise einsum, not a
-    second corpus gather): one corpus pass, no joins, one exchange.
+    (the scorer already holds each batch's vectors, so the exact dot of
+    the local winners is a row-wise einsum, not a second corpus gather):
+    one corpus pass, no joins, one exchange (:func:`_ann_topk`).
 
     Output: (query_id, neighbor_id, dot_micro2, rank) — the exact-dot
     contract shared by brute_force_topk / lsh_ann_topk / ivf_ann_topk."""
-    from pyspark.sql import Window
-
-    qids = [int(i) for i in query_ids]
-    # the exact dot rides the ADC pass itself (emit_dot — computed for the
-    # local top-candidates only, r11): no second corpus pass, no gather
-    # joins, no broadcast builds; the candidate cut (adist window inside
-    # pq_ann_topk) and the exact-dot ranking below share ONE query_id
-    # exchange (guide §2.4/§8)
-    cand = pq_ann_topk(
-        emb, qids, k=candidates, id_col=id_col, vec_col=vec_col, emit_dot=True,
-        **pq_kwargs,
-    ).select("query_id", "neighbor_id", "dot_micro2")
-    w = Window.partitionBy("query_id").orderBy(F.desc("dot_micro2"), F.asc("neighbor_id"))
-    return cand.withColumn("rank", F.row_number().over(w).cast("int")).where(F.col("rank") <= k)
+    return _pq_topk(
+        emb, query_ids, k, candidates, id_col=id_col, vec_col=vec_col, **pq_kwargs
+    )
 
 
 def pq_rerank_sql(
@@ -1444,8 +1498,6 @@ def lsh_ann_topk(
     shapes (e.g. the single-table planes=6 n_probe=1 L=1 minimum, recall
     0.08) remain available explicitly when candidate volume must be
     minimal."""
-    from pyspark.sql import Window
-
     if planes is None:
         # callers that already counted the corpus (e.g. hybrid_rrf_topk's
         # leg selector) pass n_vectors so the auto shape costs zero jobs
@@ -1536,8 +1588,7 @@ def lsh_ann_topk(
         .dropDuplicates(["query_id", "neighbor_id"])
         .select("query_id", "neighbor_id", dot_q(F.col("qv"), F.col("ev")).alias("dot_micro2"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("dot_micro2"), F.asc("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w).cast("int")).where(F.col("rank") <= k)
+    return _rank(scored, F.desc("dot_micro2"), k)
 
 
 def _np_int8(mat_micro):
@@ -1551,6 +1602,18 @@ def _np_int8(mat_micro):
     safe = np.where(amax == 0, 1, amax)
     q = np.sign(mat_micro) * (np.abs(mat_micro) * 127 // safe[:, None])
     return q.astype(np.int64), amax.astype(np.int64)
+
+
+def _int8_candidates(v, batch, q_mat, q_int8):
+    """int64 GEMM on the int8 codes, rescaled to micro² as
+    trunc(dot·scale_q·scale_v / 127²) — trunc-toward-zero to match SQL
+    ``//``."""
+    import numpy as np
+
+    q8, q_amax = q_int8
+    e8, e_amax = _np_int8(v)
+    num = _gemm53(q8, e8.T) * q_amax[:, None] * e_amax[None, :]
+    return _all_pairs(np.sign(num) * (np.abs(num) // (127 * 127)))
 
 
 def int8_ann_topk(
@@ -1575,56 +1638,9 @@ def int8_ann_topk(
     the LSH/IVF bucketing above when the corpus also needs candidate
     pruning.  Output: (query_id, neighbor_id, dot_rec_micro2, rank).
     """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import Window
-
-    q_rows = (
-        emb.where(F.col(id_col).isin([int(i) for i in query_ids]))
-        .select(id_col, vec_col)
-        .collect()
-    )
-    q_ids = np.array([r[id_col] for r in q_rows], dtype=np.int64)
-    q8, q_amax = _np_int8(_np_quantize(pd.Series([r[vec_col] for r in q_rows])))
-    bc = emb.sparkSession.sparkContext.broadcast((q_ids, q8, q_amax))
-
-    def score(batches):
-        import pyarrow as pa
-
-        qids, qmat, qam = bc.value
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            e_ids = _i64_arrow(batch.column(0))
-            e8, e_amax = _np_int8(_quantize_arrow(batch.column(1)))
-            sdot = _gemm53(e8, qmat.T)  # (n, n_q) int64 code dot — exact
-            # rescale to micro^2; trunc-toward-zero to match SQL `//`
-            num = sdot * e_amax[:, None] * qam[None, :]
-            rec = np.sign(num) * (np.abs(num) // (127 * 127))
-            qcol = np.repeat(qids, len(e_ids))
-            ncol = np.tile(e_ids, len(qids))
-            dcol = rec.T.reshape(-1)
-            mask = qcol != ncol
-            qcol, ncol, dcol = qcol[mask], ncol[mask], dcol[mask]
-            # local top-k per query (see brute_force_topk.score)
-            order = np.lexsort((ncol, -dcol, qcol))
-            qcol, ncol, dcol = qcol[order], ncol[order], dcol[order]
-            starts = np.flatnonzero(np.r_[True, qcol[1:] != qcol[:-1]])
-            rank = np.arange(len(qcol)) - np.repeat(starts, np.diff(np.r_[starts, len(qcol)]))
-            topk = rank < k
-            yield pa.record_batch(
-                {"query_id": qcol[topk], "neighbor_id": ncol[topk], "dot_rec_micro2": dcol[topk]}
-            )
-
-    scored = emb.select(id_col, vec_col).mapInArrow(
-        score, "query_id long, neighbor_id long, dot_rec_micro2 long"
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("dot_rec_micro2"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .where(F.col("rank") <= k)
+    return _ann_topk(
+        emb.select(id_col, vec_col), query_ids, _int8_candidates, "dot_rec_micro2", k,
+        desc=True, build=lambda seed_rows, q_rows, q_mat: _np_int8(q_mat),
     )
 
 
@@ -2109,6 +2125,31 @@ FROM d QUALIFY rank <= {top_k}
 """
 
 
+def _ivfpq_index(q_mat, c_mat, cw, n_probe: int, n_subspaces: int, sub: int, by_d2: bool):
+    """The IVF-PQ scorer's broadcast state: each query's probe cells
+    (:func:`_probe_cells`, so ``n_probe`` clamps to the cell count) and its
+    per-(probed cell, subspace) ADC table over the query's residual,
+    ``tab[q, p, m, c] = ||(q − c_cell)_m − cw_c,m||²`` — driver-bounded
+    |Q|·n_probe·M·C int64s."""
+    probe = _probe_cells(q_mat, c_mat, n_probe, by_d2)
+    resid = (q_mat[:, None, :] - c_mat[probe]).reshape(-1, c_mat.shape[1])
+    tables = _adc_tables(resid, cw, n_subspaces, sub).reshape(*probe.shape, n_subspaces, len(cw))
+    return c_mat, cw, by_d2, probe, tables, sub
+
+
+def _ivfpq_candidates(v, batch, q_mat, index):
+    """Coarse-assign the batch (ties → lower cid), PQ-encode the residuals,
+    and score each row against every query that probes its cell."""
+    import numpy as np
+
+    c_mat, cw, by_d2, probe, tables, sub = index
+    cell = _cell_key(v, c_mat, by_d2).argmin(axis=1)
+    codes = _pq_encode(v - c_mat[cell], cw, tables.shape[2], sub)
+    qpos, p, row = np.nonzero(cell[None, None, :] == probe[:, :, None])
+    m = np.arange(tables.shape[2])[None, :]
+    return qpos, row, tables[qpos[:, None], p[:, None], m, codes[row]].sum(axis=1)
+
+
 def ivfpq_ann_topk(
     emb: DataFrame,
     query_ids: list[int],
@@ -2147,126 +2188,27 @@ def ivfpq_ann_topk(
 
     Output: (query_id, neighbor_id, adist, rank) — adist ASC, ties by
     neighbor_id; rank ≤ k, self excluded."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import Window
 
-    sub = dims // n_subspaces
-    qids = [int(i) for i in query_ids]
-
-    # ONE construction job (r11): the seed head and the query vectors ride
-    # a single union collect (both consumers argsort by id — order-safe)
-    head, q_rows = _collect_legs(
-        [
-            emb.orderBy(id_col).limit(n_centroids + n_codes).select(id_col, vec_col),
-            emb.where(F.col(id_col).isin(qids)).select(id_col, vec_col),
-        ]
-    )
-    if len(head) < n_centroids + n_codes:
-        raise ValueError(
-            f"ivfpq_ann_topk needs >= n_centroids + n_codes = "
-            f"{n_centroids + n_codes} vectors to seed both quantization "
-            f"levels; corpus has {len(head)}"
-        )
-    h_ids = np.array([r[id_col] for r in head], dtype=np.int64)
-    order = np.argsort(h_ids, kind="stable")
-    h_mat = _np_quantize(pd.Series([r[vec_col] for r in head]))[order]
-    c_mat = h_mat[:n_centroids]  # coarse centroids, row index == ascending cid
-    seed_mat = h_mat[n_centroids : n_centroids + n_codes]
-    # codebook = the seeds' residuals w.r.t. their own nearest cell
-    # (dot DESC, cid ASC — argsort stable picks the lower cid on ties)
-    s_cell = np.argsort(-_gemm53(seed_mat, c_mat.T), axis=1, kind="stable")[:, 0]
-    cw = seed_mat - c_mat[s_cell]  # (n_codes, dims), code id == row index
-
-    q_ids = np.array([r[id_col] for r in q_rows], dtype=np.int64)
-    q_mat = _np_quantize(pd.Series([r[vec_col] for r in q_rows]))
-    # each query's n_probe nearest cells, then its per-(cell, m) ADC table:
-    # tab[q, p, m, c] = ||(q − c_cell)_m − cw_c_m||² — driver-bounded
-    # |Q|·n_probe·M·C int64s
-    probe_idx = np.argsort(-_gemm53(q_mat, c_mat.T), axis=1, kind="stable")[:, :n_probe]
-    tables = np.empty((len(q_ids), n_probe, n_subspaces, n_codes), dtype=np.int64)
-    for qi in range(len(q_ids)):
-        for pi in range(n_probe):
-            rq = q_mat[qi] - c_mat[probe_idx[qi, pi]]
-            for m in range(n_subspaces):
-                rm = rq[m * sub : (m + 1) * sub]
-                cm = cw[:, m * sub : (m + 1) * sub]
-                tables[qi, pi, m, :] = (
-                    (rm * rm).sum() + (cm * cm).sum(1) - 2 * (cm @ rm)
-                )
-    bc = emb.sparkSession.sparkContext.broadcast(
-        (c_mat, cw, q_ids, probe_idx, tables)
-    )
-
-    def score(batches):
-        import pyarrow as pa
-
-        cmat, cwm, qids_np, pidx, tabs = bc.value
-        n_q, n_p = pidx.shape
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            ids = _i64_arrow(batch.column(0))
-            v = _quantize_arrow(batch.column(1))
-            n = len(ids)
-            # coarse assignment (ties → lower cid) and residual encode
-            cell = np.argsort(-_gemm53(v, cmat.T), axis=1, kind="stable")[:, 0]
-            resid = v - cmat[cell]
-            codes = np.empty((n, n_subspaces), dtype=np.int64)
-            for m in range(n_subspaces):
-                rs = resid[:, m * sub : (m + 1) * sub]
-                cs = cwm[:, m * sub : (m + 1) * sub]
-                d2 = (
-                    (rs * rs).sum(1)[:, None]
-                    + (cs * cs).sum(1)[None, :]
-                    - 2 * _gemm53(rs, cs.T)
-                )
-                codes[:, m] = np.argmin(d2, axis=1)  # ties → lower code
-            qout, nout, dout = [], [], []
-            for qi in range(n_q):
-                for pi in range(n_p):
-                    sel = np.nonzero(
-                        (cell == pidx[qi, pi]) & (ids != qids_np[qi])
-                    )[0]
-                    if not sel.size:
-                        continue
-                    ad = np.zeros(sel.size, dtype=np.int64)
-                    for m in range(n_subspaces):
-                        ad += tabs[qi, pi, m, codes[sel, m]]
-                    qout.append(np.full(sel.size, qids_np[qi], dtype=np.int64))
-                    nout.append(ids[sel])
-                    dout.append(ad)
-            if not qout:
-                continue
-            qcol = np.concatenate(qout)
-            ncol = np.concatenate(nout)
-            dcol = np.concatenate(dout)
-            # local top-k per query (adist ASC, neighbor ASC)
-            order = np.lexsort((ncol, dcol, qcol))
-            qcol, ncol, dcol = qcol[order], ncol[order], dcol[order]
-            starts = np.flatnonzero(np.r_[True, qcol[1:] != qcol[:-1]])
-            pos = np.arange(len(qcol)) - np.repeat(
-                starts, np.diff(np.r_[starts, len(qcol)])
+    def build(seed_rows, q_rows, q_mat):
+        (head,) = seed_rows
+        if len(head) < n_centroids + n_codes:
+            raise ValueError(
+                f"ivfpq_ann_topk needs >= n_centroids + n_codes = "
+                f"{n_centroids + n_codes} vectors to seed both quantization "
+                f"levels; corpus has {len(head)}"
             )
-            topk = pos < k
-            yield pa.record_batch(
-                {"query_id": qcol[topk], "neighbor_id": ncol[topk], "adist": dcol[topk]}
-            )
+        h_mat = _rows_matrix(head)[1]
+        c_mat, seed_mat = h_mat[:n_centroids], h_mat[n_centroids:]
+        # codebook = the seeds' residuals w.r.t. their own nearest cell
+        # (dot DESC, cid ASC); code id == row index
+        cw = seed_mat - c_mat[_cell_key(seed_mat, c_mat, False).argmin(axis=1)]
+        return _ivfpq_index(q_mat, c_mat, cw, n_probe, n_subspaces, dims // n_subspaces, False)
 
-    scored = emb.select(id_col, vec_col).mapInArrow(
-        score, "query_id long, neighbor_id long, adist long"
+    return _ann_topk(
+        emb.select(id_col, vec_col), query_ids, _ivfpq_candidates, "adist", k,
+        seeds=[emb.orderBy(id_col).limit(n_centroids + n_codes).select(id_col, vec_col)],
+        build=build,
     )
-    w = Window.partitionBy("query_id").orderBy(F.asc("adist"), F.asc("neighbor_id"))
-    out = scored.withColumn("rank", F.row_number().over(w).cast("int")).where(
-        F.col("rank") <= k
-    )
-    # the _flockdb_caches release convention (dedup.py): the caller
-    # unpersists after materializing, so repeated index builds in one
-    # session don't accumulate executor-side broadcast blocks (ADVICE r8);
-    # Broadcast.unpersist keeps the driver copy, so a re-execution of the
-    # same DataFrame lazily re-ships it
-    out._flockdb_caches = [bc]
-    return out
 
 
 def ivfpq_ann_sql(
@@ -2785,11 +2727,6 @@ def ivfpq_trained_ann_topk(
 
     Output: (query_id, neighbor_id, adist, rank) — x115's contract."""
     import numpy as np
-    import pandas as pd
-    from pyspark.sql import Window
-
-    sub = dims // n_subspaces
-    qids = [int(i) for i in query_ids]
 
     # level 1: trained coarse centroids (kmeans_fit runs the corpus passes;
     # its output is K×dims rows — bounded)
@@ -2804,116 +2741,25 @@ def ivfpq_trained_ann_topk(
         [[by_c[c][d] for d in range(dims)] for c in c_ids], dtype=np.int64
     )
 
-    def cells_of(mat):
-        # argmin ||x−c||² == argmin(|c|² − 2x·c); ties → first (lower cid)
-        cn = (c_mat * c_mat).sum(1)
-        return (cn[None, :] - 2 * _gemm53(mat, c_mat.T)).argmin(axis=1)
-
-    # level 2: residual codebooks, Lloyd-refined on the n_train sample
-    t_rows = (
-        emb.orderBy(id_col).limit(max(n_train, n_codes)).select(id_col, vec_col).collect()
-    )
-    if len(t_rows) < n_codes:
-        raise ValueError(
-            f"ivfpq_trained_ann_topk needs >= n_codes = {n_codes} vectors "
-            f"to seed the residual codebooks; corpus has {len(t_rows)}"
-        )
-    t_order = np.argsort(np.array([r[id_col] for r in t_rows], dtype=np.int64), kind="stable")
-    tmat = _np_quantize(pd.Series([r[vec_col] for r in t_rows]))[t_order]
-    tres = tmat - c_mat[cells_of(tmat)]
-    cw = tres[:n_codes].copy()
-    for m in range(n_subspaces):
-        xs = tres[:n_train, m * sub : (m + 1) * sub]
-        cs = cw[:, m * sub : (m + 1) * sub].copy()
-        for _ in range(train_rounds):
-            d2 = (
-                (xs * xs).sum(1)[:, None]
-                + (cs * cs).sum(1)[None, :]
-                - 2 * _gemm53(xs, cs.T)
+    def build(seed_rows, q_rows, q_mat):
+        # level 2: residual codebooks, Lloyd-refined on the n_train sample
+        (t_rows,) = seed_rows
+        if len(t_rows) < n_codes:
+            raise ValueError(
+                f"ivfpq_trained_ann_topk needs >= n_codes = {n_codes} vectors "
+                f"to seed the residual codebooks; corpus has {len(t_rows)}"
             )
-            codes = np.argmin(d2, axis=1)
-            for c in range(cs.shape[0]):
-                members = xs[codes == c]
-                if len(members):
-                    cs[c] = np.floor_divide(members.sum(0), len(members))
-        cw[:, m * sub : (m + 1) * sub] = cs
+        tmat = _rows_matrix(t_rows)[1]
+        tres = tmat - c_mat[_cell_key(tmat, c_mat, True).argmin(axis=1)]
+        sub = dims // n_subspaces
+        cw = _pq_train(tres[:n_train], tres[:n_codes], n_subspaces, sub, train_rounds)
+        return _ivfpq_index(q_mat, c_mat, cw, n_probe, n_subspaces, sub, True)
 
-    # queries: probe cells by the same argmin-d2 rule; ADC tables per
-    # (query, probed cell) — driver-bounded |Q|·n_probe·M·C
-    q_rows = emb.where(F.col(id_col).isin(qids)).select(id_col, vec_col).collect()
-    q_ids = np.array([r[id_col] for r in q_rows], dtype=np.int64)
-    q_mat = _np_quantize(pd.Series([r[vec_col] for r in q_rows]))
-    cn = (c_mat * c_mat).sum(1)
-    qd2 = cn[None, :] - 2 * _gemm53(q_mat, c_mat.T)
-    probe_idx = np.argsort(qd2, axis=1, kind="stable")[:, :n_probe]
-    tables = np.empty((len(q_ids), probe_idx.shape[1], n_subspaces, n_codes), dtype=np.int64)
-    for qi in range(len(q_ids)):
-        for pi in range(probe_idx.shape[1]):
-            rq = q_mat[qi] - c_mat[probe_idx[qi, pi]]
-            for m in range(n_subspaces):
-                rm = rq[m * sub : (m + 1) * sub]
-                cm = cw[:, m * sub : (m + 1) * sub]
-                tables[qi, pi, m, :] = (rm * rm).sum() + (cm * cm).sum(1) - 2 * (cm @ rm)
-    bc = emb.sparkSession.sparkContext.broadcast((c_mat, cw, q_ids, probe_idx, tables))
-
-    def score(batches):
-        import pyarrow as pa
-
-        cmat, cwm, qids_np, pidx, tabs = bc.value
-        cnorm = (cmat * cmat).sum(1)
-        n_q, n_p = pidx.shape
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            ids = _i64_arrow(batch.column(0))
-            v = _quantize_arrow(batch.column(1))
-            cell = (cnorm[None, :] - 2 * _gemm53(v, cmat.T)).argmin(axis=1)
-            resid = v - cmat[cell]
-            codes = np.empty((len(ids), n_subspaces), dtype=np.int64)
-            for m in range(n_subspaces):
-                rs = resid[:, m * sub : (m + 1) * sub]
-                cs = cwm[:, m * sub : (m + 1) * sub]
-                d2 = (
-                    (rs * rs).sum(1)[:, None]
-                    + (cs * cs).sum(1)[None, :]
-                    - 2 * _gemm53(rs, cs.T)
-                )
-                codes[:, m] = np.argmin(d2, axis=1)
-            qout, nout, dout = [], [], []
-            for qi in range(n_q):
-                for pi in range(n_p):
-                    sel = np.nonzero((cell == pidx[qi, pi]) & (ids != qids_np[qi]))[0]
-                    if not sel.size:
-                        continue
-                    ad = np.zeros(sel.size, dtype=np.int64)
-                    for m in range(n_subspaces):
-                        ad += tabs[qi, pi, m, codes[sel, m]]
-                    qout.append(np.full(sel.size, qids_np[qi], dtype=np.int64))
-                    nout.append(ids[sel])
-                    dout.append(ad)
-            if not qout:
-                continue
-            qcol = np.concatenate(qout)
-            ncol = np.concatenate(nout)
-            dcol = np.concatenate(dout)
-            order = np.lexsort((ncol, dcol, qcol))
-            qcol, ncol, dcol = qcol[order], ncol[order], dcol[order]
-            starts = np.flatnonzero(np.r_[True, qcol[1:] != qcol[:-1]])
-            pos = np.arange(len(qcol)) - np.repeat(starts, np.diff(np.r_[starts, len(qcol)]))
-            topk = pos < k
-            yield pa.record_batch(
-                {"query_id": qcol[topk], "neighbor_id": ncol[topk], "adist": dcol[topk]}
-            )
-
-    scored = emb.select(id_col, vec_col).mapInArrow(
-        score, "query_id long, neighbor_id long, adist long"
+    return _ann_topk(
+        emb.select(id_col, vec_col), query_ids, _ivfpq_candidates, "adist", k,
+        seeds=[emb.orderBy(id_col).limit(max(n_train, n_codes)).select(id_col, vec_col)],
+        build=build,
     )
-    w = Window.partitionBy("query_id").orderBy(F.asc("adist"), F.asc("neighbor_id"))
-    out = scored.withColumn("rank", F.row_number().over(w).cast("int")).where(
-        F.col("rank") <= k
-    )
-    out._flockdb_caches = [bc]  # released by the caller (see ivfpq_ann_topk)
-    return out
 
 
 def ivfpq_trained_sql(
@@ -3117,6 +2963,21 @@ def _rot_pack(col: str, dims: int, r: int) -> str:
     )
 
 
+def _hamming_candidates(v, batch, q_mat, q_sk):
+    """Hamming distance of every (query, row) over the packed sketches in
+    the batch's third column: xor tensor (|Q|, n, R+1), vectorized popcount,
+    then the multi-table OR-amplification — a candidate ranks by its BEST
+    sketch (min Hamming over rotations), so close pairs only need to look
+    close under ONE hyperplane family."""
+    import numpy as np
+
+    n = batch.num_rows
+    sk = batch.column(2).values.to_numpy(zero_copy_only=False).reshape(n, -1)
+    x = np.bitwise_xor(q_sk[:, None, :], sk[None, :, :])
+    bits = np.unpackbits(x.view(np.uint8), axis=2).reshape(*x.shape, 64)
+    return _all_pairs(bits.sum(axis=3).min(axis=2).astype(np.int64))
+
+
 def binary_ann_topk(
     emb: DataFrame,
     query_ids: list[int],
@@ -3138,11 +2999,11 @@ def binary_ann_topk(
 
     Scale shape (100 TB): the sketch build is PURE JVM expressions over
     the corpus scan (zip_with/aggregate — zero Python at ingest, the
-    x119 rule); the candidate scan streams (id, sketch) = 16 bytes/row
-    through an Arrow popcount with per-batch local top-k_cand, so the
-    shuffle after it carries ≤ k_cand·partitions rows per query; the
-    rerank joins the driver-tiny candidate list back to the vector table
-    broadcast-style (the only full-width vector reads are the winners).
+    x119 rule); the candidate scan streams each row's sketches through an
+    Arrow popcount with per-batch local top-k_cand, so the shuffle after
+    it carries ≤ k_cand·partitions rows per query; the exact dot of those
+    local winners is computed in the same pass (:func:`_ann_topk`'s
+    rerank) — no second corpus gather, no join.
 
     ``rotations=R`` adds R extra sketches per vector from the 45° axis-pair
     diagonal hyperplanes (see :func:`_rot_pack`) — the classic SimHash
@@ -3155,104 +3016,22 @@ def binary_ann_topk(
     Output: (query_id, neighbor_id, dot_micro2, rank) — the exact-dot
     contract shared by brute_force_topk / pq_rerank_topk."""
     import numpy as np
-    from pyspark.sql import Window
 
     qids = [int(i) for i in query_ids]
-    n_sk = rotations + 1
-    packs = [_rot_pack("_ev", dims, r) for r in range(n_sk)]
-    skd = emb.select(
-        F.col(id_col).alias("vid"), quantized(vec_col).alias("_ev")
-    ).select("vid", "_ev", F.expr(f"array({', '.join(packs)})").alias("sks"))
-
-    # ONE query-side job: collect sketches AND quantized vectors together —
-    # the exact rerank then happens INSIDE the sketch pass (below) against
-    # these broadcast query vectors, so there is no second corpus pass, no
-    # gather join and no broadcast build at all (r11; guide §2.4/§8)
-    q_rows = (
-        emb.where(F.col(id_col).isin(qids))
-        .select(F.col(id_col).alias("vid"), quantized(vec_col).alias("_ev"))
-        .select("vid", "_ev", F.expr(f"array({', '.join(packs)})").alias("sks"))
-        .collect()
+    packs = ", ".join(_rot_pack("_ev", dims, r) for r in range(rotations + 1))
+    scan = emb.select(id_col, vec_col, quantized(vec_col).alias("_ev")).select(
+        id_col, vec_col, F.expr(f"array({packs})").alias("sks")
     )
-    if len(q_rows) != len(qids):
-        raise ValueError(
-            f"binary_ann_topk: {len(qids) - len(q_rows)} query ids missing "
-            f"from the corpus (need every query in {id_col})"
-        )
-    q_ids = np.array([r["vid"] for r in q_rows], dtype=np.int64)
-    q_sk = np.array([r["sks"] for r in q_rows], dtype=np.int64)  # (|Q|, n_sk)
-    q_ev = np.array([r["_ev"] for r in q_rows], dtype=np.int64)  # (|Q|, dims)
-    bc = emb.sparkSession.sparkContext.broadcast((q_ids, q_sk, q_ev))
 
-    def ham(batches):
-        import pyarrow as pa
+    def build(seed_rows, q_rows, q_mat):
+        if len(q_rows) != len(qids):
+            raise ValueError(
+                f"binary_ann_topk: {len(qids) - len(q_rows)} query ids missing "
+                f"from the corpus (need every query in {id_col})"
+            )
+        return np.array([r[2] for r in q_rows], dtype=np.int64).reshape(len(qids), rotations + 1)
 
-        qi, qs, qe = bc.value
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            ids = _i64_arrow(batch.column(0))
-            ev = (
-                batch.column(1)
-                .values.to_numpy(zero_copy_only=False)
-                .reshape(len(ids), -1)
-                .astype(np.int64)
-            )
-            # fixed-length list<int64> → (n, n_sk) without a Python loop
-            sk = (
-                batch.column(2)
-                .values.to_numpy(zero_copy_only=False)
-                .reshape(len(ids), n_sk)
-            )
-            # xor tensor (n, |Q|, n_sk), vectorized popcount, then the
-            # multi-table OR-amplification: a candidate ranks by its BEST
-            # sketch (min Hamming over rotations) — close pairs only need
-            # to look close under ONE hyperplane family
-            x = np.bitwise_xor(sk[:, None, :], qs[None, :, :])
-            h = (
-                np.unpackbits(x.view(np.uint8).reshape(len(ids), -1), axis=1)
-                .reshape(len(ids), len(qi), n_sk, 64)
-                .sum(axis=3)
-                .min(axis=2)
-                .astype(np.int64)
-            )
-            qout, nout, hout, dout = [], [], [], []
-            for j in range(len(qi)):
-                sel = np.nonzero(ids != qi[j])[0]
-                top = sel[np.lexsort((ids[sel], h[sel, j]))[:k_cand]]
-                qout.append(np.full(len(top), qi[j], dtype=np.int64))
-                nout.append(ids[top])
-                hout.append(h[top, j])
-                # exact integer dot for the LOCAL candidates only (≤ k_cand
-                # rows per query per batch) — the rerank rides the sketch
-                # pass instead of a second corpus gather
-                dout.append(_gemm53(ev[top], qe[j][:, None]).reshape(-1))
-            yield pa.record_batch(
-                {
-                    "query_id": np.concatenate(qout),
-                    "neighbor_id": np.concatenate(nout),
-                    "hamming": np.concatenate(hout),
-                    "dot_micro2": np.concatenate(dout),
-                }
-            )
-
-    scored = skd.mapInArrow(
-        ham, "query_id long, neighbor_id long, hamming long, dot_micro2 long"
-    )
-    # global candidate cut by (hamming, neighbor_id), then the exact-dot
-    # ranking among the survivors — two windows over the SAME query_id
-    # partitioning: one exchange for the whole query (guide §2.4)
-    wc = Window.partitionBy("query_id").orderBy(F.asc("hamming"), F.asc("neighbor_id"))
-    w = Window.partitionBy("query_id").orderBy(F.desc("dot_micro2"), F.asc("neighbor_id"))
-    out = (
-        scored.withColumn("crn", F.row_number().over(wc))
-        .where(F.col("crn") <= k_cand)
-        .select("query_id", "neighbor_id", "dot_micro2")
-        .withColumn("rank", F.row_number().over(w).cast("int"))
-        .where(F.col("rank") <= k)
-    )
-    out._flockdb_caches = [bc]  # the release convention (see ivfpq_ann_topk)
-    return out
+    return _ann_topk(scan, qids, _hamming_candidates, "hamming", k, rerank=k_cand, build=build)
 
 
 def binary_ann_sql(

@@ -331,36 +331,6 @@ def corpus_datasheet(docs: DataFrame) -> DataFrame:
     )
 
 
-def corpus_datasheet_sql(table: str = "documents") -> str:
-    """DuckDB twin of :func:`corpus_datasheet`."""
-    return f"""
-WITH base AS (
-  SELECT source, lang, length(string_split(text, ' ')) AS n_tok, text
-  FROM {table}
-),
-pl AS (
-  SELECT source, lang, count(*) AS n_docs, sum(n_tok) AS n_tokens
-  FROM base GROUP BY source, lang
-),
-ps AS (
-  SELECT source, CAST(sum(n_docs) AS BIGINT) AS n_docs,
-         CAST(sum(n_tokens) AS BIGINT) AS total_tokens,
-         CAST(count(*) AS BIGINT) AS n_langs,
-         min(struct_pack(neg := -n_docs, lang := lang)).lang AS top_lang
-  FROM pl GROUP BY source
-),
-dt AS (
-  SELECT source, CAST(count(DISTINCT text) AS BIGINT) AS distinct_texts
-  FROM base GROUP BY source
-)
-SELECT ps.source, n_docs, total_tokens, distinct_texts,
-       (n_docs - distinct_texts) * 1000 // n_docs AS dup_per_mille,
-       total_tokens // n_docs AS mean_tokens,
-       n_langs, top_lang
-FROM ps JOIN dt ON ps.source = dt.source
-"""
-
-
 def vocab_drift(
     docs_a: DataFrame,
     docs_b: DataFrame,

@@ -3072,6 +3072,77 @@ def test_binary_ann_rotations_amplify(spark):
     assert row["diag_pack"] == -1  # all 64 bits set (two's complement)
 
 
+_ANN_OPS = {
+    "brute": lambda emb, q: similarity.brute_force_topk(emb, q, k=10),
+    "int8": lambda emb, q: similarity.int8_ann_topk(emb, q, k=10),
+    "ivf": lambda emb, q: similarity.ivf_ann_topk(emb, q, k=10),
+    "lsh": lambda emb, q: similarity.lsh_ann_topk(emb, q, k=10, planes=4, n_tables=8),
+    "pq": lambda emb, q: similarity.pq_ann_topk(emb, q, k=10),
+    "pq_rerank": lambda emb, q: similarity.pq_rerank_topk(emb, q, k=5, candidates=20),
+    "ivfpq": lambda emb, q: similarity.ivfpq_ann_topk(emb, q, k=10),
+    "ivfpq_trained": lambda emb, q: similarity.ivfpq_trained_ann_topk(emb, q, k=10),
+    "binary": lambda emb, q: similarity.binary_ann_topk(emb, q, k=10, k_cand=30),
+}
+
+
+@pytest.mark.parametrize("op", [o for o in _ANN_OPS if o != "binary"])
+def test_ann_topk_absent_query_ids_return_no_rows(spark, op):
+    """A query set with no id in the corpus returns 0 rows — as every SQL
+    twin does — instead of crashing on an empty query matrix (binary_ann_topk
+    instead rejects absent ids with a ValueError)."""
+    from conftest import SF_DIR
+    from flockdb_spark.sources.edges import _read
+
+    emb = _read(spark, SF_DIR, "embeddings")
+    assert _ANN_OPS[op](emb, [10**9]).collect() == []
+
+
+@pytest.mark.parametrize(
+    "op", [similarity.ivf_ann_topk, similarity.ivfpq_ann_topk, similarity.ivfpq_trained_ann_topk]
+)
+def test_ivf_n_probe_clamps_to_cell_count(spark, op):
+    """``n_probe`` above the cell count probes every cell: the same rows as
+    ``n_probe == n_centroids``."""
+    from conftest import SF_DIR
+    from flockdb_spark.sources.edges import _read
+
+    emb = _read(spark, SF_DIR, "embeddings")
+    rows = [
+        sorted(map(tuple, op(emb, [0, 1, 2], k=10, n_centroids=4, n_probe=p).collect()))
+        for p in (4, 8)
+    ]
+    assert rows[0] == rows[1] and len(rows[0]) == 30
+
+
+def test_arrow_pass_operators_exact_across_batch_boundaries(spark):
+    """Each mapInArrow operator keeps only a per-batch LOCAL top-k; the
+    global rank over the survivors must equal the default-batch result when
+    every Arrow batch holds just 7 rows (fewer than k)."""
+    from conftest import SF_DIR
+    from flockdb_spark.sources.edges import _read
+
+    emb = _read(spark, SF_DIR, "embeddings")
+    qids = [0, 1, 2, 7, 42]
+    ops = ["brute", "int8", "pq", "pq_rerank", "ivfpq", "ivfpq_trained", "binary"]
+
+    def run_all():
+        return {op: sorted(map(tuple, _ANN_OPS[op](emb, qids).collect())) for op in ops}
+
+    base = run_all()
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key, None)
+    spark.conf.set(key, "7")
+    try:
+        small = run_all()
+    finally:
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)
+    for op in ops:
+        assert small[op] == base[op] and base[op], op
+
+
 def test_semantic_dedup_auto_k_and_gemm_path(spark):
     """VERDICT r10 item 4: K auto-scales with the corpus (expected cell
     population bounded at cell_budget, so within-cell pair work stays
