@@ -4,10 +4,17 @@ difference — arbitrary binary trees (``queries/Query.scala:40-72``).
 The reference evaluates these PULL-based and paged: internal nodes loop,
 fetching pages from the smaller child and probing the larger with
 ``selectWhereIn`` semi-joins (``queries/IntersectionQuery.scala:23-76``).
-Spark-first that whole machinery collapses into a Catalyst plan: each node is a
-DataFrame transformation, the optimizer picks hash-semi/anti joins, broadcasts
-small sides, and AQE re-plans at runtime (which subsumes the reference's
-"drive from the smaller side" rule, ``queries/Query.scala:51-66``).
+Spark-first, every compound read in the engine — one tree's ``ids()``,
+select2's N-program batch, the pair-batch operators (``batch.py``) — runs on
+ONE evaluator, :func:`flat_flags`: a coarse-filtered edge scan tags each row
+with the leaves it satisfies, one hash aggregation builds per-(tree, id)
+membership flags, and each tree becomes a boolean over its flags.  The leaf
+filter is written once, :meth:`Term.predicate`.
+
+Trees with a broadcast-sized IN-list leaf keep the join composition in
+``Intersection/Union/Difference.ids``: each node a DataFrame semi/anti join
+or union, Catalyst picking hash joins and broadcasting small sides.  That
+composition is also the reference the property tests hold the evaluator to.
 
 Canonical result of any node: a one-column DataFrame ``id`` — the neighbor ids
 from the term's point of view, the same id-set the reference's set ops return.
@@ -16,9 +23,11 @@ from the term's point of view, the same id-set the reference's set ops return.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+import functools
+import operator
+from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..graph import EdgeStore
@@ -51,11 +60,16 @@ class Term:
     def vertex_col(self) -> str:
         return "source_id" if self.forward else "destination_id"
 
-    def edges(self, store: EdgeStore) -> DataFrame:
-        return store.graph(self.graph_id).where(
-            (F.col(self.vertex_col) == self.source_id)
+    def predicate(self) -> Column:
+        """The leaf filter over the edge table — every leaf scan uses it."""
+        return (
+            (F.col("graph_id") == self.graph_id)
+            & (F.col(self.vertex_col) == self.source_id)
             & F.col("state").isin(list(self.states))
         )
+
+    def edges(self, store: EdgeStore) -> DataFrame:
+        return store.edges.where(self.predicate())
 
 
 class QueryNode:
@@ -93,23 +107,22 @@ class WhereIn(QueryNode):
     in_ids: tuple[int, ...]
 
     def ids(self, store: EdgeStore) -> DataFrame:
-        base = self.term.edges(store)
-        idc = F.col(self.term.id_col)
         if len(self.in_ids) <= INLINE_IN_LIST_MAX:
             # small list: stays a pushed-down IN filter at the scan
-            out = base.where(idc.isin(list(self.in_ids)))
+            out = self.edges(store)
         else:
             # large list: broadcast semi-join (SqlShard's >50-id class)
             ids_df = local_df(
                 store.spark, [(int(i),) for i in self.in_ids], f"{self.term.id_col} long"
             )
-            out = base.join(F.broadcast(ids_df), on=self.term.id_col, how="left_semi")
-        return out.select(idc.alias("id"))
+            out = self.term.edges(store).join(
+                F.broadcast(ids_df), on=self.term.id_col, how="left_semi"
+            )
+        return out.select(F.col(self.term.id_col).alias("id"))
 
     def edges(self, store: EdgeStore) -> DataFrame:
         """intersectEdges (R10, ``shards/SqlShard.scala:337-349``)."""
-        base = self.term.edges(store)
-        return base.where(F.col(self.term.id_col).isin(list(self.in_ids)))
+        return store.edges.where(_leaf_predicate(self.term, self.in_ids))
 
 
 @dataclass(frozen=True)
@@ -168,7 +181,7 @@ class Difference(QueryNode):
 
 
 # ---------------------------------------------------------------------------
-# Flat compound evaluation — arbitrary set-op trees as ONE scan + ONE shuffle
+# The one evaluator — N set-op trees as ONE tagged scan + ONE shuffle
 # ---------------------------------------------------------------------------
 
 def _flat_leaves(node: QueryNode) -> list | None:
@@ -188,70 +201,95 @@ def _flat_leaves(node: QueryNode) -> list | None:
     return None
 
 
-def flat_ids(node: QueryNode, store: EdgeStore) -> DataFrame | None:
-    """Evaluate a whole compound tree in one pass, or None if not flattenable.
+def _leaf_predicate(term: Term, in_ids: tuple[int, ...] | None) -> Column:
+    """A Simple (``in_ids=None``) or WhereIn leaf as one row filter."""
+    p = term.predicate()
+    return p if in_ids is None else p & F.col(term.id_col).isin([int(i) for i in in_ids])
+
+
+def _tagged_scan(store: EdgeStore, tags: list[tuple[Column, Column]], *cols) -> DataFrame:
+    """ONE coarse-filtered edge scan (the OR of every predicate) that emits
+    each row once per ``(predicate, tag)`` it satisfies — a row can serve
+    several leaves or queries.  Output: ``cols`` plus the tag as ``_tag``."""
+    coarse = functools.reduce(operator.or_, (p for p, _ in tags))
+    return (
+        store.edges.where(coarse)
+        .select(*cols, F.explode(F.array(*[F.when(p, t) for p, t in tags])).alias("_tag"))
+        .where(F.col("_tag").isNotNull())
+    )
+
+
+def _flag_expr(node: QueryNode, flags) -> Column:
+    """The tree as a boolean over its leaves' flag columns, consuming flag
+    indexes in the same leftmost-first order as :func:`_flat_leaves`."""
+    if isinstance(node, (Simple, WhereIn)):
+        return F.col(f"f{next(flags)}") == 1
+    left, right = _flag_expr(node.left, flags), _flag_expr(node.right, flags)
+    if isinstance(node, Intersection):
+        return left & right
+    if isinstance(node, Union):
+        return left | right
+    return left & ~right
+
+
+def flat_flags(store: EdgeStore, trees: list[QueryNode]) -> DataFrame | None:
+    """(qix, id): the ids each ``trees[qix]`` selects, for N compound trees
+    in ONE pass — or None if any tree is not flattenable (a leaf root, or a
+    broadcast-sized IN-list leaf).
 
     The reference evaluates compound trees by recursive paged set-ops — N
     leaves mean N index lookups and up to N-1 merge loops
-    (``queries/IntersectionQuery.scala:23-76``).  The join composition below
-    mirrors that shape (one scan branch + one shuffle per node); this
-    evaluator instead tags each edge row with every leaf it satisfies (an
-    explode over per-leaf membership structs — pure map side), aggregates
-    per-id membership FLAGS in one shuffle, and applies the tree as a boolean
-    expression over the flags:
+    (``queries/IntersectionQuery.scala:23-76``).  The join composition in
+    ``Intersection/Union/Difference.ids`` mirrors that shape (one scan branch
+    + one shuffle per node); this evaluator instead tags each edge row with
+    every leaf of every tree it satisfies (an explode over per-leaf
+    ``(qix, leaf, id)`` structs — pure map side), aggregates per-(qix, id)
+    membership FLAGS in one shuffle, and applies each tree as a boolean over
+    its own flags:
 
         A ∩ B → fA & fB      A ∪ B → fA | fB      A − B → fA & ~fB
 
-    One table scan, one broadcast-free shuffle, any tree depth, any mix of
-    directions/graphs/state filters.  At 100 TB this is the difference
-    between 2·depth table passes and one.  q13's two 3-leaf trees drop from
-    19 exchanges to 2.
+    One table scan, one broadcast-free shuffle, any number of trees, any
+    depth, any mix of directions/graphs/state filters.  q13's two 3-leaf
+    trees drop from 19 exchanges to 2; a select2 batch of N programs is one
+    scan instead of N.
     """
-    leaves = _flat_leaves(node)
-    if leaves is None or not isinstance(node, (Intersection, Union, Difference)):
+    flat = [_flat_leaves(t) for t in trees]
+    if any(
+        leaves is None or isinstance(tree, (Simple, WhereIn))
+        for tree, leaves in zip(trees, flat)
+    ):
         return None
-    preds, entries = [], []
-    for i, leaf in enumerate(leaves):
-        t = leaf.term
-        p = (
-            (F.col("graph_id") == t.graph_id)
-            & (F.col(t.vertex_col) == t.source_id)
-            & F.col("state").isin(list(t.states))
-        )
-        if isinstance(leaf, WhereIn):
-            p = p & F.col(t.id_col).isin(list(leaf.in_ids))
-        preds.append(p)
-        entries.append(
-            F.when(
-                p, F.struct(F.lit(i).alias("leaf"), F.col(t.id_col).alias("id"))
+    if not trees:
+        return local_df(store.spark, [], "qix int, id long")
+    tags, keep, base = [], F.lit(False), 0
+    for qix, (tree, leaves) in enumerate(zip(trees, flat)):
+        for j, leaf in enumerate(leaves):
+            t = leaf.term
+            tag = F.struct(
+                F.lit(qix).alias("qix"), F.lit(base + j).alias("leaf"), F.col(t.id_col).alias("id")
             )
+            in_ids = leaf.in_ids if isinstance(leaf, WhereIn) else None
+            tags.append((_leaf_predicate(t, in_ids), tag))
+        flags = iter(range(base, base + len(leaves)))
+        keep = keep | ((F.col("qix") == qix) & _flag_expr(tree, flags))
+        base += len(leaves)
+    return (
+        _tagged_scan(store, tags)
+        .select("_tag.qix", "_tag.leaf", "_tag.id")
+        .groupBy("qix", "id")
+        .agg(
+            *[
+                F.max(F.when(F.col("leaf") == i, 1).otherwise(0)).alias(f"f{i}")
+                for i in range(base)
+            ]
         )
-    coarse = preds[0]
-    for p in preds[1:]:
-        coarse = coarse | p
-    tagged = (
-        store.edges.where(coarse)
-        .select(F.explode(F.array(*entries)).alias("e"))
-        .where(F.col("e").isNotNull())
-        .select(F.col("e.leaf").alias("leaf"), F.col("e.id").alias("id"))
+        .where(keep)
+        .select("qix", "id")
     )
-    flags = tagged.groupBy("id").agg(
-        *[
-            F.max(F.when(F.col("leaf") == i, 1).otherwise(0)).alias(f"f{i}")
-            for i in range(len(leaves))
-        ]
-    )
-    # rebuild the boolean over flags walking the SAME leftmost-first order
-    counter = iter(range(len(leaves)))
 
-    def expr(n: QueryNode):
-        if isinstance(n, (Simple, WhereIn)):
-            return F.col(f"f{next(counter)}") == 1
-        left, right = expr(n.left), expr(n.right)
-        if isinstance(n, Intersection):
-            return left & right
-        if isinstance(n, Union):
-            return left | right
-        return left & ~right
 
-    return flags.where(expr(node)).select("id")
+def flat_ids(node: QueryNode, store: EdgeStore) -> DataFrame | None:
+    """One tree's ids through :func:`flat_flags`, or None if not flattenable."""
+    flags = flat_flags(store, [node])
+    return None if flags is None else flags.select("id")

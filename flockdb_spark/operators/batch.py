@@ -1,20 +1,20 @@
-"""Batched multi-query set-op evaluation — the Spark-first shape of the
-reference's ``select2`` multi-query batch (R18, ``EdgesService.scala:86-100``).
+"""Batched reads — the Spark-first shape of the reference's multi-query
+calls: ``select2`` (R18, ``EdgesService.scala:86-100``) and ``selectEdges``
+(``Flockdb.thrift:158-160``), which the reference answers by running N
+independent paged evaluations.
 
-The reference answers N compound queries by running N independent paged
-evaluations in parallel.  On Spark, N small set-ops over the same edge table
-should be ONE plan — and one PASS: the pair list is unpivoted into a
-(source → pair, side) role table, broadcast into a single edge scan, and
-every pair's membership flags come out of one hash aggregation.  All three
-set operations are then filters over the same flags frame:
+Every compound batch here is :func:`algebra.flat_flags` — ONE tagged edge
+scan + ONE flags aggregation for all N set-op trees — plus a thin shell:
 
-    intersection  =  has-A AND has-B
-    union         =  any row (the group key set IS the union)
-    difference    =  has-A AND NOT has-B
+- :func:`batch_flat_pages` pages each tree with a per-``qix`` window;
+- the pair family (``batch_intersection`` / ``batch_union`` /
+  ``batch_difference`` / ``batch_select2``) turns each ``(op, a, b)``
+  program into a two-leaf tree and labels the output from a broadcast
+  ``(qix, op, a, b)`` table.
 
-One table scan + one broadcast join + one shuffle for any number of pairs
-and any of the three ops — at 100 TB this is the difference between 2N scans
-(reference), 2 scans (two tagged sides semi-joined), and 1.
+:func:`batch_edge_pages` is the full-edge-row twin: the same tagged scan,
+tagged by query index instead of leaf, paged per query.  At 100 TB this is
+the difference between 2N scans (reference) and 1.
 """
 
 from __future__ import annotations
@@ -31,64 +31,64 @@ from .algebra import (
     Simple,
     Term,
     Union,
-    WhereIn,
-    _flat_leaves,
+    _leaf_predicate,
+    _tagged_scan,
+    flat_flags,
 )
 
+_SET_OPS = {"intersection": Intersection, "union": Union, "difference": Difference}
 
-def _pair_flags(
-    store: EdgeStore, graph_id: int, pairs: list[tuple[int, int]], states: tuple[int, ...]
-) -> DataFrame:
-    """(a, b, id, ha, hb): for each pair and destination id, whether it is
-    reachable from the pair's A side / B side.  Grouping key (a, b, id) is
-    already distinct — downstream ops are pure filters, no extra shuffle."""
-    ed = (
-        store.graph(graph_id)
-        .where(F.col("state").isin(list(states)))
-        .select("source_id", F.col("destination_id").alias("id"))
-    )
-    roles = local_df(
+
+def _pair_programs(
+    store: EdgeStore,
+    graph_id: int,
+    programs: list[tuple[str, int, int]],
+    states: tuple[int, ...],
+) -> tuple[list[QueryNode], DataFrame]:
+    """Each ``(op, a, b)`` program as the two-leaf tree ``op(a, b)`` over
+    forward terms, plus the ``(qix, op, a, b)`` table that labels its rows."""
+    trees = [
+        _SET_OPS[op](
+            Simple(Term(graph_id, a, True, states)), Simple(Term(graph_id, b, True, states))
+        )
+        for op, a, b in programs
+    ]
+    labels = local_df(
         store.spark,
-        [(int(a), int(a), int(b), 0) for a, b in pairs]
-        + [(int(b), int(a), int(b), 1) for a, b in pairs],
-        "src long, a long, b long, side int",
+        [(i, op, int(a), int(b)) for i, (op, a, b) in enumerate(programs)],
+        "qix int, op string, a long, b long",
     )
-    tagged = ed.join(F.broadcast(roles), ed.source_id == F.col("src")).select(
-        "a", "b", "id", "side"
-    )
-    return tagged.groupBy("a", "b", "id").agg(
-        F.max(F.when(F.col("side") == 0, 1).otherwise(0)).alias("ha"),
-        F.max(F.when(F.col("side") == 1, 1).otherwise(0)).alias("hb"),
-    )
+    return trees, labels
+
+
+def _pair_batch(
+    store: EdgeStore, graph_id: int, op: str, pairs: list[tuple[int, int]], states: tuple[int, ...]
+) -> DataFrame:
+    """(a, b, id) for ``op`` over every distinct pair — one scan + one shuffle."""
+    programs = [(op, a, b) for a, b in dict.fromkeys((a, b) for a, b in pairs)]
+    trees, labels = _pair_programs(store, graph_id, programs, states)
+    return flat_flags(store, trees).join(F.broadcast(labels), "qix").select("a", "b", "id")
 
 
 def batch_intersection(
     store: EdgeStore, graph_id: int, pairs: list[tuple[int, int]], states: tuple[int, ...] = (0,)
 ) -> DataFrame:
     """(a, b, id) for every pair's A ∩ B — one scan + one shuffle for all pairs."""
-    return (
-        _pair_flags(store, graph_id, pairs, states)
-        .where("ha = 1 AND hb = 1")
-        .select("a", "b", "id")
-    )
+    return _pair_batch(store, graph_id, "intersection", pairs, states)
 
 
 def batch_union(
     store: EdgeStore, graph_id: int, pairs: list[tuple[int, int]], states: tuple[int, ...] = (0,)
 ) -> DataFrame:
-    """(a, b, id) for every pair's A ∪ B (dedup by the aggregation key)."""
-    return _pair_flags(store, graph_id, pairs, states).select("a", "b", "id")
+    """(a, b, id) for every pair's A ∪ B."""
+    return _pair_batch(store, graph_id, "union", pairs, states)
 
 
 def batch_difference(
     store: EdgeStore, graph_id: int, pairs: list[tuple[int, int]], states: tuple[int, ...] = (0,)
 ) -> DataFrame:
     """(a, b, id) for every pair's A − B."""
-    return (
-        _pair_flags(store, graph_id, pairs, states)
-        .where("ha = 1 AND hb = 0")
-        .select("a", "b", "id")
-    )
+    return _pair_batch(store, graph_id, "difference", pairs, states)
 
 
 def batch_select2(
@@ -100,9 +100,7 @@ def batch_select2(
 ) -> DataFrame:
     """The full select2 batch (R18, ``EdgesService.scala:86-100``): N compound
     paged queries — here ``programs`` of mixed op kinds over (a, b) pairs —
-    answered in ONE pass.  Every program's membership flags come from the same
-    scan + aggregation; the op kind is a per-program filter and the page is a
-    per-program window, both over that one flags frame.
+    answered in ONE pass through :func:`batch_flat_pages`.
 
     Returns (qix, op, a, b, id): each program's Cursor.Start page — the
     first ``page_count`` ids in the reference's page order, descending
@@ -110,33 +108,14 @@ def batch_select2(
     backward, Cursor.Start = -1; ``queries/WhereInQuery.scala`` likewise
     ORDER BY destination_id DESC).
     """
-    ops = {"intersection", "union", "difference"}
-    bad = [p for p in programs if p[0] not in ops]
+    bad = [p for p in programs if p[0] not in _SET_OPS]
     if bad:
-        raise ValueError(f"unknown select2 ops: {bad}; expected one of {sorted(ops)}")
-    # programs may share an (a, b) pair; dedupe so _pair_flags's broadcast
-    # role table carries each role once (duplicates multiply the join output)
-    pairs = list(dict.fromkeys((a, b) for _, a, b in programs))
-    flags = _pair_flags(store, graph_id, pairs, states)
-    prog = local_df(
-        store.spark,
-        [(i, op, int(a), int(b)) for i, (op, a, b) in enumerate(programs)],
-        "qix int, op string, a long, b long",
-    )
-    # one program per (qix): broadcast the tiny program table onto the flags
-    # frame, keep rows the program's op selects, page with a per-program
-    # window.  The window repartitions by qix — N·page_count candidate rows
-    # at most after AQE, never the edge table.
-    tagged = flags.join(F.broadcast(prog), ["a", "b"])
-    selected = tagged.where(
-        (F.col("op") == "union")
-        | ((F.col("op") == "intersection") & (F.col("ha") == 1) & (F.col("hb") == 1))
-        | ((F.col("op") == "difference") & (F.col("ha") == 1) & (F.col("hb") == 0))
-    )
-    w = Window.partitionBy("qix").orderBy(F.desc("id"))
+        raise ValueError(f"unknown select2 ops: {bad}; expected one of {sorted(_SET_OPS)}")
+    trees, labels = _pair_programs(store, graph_id, programs, states)
     return (
-        selected.withColumn("rn", F.row_number().over(w))
+        batch_flat_pages(store, [(t, page_count) for t in trees])
         .where(F.col("rn") <= page_count)
+        .join(F.broadcast(labels), "qix")
         .select("qix", "op", "a", "b", "id")
     )
 
@@ -162,24 +141,11 @@ def batch_edge_pages(
     is the caller's has-more probe (``SqlShard.scala:263-278``'s same-round-
     trip trick).  At 100 TB this is one pruned scan + one N·page-sized
     shuffle for any number of queries, vs N scans in the reference."""
-    preds = []
-    for term, dest_ids, _count in queries:
-        p = (
-            (F.col("graph_id") == term.graph_id)
-            & (F.col(term.vertex_col) == term.source_id)
-            & F.col("state").isin(list(term.states))
-        )
-        if dest_ids is not None:
-            p = p & F.col(term.id_col).isin([int(d) for d in dest_ids])
-        preds.append(p)
-    coarse = preds[0]
-    for p in preds[1:]:
-        coarse = coarse | p
-    tagged = (
-        store.edges.where(coarse)
-        .withColumn("qix", F.explode(F.array(*[F.when(p, F.lit(i)) for i, p in enumerate(preds)])))
-        .where(F.col("qix").isNotNull())
-    )
+    tags = [
+        (_leaf_predicate(term, dest_ids), F.lit(i))
+        for i, (term, dest_ids, _count) in enumerate(queries)
+    ]
+    tagged = _tagged_scan(store, tags, "*").withColumnRenamed("_tag", "qix")
     spec = local_df(
         store.spark,
         [
@@ -206,14 +172,12 @@ def batch_flat_pages(
 ) -> DataFrame | None:
     """N compound queries' Cursor.Start pages from ONE edge scan.
 
-    The general form of :func:`batch_select2` — each program is any
-    flattenable set-op tree (``algebra._flat_leaves``: Simple / inline
-    WhereIn leaves, any mix of graphs, directions, state filters, any
-    depth).  Every leaf across every program becomes one membership tag in
-    a single coarse-filtered scan; per-(program, id) flags come out of one
-    hash aggregation; each program's tree is a boolean over its own flags;
-    pages are per-program windows in the reference's Start-page order
-    (destination id DESC, ``SqlShard.select``'s default direction).
+    Each program is ``(tree, page_count)`` with any flattenable set-op tree
+    (Simple / inline WhereIn leaves, any mix of graphs, directions, state
+    filters, any depth).  :func:`algebra.flat_flags` selects every tree's ids
+    in one scan + one shuffle; pages are per-program windows in the
+    reference's Start-page order (destination id DESC, ``SqlShard.select``'s
+    default direction).
 
     Returns (qix, id, rn) with ``rn`` ≤ page_count+1 — the +1 row is the
     caller's has-more probe (same trick as ``SqlShard.scala:263-278``), or
@@ -224,70 +188,9 @@ def batch_flat_pages(
     (``Flockdb.thrift:151-152`` takes the whole query list): N compound
     queries are one scan + one shuffle instead of N× both.
     """
-    flat = [_flat_leaves(tree) for tree, _ in programs]
-    if any(
-        leaves is None or not isinstance(tree, (Intersection, Union, Difference))
-        for leaves, (tree, _) in zip(flat, programs)
-    ):
+    flags = flat_flags(store, [tree for tree, _ in programs])
+    if flags is None:
         return None
-
-    preds, entries, base = [], [], 0
-    starts: list[int] = []
-    for qix, leaves in enumerate(flat):
-        starts.append(base)
-        for j, leaf in enumerate(leaves):
-            t = leaf.term
-            p = (
-                (F.col("graph_id") == t.graph_id)
-                & (F.col(t.vertex_col) == t.source_id)
-                & F.col("state").isin(list(t.states))
-            )
-            if isinstance(leaf, WhereIn):
-                p = p & F.col(t.id_col).isin(list(leaf.in_ids))
-            preds.append(p)
-            entries.append(
-                F.when(
-                    p,
-                    F.struct(
-                        F.lit(qix).alias("qix"),
-                        F.lit(base + j).alias("leaf"),
-                        F.col(t.id_col).alias("id"),
-                    ),
-                )
-            )
-        base += len(leaves)
-
-    coarse = preds[0]
-    for p in preds[1:]:
-        coarse = coarse | p
-    tagged = (
-        store.edges.where(coarse)
-        .select(F.explode(F.array(*entries)).alias("e"))
-        .where(F.col("e").isNotNull())
-        .select("e.qix", "e.leaf", "e.id")
-    )
-    nleaves = base
-    flags = tagged.groupBy("qix", "id").agg(
-        *[
-            F.max(F.when(F.col("leaf") == i, 1).otherwise(0)).alias(f"f{i}")
-            for i in range(nleaves)
-        ]
-    )
-
-    def expr(n: QueryNode, counter) -> "F.Column":
-        if isinstance(n, (Simple, WhereIn)):
-            return F.col(f"f{next(counter)}") == 1
-        left, right = expr(n.left, counter), expr(n.right, counter)
-        if isinstance(n, Intersection):
-            return left & right
-        if isinstance(n, Union):
-            return left | right
-        return left & ~right
-
-    keep = F.lit(False)
-    for qix, (tree, _) in enumerate(programs):
-        keep = keep | ((F.col("qix") == qix) & expr(tree, iter(range(starts[qix], base))))
-
     limits = local_df(
         store.spark,
         [(qix, int(count)) for qix, (_, count) in enumerate(programs)],
@@ -295,8 +198,7 @@ def batch_flat_pages(
     )
     w = Window.partitionBy("qix").orderBy(F.desc("id"))
     return (
-        flags.where(keep)
-        .withColumn("rn", F.row_number().over(w))
+        flags.withColumn("rn", F.row_number().over(w))
         .join(F.broadcast(limits), "qix")
         .where(F.col("rn") <= F.col("page_count") + 1)
         .select("qix", "id", "rn")

@@ -41,13 +41,13 @@ from .schema import (
     ordered_uuid_position_sql,
     position_to_millis,
 )
-from .sources.edges import _read, build_edges, build_metadata, with_fixture_ctes
+from .sources.edges import _fingerprint, _read, build_edges, build_metadata, with_fixture_ctes
 
 # supplier pairs for the set-op queries (graph 3 is the only graph whose
 # destinations are shared between sources); suppliers 1..5 exist at every sf
 PAIRS = [(1, 2), (2, 3), (3, 4), (4, 5), (1, 3)]
 
-_STORES: dict[str, EdgeStore] = {}
+_STORES: dict[tuple[int, str], EdgeStore] = {}
 _PARAMS: dict[str, dict] = {}
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
@@ -71,14 +71,20 @@ def query(name: str, oracle: str | None = None):
 _LAYOUT_VERSION = 2
 
 
+def _store_key(sf_dir: str) -> str:
+    """The one key of every per-sf_dir memo and of the persisted layout:
+    the inputs' fingerprint (path, parquet names/sizes/mtimes) + layout
+    version — regenerated inputs or newer derivation code miss every cache."""
+    return f"{_fingerprint(sf_dir)}|v{_LAYOUT_VERSION}"
+
+
 def _store_cache_dir(sf_dir: str) -> Path:
-    """Per-sf_dir location of the persisted index-shaped store layout."""
+    """Per-input-fingerprint location of the persisted index-shaped layout."""
     root = os.environ.get(
         "FLOCKDB_STORE_CACHE",
         str(Path(__file__).resolve().parents[1] / "spark-warehouse" / "store_cache"),
     )
-    key = f"{Path(sf_dir).resolve()}|v{_LAYOUT_VERSION}"
-    tag = hashlib.sha1(key.encode()).hexdigest()[:8]
+    tag = hashlib.sha1(_store_key(sf_dir).encode()).hexdigest()[:8]
     return Path(root) / f"{Path(sf_dir).name}-{tag}"
 
 
@@ -119,7 +125,8 @@ def store_for(spark: SparkSession, sf_dir: str) -> EdgeStore:
     but cannot prune, so every point read paid a full-table scan.
     Metadata persists alongside (graph_id-partitioned, source-sorted).
     """
-    st = _STORES.get((id(spark), sf_dir))
+    key = (id(spark), _store_key(sf_dir))
+    st = _STORES.get(key)
     if st is not None and st.edges.sparkSession is not spark:
         st = None  # stale session (defensive: a restarted driver session)
     if st is None:
@@ -162,13 +169,15 @@ def store_for(spark: SparkSession, sf_dir: str) -> EdgeStore:
 
             tname = "edges_by_src_dst_" + re.sub(r"[^0-9A-Za-z]", "_", base.name)
             st.by_src_dst = register_unique_twin(spark, str(upath), tname)
-        _STORES[(id(spark), sf_dir)] = st
+        _STORES[key] = st
     return st
 
 
 def params_for(spark: SparkSession, sf_dir: str) -> dict:
-    """Collected fixed parameters (FIXTURES.md §5), cached per sf_dir."""
-    p = _PARAMS.get(sf_dir)
+    """Collected fixed parameters (FIXTURES.md §5), cached per input
+    fingerprint (``_store_key``)."""
+    key = _store_key(sf_dir)
+    p = _PARAMS.get(key)
     if p is None:
         orders = _read(spark, sf_dir, "orders")
         src10 = [
@@ -191,7 +200,7 @@ def params_for(spark: SparkSession, sf_dir: str) -> dict:
             .collect()
         ]
         p = {"src10": src10, "src5": sorted(src10)[:5], "first": first, "true10": true10}
-        _PARAMS[sf_dir] = p
+        _PARAMS[key] = p
     return p
 
 
@@ -519,8 +528,8 @@ WHERE {_pair_filter_sql()}
 def q10(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.batch import batch_intersection
 
-    # all pairs in ONE plan (R18 multi-query batching): broadcast pair list
-    # joined into a single edge scan — N plans → 1 scan + 1 shuffle
+    # all pairs in ONE plan (R18 multi-query batching): every pair's two
+    # leaves tagged in a single edge scan — N plans → 1 scan + 1 shuffle
     return batch_intersection(store_for(spark, sf_dir), 3, PAIRS)
 
 

@@ -148,6 +148,8 @@ class FlockService:
         q23's proven plan shape); anything else — mid-walk cursors, broadcast
         IN-lists — falls back to one Catalyst plan per program.  Pages are in
         the reference's order, destination id DESC (``SqlShard.select``)."""
+        if not queries:
+            return []
         trees = [compile_select(q.operations) for q in queries]
         cls = class_for_trees(trees, INLINE_IN_LIST_MAX)
         with self._classed(cls):
@@ -199,7 +201,7 @@ class FlockService:
         count: int,
         cursor: Cursor | str,
     ) -> Page:
-        node = WhereIn(term, destination_ids) if destination_ids else Simple(term)
+        node = Simple(term) if destination_ids is None else WhereIn(term, destination_ids)
         with self._classed(class_for_trees([node], INLINE_IN_LIST_MAX)):
             return paginate(
                 node.edges(self.store),
@@ -218,6 +220,8 @@ class FlockService:
         (``operators/batch.batch_edge_pages`` — q24's gated plan shape, the
         selectEdges twin of select2's q23 batcher); mid-walk cursors fall back
         to one plan per query."""
+        if not queries:
+            return []
         if not all(q.cursor == CURSOR_START for q in queries):
             return [
                 self._term_page(q.term, q.destination_ids, q.count, q.cursor)
@@ -232,7 +236,7 @@ class FlockService:
         # SelectQuery individually, config/production.scala:26-35) — a batch
         # of WhereIn pages must land in the intersection pool, not SELECT.
         nodes = [
-            WhereIn(q.term, q.destination_ids) if q.destination_ids else Simple(q.term)
+            Simple(q.term) if q.destination_ids is None else WhereIn(q.term, q.destination_ids)
             for q in queries
         ]
         with self._classed(class_for_trees(nodes, INLINE_IN_LIST_MAX)):

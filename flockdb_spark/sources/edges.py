@@ -20,6 +20,9 @@ reference's ordered-uuid scheme (``UuidGenerator.scala:26-39``).
 
 from __future__ import annotations
 
+import hashlib
+from pathlib import Path
+
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -42,6 +45,20 @@ def _position(ms: Column, key: Column) -> Column:
 _SCANS: dict[tuple[str, str], DataFrame] = {}
 
 
+def _fingerprint(sf_dir: str) -> str:
+    """Identity of an sf_dir's inputs: its resolved path plus the sorted
+    ``(name, size, mtime_ns)`` of its ``*.parquet`` files.  Every memo over
+    those inputs keys on it, so data regenerated in place (``gen_sfN.py``
+    rewrites a fixed directory) is re-read, never served stale."""
+    root = Path(sf_dir).resolve()
+    files = sorted(
+        (f.name, st.st_size, st.st_mtime_ns)
+        for f in root.glob("*.parquet")
+        for st in [f.stat()]
+    )
+    return f"{root}|" + hashlib.sha1(repr(files).encode()).hexdigest()[:12]
+
+
 def _read(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     """Read a testdata table, re-spreading under-parallel scans.
 
@@ -57,7 +74,7 @@ def _read(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     real multi-file layout.
     """
     spark.conf.set(NANOS_CONF, "true")
-    key = (sf_dir, table)
+    key = (_fingerprint(sf_dir), table)
     cached = _SCANS.get(key)
     if cached is not None and cached.sparkSession is spark:
         return cached

@@ -60,3 +60,36 @@ def test_zorder_key_locality_and_range(spark):
     keys = df.select(layout.zorder_key("x", "y", bits=6).alias("k")).collect()
     ks = sorted(r["k"] for r in keys)
     assert ks == list(range(64 * 64))  # bijection onto [0, 4096)
+
+
+def test_store_for_rebuilds_after_inputs_regenerated_in_place(spark, tmp_path, monkeypatch):
+    """No silent staleness: the persisted layout and the in-process memos key
+    on the inputs' fingerprint, so rewriting an input parquet in place (as
+    tools/gen_sfN.py does to its fixed output dir) rebuilds the store."""
+    import shutil
+    import stat
+
+    import pyarrow.parquet as pq
+
+    from conftest import SF_DIR
+    from flockdb_spark.queries import params_for, store_for
+
+    sf = tmp_path / "sf"
+    shutil.copytree(SF_DIR, sf)
+    for f in sf.iterdir():
+        f.chmod(f.stat().st_mode | stat.S_IWUSR)
+    sf.chmod(sf.stat().st_mode | stat.S_IWUSR)
+    monkeypatch.setenv("FLOCKDB_STORE_CACHE", str(tmp_path / "cache"))
+
+    before = store_for(spark, str(sf)).edges.count()
+    params_before = params_for(spark, str(sf))
+    orders = pq.read_table(sf / "orders.parquet")
+    kept = orders.num_rows // 2
+    pq.write_table(orders.slice(0, kept), sf / "orders.parquet")
+
+    after = store_for(spark, str(sf))
+    # graph 1 is one edge per order; graphs 2/3 come from untouched inputs
+    assert after.edges.count() == before - (orders.num_rows - kept)
+    assert after.graph(1).count() == kept
+    assert params_for(spark, str(sf)) is not params_before
+    assert len(list((tmp_path / "cache").iterdir())) == 2  # a new layout dir

@@ -321,6 +321,69 @@ def test_batch_flat_pages_matches_per_tree_ids(spark, specs, page_count):
         assert sorted(got.get(qix, []), reverse=True) == expect, (qix, tree)
 
 
+
+# --- pair-batch operators vs per-tree evaluation (q10–q12, q23) -----------
+
+_pair = st_.tuples(
+    st_.integers(min_value=1, max_value=4), st_.integers(min_value=1, max_value=4)
+)
+
+
+@settings(max_examples=8, deadline=None)
+@given(st_.lists(_pair, min_size=1, max_size=4), st_.integers(min_value=1, max_value=3))
+def test_pair_batches_match_per_tree_ids(spark, pairs, page_count):
+    """batch_intersection / batch_union / batch_difference / batch_select2
+    over pair lists WITH duplicate pairs and a == b must equal each pair's
+    two-leaf tree evaluated alone (join composition): one row per distinct
+    (a, b, id), and select2 pages of the top page_count ids DESC."""
+    import unittest.mock as mock
+    from functools import reduce
+
+    from pyspark.sql import functions as F
+
+    from conftest import edge_rows_df
+    import flockdb_spark.operators.algebra as A
+    from flockdb_spark.graph import EdgeStore
+    from flockdb_spark.operators import batch as B
+
+    pairs = pairs + [pairs[0], (pairs[0][0], pairs[0][0])]  # duplicate + a == b
+    rows = [(1, s, d, d * 10, 100, 0) for s in range(1, 5) for d in range(10, 10 + 2 * s)]
+    rows += [(1, s, 9, 90, 100, 2) for s in range(1, 5)]  # archived: filtered out
+    store = EdgeStore.from_edges(spark, edge_rows_df(spark, rows))
+
+    ops = {"intersection": A.Intersection, "union": A.Union, "difference": A.Difference}
+    keys = sorted({(op, a, b) for op in ops for a, b in pairs})
+    with mock.patch.object(A, "flat_ids", lambda *_: None):  # force fallback
+        refs = [
+            ops[op](A.Simple(A.Term(1, a)), A.Simple(A.Term(1, b)))
+            .ids(store)
+            .select(F.lit(op).alias("op"), F.lit(a).alias("a"), F.lit(b).alias("b"), "id")
+            for op, a, b in keys
+        ]
+    ref_rows = reduce(lambda x, y: x.unionByName(y), refs).collect()
+    expect = {k: set() for k in keys}
+    for r in ref_rows:
+        expect[(r["op"], r["a"], r["b"])].add(r["id"])
+
+    for op, fn in [
+        ("intersection", B.batch_intersection),
+        ("union", B.batch_union),
+        ("difference", B.batch_difference),
+    ]:
+        got = sorted(tuple(r) for r in fn(store, 1, pairs).collect())
+        want = sorted((a, b, i) for (o, a, b), ids in expect.items() if o == op for i in ids)
+        assert got == want, op
+
+    programs = [(op, a, b) for a, b in pairs for op in ops]
+    pages: dict[int, list] = {}
+    for r in B.batch_select2(store, 1, programs, page_count=page_count).collect():
+        assert (r["op"], r["a"], r["b"]) == programs[r["qix"]]
+        pages.setdefault(r["qix"], []).append(r["id"])
+    for qix, key in enumerate(programs):
+        want = sorted(expect[key], reverse=True)[:page_count]
+        assert sorted(pages.get(qix, []), reverse=True) == want, key
+
+
 def test_span_rewrite_conservation(spark):
     """Property: for any corpus, dedup_spans_rewrite conserves segments
     (kept + dropped == total) and every kept doc's rebuilt text is the

@@ -451,3 +451,49 @@ def test_pool_isolation_under_concurrency(svc, spark):
     # the select must NOT have waited for the copy job's full runtime —
     # generous bound: under FIFO it lands ~= slow wall, under FAIR far below
     assert select_wall < slow_done["wall"] * 0.7, (select_wall, slow_done)
+
+
+def test_empty_batches_return_empty_without_a_job(svc, spark):
+    """select2([]) / select_edges_batch([]) answer [] like count2([]) —
+    no IndexError from an empty predicate list, and no Spark job."""
+    sc = spark.sparkContext
+    prev = sc.getLocalProperty("spark.jobGroup.id")
+    sc.setLocalProperty("spark.jobGroup.id", "empty-batch-probe")
+    try:
+        assert svc.select2([]) == []
+        assert svc.select_edges_batch([]) == []
+        assert svc.count2([]) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", prev)
+    assert list(sc.statusTracker().getJobIdsForGroup("empty-batch-probe")) == []
+
+
+def test_empty_destination_ids_is_an_empty_in_list(svc):
+    """destination_ids=() is an EMPTY id-list (the reference's intersectEdges
+    over an empty list), never "no filter" — on every path: select_edges,
+    the batch at Start and at a mid-walk cursor, and a select2 leaf."""
+    from flockdb_spark.operators.algebra import Term
+    from flockdb_spark.operators.paging import CURSOR_END
+    from flockdb_spark.service import EdgeQuery
+
+    page = svc.select_edges(1, 1, destination_ids=())
+    assert page.rows == [] and page.next_cursor == CURSOR_END
+
+    cursor = svc.select_edges(1, 1, count=1).next_cursor
+    assert isinstance(cursor, Cursor)
+    for c in ("start", cursor):
+        kw = {} if c == "start" else {"cursor": c}
+        [got] = svc.select_edges_batch([EdgeQuery(Term(1, 1), destination_ids=(), count=1, **kw)])
+        assert got.rows == [] and got.next_cursor == CURSOR_END, c
+
+    S, U = SelectOperationType.SIMPLE_QUERY, SelectOperationType.UNION
+    empty_leaf = [SelectOperation(S, QueryTerm(1, 1, destination_ids=()))]
+    [alone] = svc.select2([SelectQuery(empty_leaf)])
+    assert alone.rows == []
+    # s2 ∪ ∅ == s2 = {11,12,13}: batched Start page, then the per-program
+    # fallback at a mid-walk cursor
+    prog = [SelectOperation(S, QueryTerm(2, 1)), *empty_leaf, SelectOperation(U)]
+    [first] = svc.select2([SelectQuery(prog, page_count=2)])
+    assert [r[1] for r in first.rows] == [13, 12]
+    [rest] = svc.select2([SelectQuery(prog, page_count=2, cursor=first.next_cursor)])
+    assert [r[1] for r in rest.rows] == [11]
