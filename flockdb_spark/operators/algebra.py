@@ -8,8 +8,18 @@ Spark-first, every compound read in the engine — one tree's ``ids()``,
 select2's N-program batch, the pair-batch operators (``batch.py``) — runs on
 ONE evaluator, :func:`flat_flags`: a coarse-filtered edge scan tags each row
 with the leaves it satisfies, one hash aggregation builds per-(tree, id)
-membership flags, and each tree becomes a boolean over its flags.  The leaf
-filter is written once, :meth:`Term.predicate`.
+membership flags, and each tree becomes a boolean over its flags.
+
+Every serving-path plan here is rendered as SQL TEXT, not built from Column
+objects: each Column node (``F.col``/``F.lit``/``&``/``isin``/``F.struct``/
+``F.when``) costs about three py4j round trips, so Column-built plans cost
+hundreds of driver↔JVM trips per call, growing with the batch.  As text, a
+leaf filter is one ``where(str)`` and the whole evaluator is one
+``spark.sql(text, edges=...)`` — a fixed handful of trips for any tree or
+batch.  The leaf filter is written once, :meth:`Term.predicate`; literals
+are rendered only from ``int()``, 64-bit ids as BIGINT literals (``5L``, so
+``-2**63`` parses and comparisons stay long-vs-long and pushable), and an
+empty IN-list as ``FALSE`` (``IN ()`` does not parse).
 
 Trees with a broadcast-sized IN-list leaf keep the join composition in
 ``Intersection/Union/Difference.ids``: each node a DataFrame semi/anti join
@@ -23,11 +33,10 @@ from the term's point of view, the same id-set the reference's set ops return.
 
 from __future__ import annotations
 
-import functools
-import operator
+from collections.abc import Callable, Iterable
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..graph import EdgeStore
@@ -37,6 +46,17 @@ from ..schema import local_df
 #: lists to its low-latency query class, ``shards/SqlShard.scala:36-45,323-329``);
 #: bigger lists become a broadcast semi-join.
 INLINE_IN_LIST_MAX = 64
+
+
+def _bigint(v: int) -> str:
+    """A 64-bit id as a BIGINT SQL literal (``-2**63`` included)."""
+    return f"{int(v)}L"
+
+
+def _sql_in(col: str, values: Iterable[int], render: Callable[[int], str] = _bigint) -> str:
+    """``col IN (…)`` as SQL text; an empty list is ``FALSE``."""
+    items = ", ".join(render(v) for v in values)
+    return f"{col} IN ({items})" if items else "FALSE"
 
 
 @dataclass(frozen=True)
@@ -60,12 +80,13 @@ class Term:
     def vertex_col(self) -> str:
         return "source_id" if self.forward else "destination_id"
 
-    def predicate(self) -> Column:
-        """The leaf filter over the edge table — every leaf scan uses it."""
+    def predicate(self) -> str:
+        """The leaf filter over the edge table, as SQL text — every leaf
+        scan uses it."""
+        states = _sql_in("state", self.states, lambda st: str(int(st)))
         return (
-            (F.col("graph_id") == self.graph_id)
-            & (F.col(self.vertex_col) == self.source_id)
-            & F.col("state").isin(list(self.states))
+            f"(graph_id = {int(self.graph_id)} AND "
+            f"{self.vertex_col} = {_bigint(self.source_id)} AND {states})"
         )
 
     def edges(self, store: EdgeStore) -> DataFrame:
@@ -93,7 +114,7 @@ class Simple(QueryNode):
     term: Term
 
     def ids(self, store: EdgeStore) -> DataFrame:
-        return self.term.edges(store).select(F.col(self.term.id_col).alias("id"))
+        return self.term.edges(store).selectExpr(f"{self.term.id_col} AS id")
 
     def edges(self, store: EdgeStore) -> DataFrame:
         return self.term.edges(store)
@@ -118,7 +139,7 @@ class WhereIn(QueryNode):
             out = self.term.edges(store).join(
                 F.broadcast(ids_df), on=self.term.id_col, how="left_semi"
             )
-        return out.select(F.col(self.term.id_col).alias("id"))
+        return out.selectExpr(f"{self.term.id_col} AS id")
 
     def edges(self, store: EdgeStore) -> DataFrame:
         """intersectEdges (R10, ``shards/SqlShard.scala:337-349``)."""
@@ -201,35 +222,71 @@ def _flat_leaves(node: QueryNode) -> list | None:
     return None
 
 
-def _leaf_predicate(term: Term, in_ids: tuple[int, ...] | None) -> Column:
-    """A Simple (``in_ids=None``) or WhereIn leaf as one row filter."""
+def _leaf_predicate(term: Term, in_ids: tuple[int, ...] | None) -> str:
+    """A Simple (``in_ids=None``) or WhereIn leaf as one SQL row filter."""
     p = term.predicate()
-    return p if in_ids is None else p & F.col(term.id_col).isin([int(i) for i in in_ids])
+    return p if in_ids is None else f"({p} AND {_sql_in(term.id_col, in_ids)})"
 
 
-def _tagged_scan(store: EdgeStore, tags: list[tuple[Column, Column]], *cols) -> DataFrame:
-    """ONE coarse-filtered edge scan (the OR of every predicate) that emits
-    each row once per ``(predicate, tag)`` it satisfies — a row can serve
-    several leaves or queries.  Output: ``cols`` plus the tag as ``_tag``."""
-    coarse = functools.reduce(operator.or_, (p for p, _ in tags))
+def _tagged_scan(tags: list[tuple[str, str]], tag: str, cols: str = "") -> str:
+    """SQL text of ONE coarse-filtered scan of ``{edges}`` (the OR of every
+    predicate) that emits each row once per ``(predicate, tag)`` it
+    satisfies — a row can serve several leaves or queries.  Output: the tag
+    as column ``tag``, then ``cols`` (``", *"`` for the whole edge row)."""
+    coarse = " OR ".join(p for p, _ in tags)
+    arms = ", ".join(f"CASE WHEN {p} THEN {t} END" for p, t in tags)
     return (
-        store.edges.where(coarse)
-        .select(*cols, F.explode(F.array(*[F.when(p, t) for p, t in tags])).alias("_tag"))
-        .where(F.col("_tag").isNotNull())
+        f"SELECT * FROM (SELECT explode(array({arms})) AS {tag}{cols} "
+        f"FROM {{edges}} WHERE {coarse}) WHERE {tag} IS NOT NULL"
     )
 
 
-def _flag_expr(node: QueryNode, flags) -> Column:
-    """The tree as a boolean over its leaves' flag columns, consuming flag
-    indexes in the same leftmost-first order as :func:`_flat_leaves`."""
+def _flag_expr(node: QueryNode, flags) -> str:
+    """The tree as a SQL boolean over its leaves' flag columns, consuming
+    flag indexes in the same leftmost-first order as :func:`_flat_leaves`."""
     if isinstance(node, (Simple, WhereIn)):
-        return F.col(f"f{next(flags)}") == 1
+        return f"f{next(flags)} = 1"
     left, right = _flag_expr(node.left, flags), _flag_expr(node.right, flags)
     if isinstance(node, Intersection):
-        return left & right
+        return f"({left} AND {right})"
     if isinstance(node, Union):
-        return left | right
-    return left & ~right
+        return f"({left} OR {right})"
+    return f"({left} AND NOT {right})"
+
+
+def _flags_sql(trees: list[QueryNode]) -> str | None:
+    """:func:`flat_flags` as SQL text over ``{edges}`` (output ``qix, id``),
+    for callers that stack more stages onto the same statement — or None if
+    any tree is not flattenable."""
+    flat = [_flat_leaves(t) for t in trees]
+    if any(
+        leaves is None or isinstance(tree, (Simple, WhereIn))
+        for tree, leaves in zip(trees, flat)
+    ):
+        return None
+    if not trees:
+        return "SELECT CAST(NULL AS INT) AS qix, CAST(NULL AS BIGINT) AS id WHERE FALSE"
+    tags, keep, base = [], [], 0
+    for qix, (tree, leaves) in enumerate(zip(trees, flat)):
+        for j, leaf in enumerate(leaves):
+            t = leaf.term
+            tag = f"named_struct('qix', {qix}, 'leaf', {base + j}, 'id', {t.id_col})"
+            in_ids = leaf.in_ids if isinstance(leaf, WhereIn) else None
+            tags.append((_leaf_predicate(t, in_ids), tag))
+        flags = iter(range(base, base + len(leaves)))
+        keep.append(f"(qix = {qix} AND {_flag_expr(tree, flags)})")
+        base += len(leaves)
+    maxes = ", ".join(
+        f"max(CASE WHEN leaf = {i} THEN 1 ELSE 0 END) AS f{i}" for i in range(base)
+    )
+    leaf_rows = (
+        "SELECT _tag.qix AS qix, _tag.leaf AS leaf, _tag.id AS id "
+        f"FROM ({_tagged_scan(tags, '_tag')})"
+    )
+    return (
+        f"SELECT qix, id FROM (SELECT qix, id, {maxes} FROM ({leaf_rows}) GROUP BY qix, id) "
+        f"WHERE {' OR '.join(keep)}"
+    )
 
 
 def flat_flags(store: EdgeStore, trees: list[QueryNode]) -> DataFrame | None:
@@ -250,46 +307,16 @@ def flat_flags(store: EdgeStore, trees: list[QueryNode]) -> DataFrame | None:
         A ∩ B → fA & fB      A ∪ B → fA | fB      A − B → fA & ~fB
 
     One table scan, one broadcast-free shuffle, any number of trees, any
-    depth, any mix of directions/graphs/state filters.  q13's two 3-leaf
-    trees drop from 19 exchanges to 2; a select2 batch of N programs is one
-    scan instead of N.
+    depth, any mix of directions/graphs/state filters — and one SQL
+    statement, so the driver's py4j cost does not grow with the batch.
+    q13's two 3-leaf trees drop from 19 exchanges to 2; a select2 batch of
+    N programs is one scan instead of N.
     """
-    flat = [_flat_leaves(t) for t in trees]
-    if any(
-        leaves is None or isinstance(tree, (Simple, WhereIn))
-        for tree, leaves in zip(trees, flat)
-    ):
-        return None
-    if not trees:
-        return local_df(store.spark, [], "qix int, id long")
-    tags, keep, base = [], F.lit(False), 0
-    for qix, (tree, leaves) in enumerate(zip(trees, flat)):
-        for j, leaf in enumerate(leaves):
-            t = leaf.term
-            tag = F.struct(
-                F.lit(qix).alias("qix"), F.lit(base + j).alias("leaf"), F.col(t.id_col).alias("id")
-            )
-            in_ids = leaf.in_ids if isinstance(leaf, WhereIn) else None
-            tags.append((_leaf_predicate(t, in_ids), tag))
-        flags = iter(range(base, base + len(leaves)))
-        keep = keep | ((F.col("qix") == qix) & _flag_expr(tree, flags))
-        base += len(leaves)
-    return (
-        _tagged_scan(store, tags)
-        .select("_tag.qix", "_tag.leaf", "_tag.id")
-        .groupBy("qix", "id")
-        .agg(
-            *[
-                F.max(F.when(F.col("leaf") == i, 1).otherwise(0)).alias(f"f{i}")
-                for i in range(base)
-            ]
-        )
-        .where(keep)
-        .select("qix", "id")
-    )
+    sql = _flags_sql(trees)
+    return None if sql is None else store.spark.sql(sql, edges=store.edges)
 
 
 def flat_ids(node: QueryNode, store: EdgeStore) -> DataFrame | None:
     """One tree's ids through :func:`flat_flags`, or None if not flattenable."""
-    flags = flat_flags(store, [node])
-    return None if flags is None else flags.select("id")
+    sql = _flags_sql([node])
+    return None if sql is None else store.spark.sql(f"SELECT id FROM ({sql})", edges=store.edges)

@@ -15,11 +15,19 @@ scan + ONE flags aggregation for all N set-op trees — plus a thin shell:
 :func:`batch_edge_pages` is the full-edge-row twin: the same tagged scan,
 tagged by query index instead of leaf, paged per query.  At 100 TB this is
 the difference between 2N scans (reference) and 1.
+
+The two paged batches are each ONE SQL statement over the edge table
+(``spark.sql(text, edges=...)``), stacked on the evaluator's text
+(``algebra._flags_sql`` / ``algebra._tagged_scan``).  Per-query values — the
+``page_count + 1`` limit, the backward/forward tiebreak column — are inline
+``CASE qix WHEN …`` expressions, not a joined parameter table: the driver
+hands the JVM one string per batch whatever its size, and the plan has no
+broadcast.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..graph import EdgeStore
@@ -31,12 +39,19 @@ from .algebra import (
     Simple,
     Term,
     Union,
+    _flags_sql,
     _leaf_predicate,
     _tagged_scan,
     flat_flags,
 )
 
 _SET_OPS = {"intersection": Intersection, "union": Union, "difference": Difference}
+
+
+def _by_qix(values: list[str]) -> str:
+    """``CASE qix WHEN 0 THEN values[0] …`` — a per-query value, inline."""
+    arms = " ".join(f"WHEN {qix} THEN {v}" for qix, v in enumerate(values))
+    return f"CASE qix {arms} END" if arms else "NULL"
 
 
 def _pair_programs(
@@ -114,7 +129,7 @@ def batch_select2(
     trees, labels = _pair_programs(store, graph_id, programs, states)
     return (
         batch_flat_pages(store, [(t, page_count) for t in trees])
-        .where(F.col("rn") <= page_count)
+        .where(f"rn <= {int(page_count)}")
         .join(F.broadcast(labels), "qix")
         .select("qix", "op", "a", "b", "id")
     )
@@ -137,33 +152,21 @@ def batch_edge_pages(
     source for backward) as tiebreak (``SqlShard.select``'s default
     direction).
 
-    Returns (qix, rn, <edge cols>) with ``rn`` ≤ page_count+1 — the +1 row
+    Returns (qix, <edge cols>, rn) with ``rn`` ≤ page_count+1 — the +1 row
     is the caller's has-more probe (``SqlShard.scala:263-278``'s same-round-
     trip trick).  At 100 TB this is one pruned scan + one N·page-sized
     shuffle for any number of queries, vs N scans in the reference."""
     tags = [
-        (_leaf_predicate(term, dest_ids), F.lit(i))
+        (_leaf_predicate(term, dest_ids), str(i))
         for i, (term, dest_ids, _count) in enumerate(queries)
     ]
-    tagged = _tagged_scan(store, tags, "*").withColumnRenamed("_tag", "qix")
-    spec = local_df(
-        store.spark,
-        [
-            (i, int(count), bool(not term.forward))
-            for i, (term, _dest, count) in enumerate(queries)
-        ],
-        "qix int, page_count int, backward boolean",
-    )
-    pid = F.when(F.col("backward"), F.col("source_id")).otherwise(
-        F.col("destination_id")
-    )
-    w = Window.partitionBy("qix").orderBy(F.desc("position"), F.desc("_pid"))
-    return (
-        tagged.join(F.broadcast(spec), "qix")
-        .withColumn("_pid", pid)
-        .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= F.col("page_count") + 1)
-        .drop("page_count", "backward", "_pid")
+    pid = _by_qix([term.id_col for term, _dest, _count in queries])
+    limit = _by_qix([str(int(count) + 1) for _term, _dest, count in queries])
+    window = f"PARTITION BY qix ORDER BY position DESC, {pid} DESC"
+    return store.spark.sql(
+        f"SELECT * FROM (SELECT *, row_number() OVER ({window}) AS rn "
+        f"FROM ({_tagged_scan(tags, 'qix', ', *')})) WHERE rn <= {limit}",
+        edges=store.edges,
     )
 
 
@@ -175,9 +178,11 @@ def batch_flat_pages(
     Each program is ``(tree, page_count)`` with any flattenable set-op tree
     (Simple / inline WhereIn leaves, any mix of graphs, directions, state
     filters, any depth).  :func:`algebra.flat_flags` selects every tree's ids
-    in one scan + one shuffle; pages are per-program windows in the
-    reference's Start-page order (destination id DESC, ``SqlShard.select``'s
-    default direction).
+    in one scan + one shuffle (the flags aggregation); pages are per-program
+    windows in the reference's Start-page order (destination id DESC,
+    ``SqlShard.select``'s default direction), which take a second shuffle
+    (hash on ``qix``).  Each program's ``page_count + 1`` limit is an inline
+    ``CASE qix`` — the plan is one scan and two exchanges, no broadcast.
 
     Returns (qix, id, rn) with ``rn`` ≤ page_count+1 — the +1 row is the
     caller's has-more probe (same trick as ``SqlShard.scala:263-278``), or
@@ -186,20 +191,15 @@ def batch_flat_pages(
 
     This is the reference's real N-query batch shape
     (``Flockdb.thrift:151-152`` takes the whole query list): N compound
-    queries are one scan + one shuffle instead of N× both.
+    queries are one scan + two exchanges instead of N× each.
     """
-    flags = flat_flags(store, [tree for tree, _ in programs])
+    flags = _flags_sql([tree for tree, _ in programs])
     if flags is None:
         return None
-    limits = local_df(
-        store.spark,
-        [(qix, int(count)) for qix, (_, count) in enumerate(programs)],
-        "qix int, page_count int",
-    )
-    w = Window.partitionBy("qix").orderBy(F.desc("id"))
-    return (
-        flags.withColumn("rn", F.row_number().over(w))
-        .join(F.broadcast(limits), "qix")
-        .where(F.col("rn") <= F.col("page_count") + 1)
-        .select("qix", "id", "rn")
+    limit = _by_qix([str(int(count) + 1) for _, count in programs])
+    return store.spark.sql(
+        "SELECT qix, id, rn FROM (SELECT qix, id, "
+        f"row_number() OVER (PARTITION BY qix ORDER BY id DESC) AS rn FROM ({flags})) "
+        f"WHERE rn <= {limit}",
+        edges=store.edges,
     )

@@ -14,10 +14,8 @@ The estimates ARE the API answer, not just planner input
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from ..graph import EdgeStore
-from .algebra import Difference, Intersection, QueryNode, Simple, Union, WhereIn
+from .algebra import Difference, Intersection, QueryNode, Simple, Union, WhereIn, _bigint
 
 AVERAGE_INTERSECTION_PROPORTION = 0.1  # config/FlockDB.scala:19
 
@@ -43,13 +41,10 @@ def fetch_leaf_counts(
     }
     if not wanted:
         return {}
+    keys = ", ".join(f"({int(g)}, {_bigint(s)})" for g, s in wanted)
     rows = (
-        store.metadata.where(
-            F.struct(F.col("graph_id"), F.col("source_id")).isin(
-                [F.struct(F.lit(g), F.lit(s).cast("long")) for g, s in wanted]
-            )
-        )
-        .select("graph_id", "source_id", "count")
+        store.metadata.where(f"(graph_id, source_id) IN ({keys})")
+        .selectExpr("graph_id", "source_id", "count")
         .collect()
     )
     return {(r["graph_id"], r["source_id"]): r["count"] for r in rows}

@@ -14,19 +14,23 @@ Differences from the reference, on purpose:
   duplicate sort values (the reference's single-column position cursor can skip
   ties);
 - the "fetch the continue-cursor probe in the same round trip via UNION ALL"
-  trick (``SqlShard.scala:263-278``) is kept: one Spark job serves the page
-  *and* both cursor probes.
+  trick (``SqlShard.scala:263-278``) is kept: one SQL statement over the
+  caller's DataFrame serves the page *and* its opposite-direction probe,
+  ``(… ORDER BY … LIMIT n+1) UNION ALL (… LIMIT 1)`` (the page's own extra
+  row is the same-direction probe).  A Start page is one Spark job; a cursor
+  page is two, because inside the UNION the page's top-k goes through a
+  single-partition exchange, which AQE runs as its own job.
 
-At scale the page query is a filter + TakeOrderedAndProject — no shuffle, no
-full materialization of the underlying set.
+At scale the page query is a filter + top-k (TakeOrderedAndProject on a
+Start page) — no shuffle of the data, no full materialization of the
+underlying set.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 # sentinel cursors (Cursor.scala:19-30)
 CURSOR_START = "start"
@@ -53,13 +57,6 @@ class Page:
     full_rows: list | None = None  # whole source rows (selectEdges, R8)
 
 
-def _tuple_cmp(sort_col: Column, id_col: Column, cur: Cursor, before: bool) -> Column:
-    """(sort, id) <cursor  /  >cursor — lexicographic, via struct comparison."""
-    probe = F.struct(F.lit(cur.value).cast("long"), F.lit(cur.id).cast("long"))
-    this = F.struct(sort_col.cast("long"), id_col.cast("long"))
-    return this < probe if before else this > probe
-
-
 def paginate(
     df: DataFrame,
     sort_col: str,
@@ -69,55 +66,36 @@ def paginate(
     descending: bool = True,
     include_rows: bool = False,
 ) -> Page:
-    """One page plus both cursors, in a single Spark job.
+    """One page plus both cursors, from one SQL statement over ``df``.
 
     ``df`` must contain ``sort_col`` and ``id_col``.  Rows are returned in the
     user-facing order (descending by default), regardless of paging direction.
     """
-    s, i = F.col(sort_col), F.col(id_col)
     # "desc" here means the user-facing ordering; a backward cursor walks it
     # in reverse and the page is flipped before returning.
     walking_back = isinstance(cursor, Cursor) and cursor.backward
-
-    if isinstance(cursor, Cursor):
-        if walking_back:
-            page_pred = _tuple_cmp(s, i, cursor, before=not descending)
-            probe_pred = _tuple_cmp(s, i, cursor, before=descending)
-        else:
-            page_pred = _tuple_cmp(s, i, cursor, before=descending)
-            probe_pred = _tuple_cmp(s, i, cursor, before=not descending)
-        probe = (
-            df.where(probe_pred)
-            .select(s.alias("_s"), i.alias("_i"))
-            .limit(1)
-            .withColumn("_probe", F.lit(True))
-        )
-        page_df = df.where(page_pred)
-    else:
-        probe = None
-        page_df = df
-
     scan_desc = descending != walking_back
-    order = [s.desc(), i.desc()] if scan_desc else [s.asc(), i.asc()]
-    payload = (
-        [F.struct(*[F.col(c) for c in df.columns]).alias("_row")]
-        if include_rows
-        else [F.lit(None).cast("string").alias("_row")]
-    )
-    page_q = (
-        page_df.select(s.alias("_s"), i.alias("_i"), *payload)
-        .orderBy(*order)
-        .limit(count + 1)
-        .withColumn("_probe", F.lit(False))
-    )
-    if probe is not None:
-        probe = probe.withColumn(
-            "_row", F.lit(None).cast(dict(page_q.dtypes)["_row"])
-        ).select(*page_q.columns)
-    # same-trip probe: page and opposite-direction existence check in one job
-    # (mirrors the UNION ALL at SqlShard.scala:268-271)
-    q = page_q.unionByName(probe) if probe is not None else page_q
-    collected = q.collect()
+    order = "DESC" if scan_desc else "ASC"
+    cols = f"`{sort_col}` AS _s, `{id_col}` AS _i"
+    row = "struct(*)" if include_rows else "CAST(NULL AS STRING)"
+    page = f"SELECT {cols}, {row} AS _row, false AS _probe FROM {{df}}"
+    limit = f"ORDER BY _s {order}, _i {order} LIMIT {int(count) + 1}"
+    if isinstance(cursor, Cursor):
+        # (sort, id) past / before the cursor in scan order — lexicographic,
+        # via struct comparison
+        key = f"struct(CAST(`{sort_col}` AS BIGINT), CAST(`{id_col}` AS BIGINT))"
+        at = f"struct({int(cursor.value)}L, {int(cursor.id)}L)"
+        past, before = ("<", ">") if scan_desc else (">", "<")
+        # same-trip probe: page and opposite-direction existence check in
+        # one statement (mirrors the UNION ALL at SqlShard.scala:268-271)
+        text = (
+            f"({page} WHERE {key} {past} {at} {limit}) UNION ALL "
+            f"(SELECT {cols}, NULL AS _row, true AS _probe FROM {{df}} "
+            f"WHERE {key} {before} {at} LIMIT 1)"
+        )
+    else:
+        text = f"{page} {limit}"
+    collected = df.sparkSession.sql(text, df=df).collect()
 
     page_recs = [r for r in collected if not r["_probe"]]
     has_opposite = any(r["_probe"] for r in collected)

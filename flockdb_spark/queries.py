@@ -335,11 +335,11 @@ WHERE graph_id = 1 AND state = 0 AND source_id IN (SELECT source_id FROM src10)
 """),
 )
 def q05(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # evaluated for the r11 job-floor item: routing this page through an
-    # AQE-off interactive session (session.interactive_session) measured
-    # NO win in an alternating A/B at sf3.0 (min 0.169 s vs 0.164 s) —
-    # the floor is scheduler + task launch for the ~34-file scan, not
-    # AQE re-planning.  Kept on the default session.
+    # evaluated for the r11 job-floor item: routing this page through a
+    # cloned AQE-off session measured NO win in an alternating A/B at
+    # sf3.0 (min 0.169 s vs 0.164 s) — the floor is scheduler + task
+    # launch for the ~34-file scan, not AQE re-planning.  Kept on the
+    # default session.
     st = store_for(spark, sf_dir)
     return (
         st.graph(1)

@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .graph import EdgeStore
-from .operators.algebra import INLINE_IN_LIST_MAX, QueryNode, Simple, Term, WhereIn
+from .operators.algebra import INLINE_IN_LIST_MAX, QueryNode, Simple, Term, WhereIn, _bigint
 from .operators.batch import batch_edge_pages, batch_flat_pages
 from .operators.classes import (
     FlockTimeoutException,  # noqa: F401 — public surface (O5 timeout twin)
@@ -94,10 +94,9 @@ class FlockService:
         ``None``.  Pass ``strict=True`` for reference-exact raising."""
         with self._classed(QueryClass.SELECT_SINGLE):
             rows = (
-                self.store.graph(graph_id)
-                .where(
-                    (F.col("source_id") == source_id)
-                    & (F.col("destination_id") == destination_id)
+                self.store.edges.where(
+                    f"graph_id = {int(graph_id)} AND source_id = {_bigint(source_id)} "
+                    f"AND destination_id = {_bigint(destination_id)}"
                 )
                 .limit(1)
                 .collect()
@@ -124,7 +123,7 @@ class FlockService:
         with self._classed(QueryClass.SELECT_METADATA):
             rows = (
                 self.store.metadata.where(
-                    (F.col("graph_id") == graph_id) & (F.col("source_id") == source_id)
+                    f"graph_id = {int(graph_id)} AND source_id = {_bigint(source_id)}"
                 )
                 .limit(1)
                 .collect()
@@ -144,10 +143,12 @@ class FlockService:
         """R14/R18 — N independent compound paged queries
         (``EdgesService.scala:86-100``).  The whole batch of Start-cursor
         flattenable programs (any set-op tree over Simple / inline-IN leaves)
-        runs as ONE scan + ONE shuffle (``operators/batch.batch_flat_pages``,
-        q23's proven plan shape); anything else — mid-walk cursors, broadcast
-        IN-lists — falls back to one Catalyst plan per program.  Pages are in
-        the reference's order, destination id DESC (``SqlShard.select``)."""
+        runs as ONE SQL statement: one scan and two exchanges, the flags
+        aggregation and the per-program page window
+        (``operators/batch.batch_flat_pages``, q23's plan shape); anything
+        else — leaf roots, mid-walk cursors, broadcast IN-lists — falls back
+        to one :func:`paginate` statement per program.  Pages are in the
+        reference's order, destination id DESC (``SqlShard.select``)."""
         if not queries:
             return []
         trees = [compile_select(q.operations) for q in queries]
@@ -172,13 +173,11 @@ class FlockService:
                     )
                     out.append(Page([(v, v) for v in ids], next_cursor, CURSOR_START))
                 return out
-            out = []
-            for q, tree in zip(queries, trees):
-                ids = tree.ids(self.store)
-                # set-op results are id-ordered; reuse id as the sort key
-                df = ids.select(F.col("id").alias("_sort"), F.col("id").alias("_id"))
-                out.append(paginate(df, "_sort", "_id", q.page_count, q.cursor))
-            return out
+            # set-op results are id-ordered; the id is its own sort key
+            return [
+                paginate(tree.ids(self.store), "id", "id", q.page_count, q.cursor)
+                for q, tree in zip(queries, trees)
+            ]
 
     def select_edges(
         self,

@@ -113,35 +113,3 @@ def get_spark(
     )
     return builder.getOrCreate()
 
-
-_INTERACTIVE: dict[int, SparkSession] = {}
-
-
-def interactive_session(spark: SparkSession) -> SparkSession:
-    """The INTERACTIVE (point-read / page-serving) session tier: same
-    SparkContext and catalog, AQE disabled.
-
-    The reference isolates its sub-millisecond classes behind their own
-    evaluator pools (``shards/SqlShard.scala:36-45``); the Spark analogue
-    of that split at the PLANNER level is a cloned session whose conf
-    drops adaptive execution: a keyset page or point lookup is a tiny
-    FIXED plan (pruned scan → filter → sort-limit) that never needs
-    AQE's runtime re-planning.  Honest measurement note (r11): an
-    alternating A/B at sf3.0 found NO wall win on local[32] (q05 min
-    0.169 s vs 0.164 s — the floor is scheduler + task-launch for the
-    multi-file scan, not AQE), so the gate queries stay on the default
-    session; this tier exists for deployments that want the classes'
-    planner isolation, not as a performance claim.  The analytics tier
-    keeps AQE (join-side selection, skew splits, partition coalescing
-    pay for themselves the moment a shuffle is data-sized).
-
-    Memoized per parent session; the clone shares the SparkContext,
-    SharedState (catalog — the UNIQUE-index twin registration is visible
-    to both tiers), and the cached data, so it costs nothing to keep."""
-    key = id(spark)
-    s = _INTERACTIVE.get(key)
-    if s is None:
-        s = spark.newSession()
-        s.conf.set("spark.sql.adaptive.enabled", "false")
-        _INTERACTIVE[key] = s
-    return s

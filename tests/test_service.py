@@ -497,3 +497,188 @@ def test_empty_destination_ids_is_an_empty_in_list(svc):
     assert [r[1] for r in first.rows] == [13, 12]
     [rest] = svc.select2([SelectQuery(prog, page_count=2, cursor=first.next_cursor)])
     assert [r[1] for r in rest.rows] == [11]
+
+
+def test_reads_cost_a_fixed_number_of_py4j_round_trips(svc, monkeypatch):
+    """Every read's plan is handed to the JVM as SQL text, so a call costs a
+    fixed handful of py4j round trips: a select2 batch of 8 compound programs
+    costs about what one program does, and a point read, a Start page and a
+    cursor page each stay under a small fixed budget (Column-built plans
+    cost ~3 round trips per expression node: hundreds per call, thousands
+    per batch).  py4j's deferred releases of garbage-collected proxies
+    (memory commands) are not counted: they flush whenever Python's GC
+    runs, on behalf of earlier work."""
+    import py4j.clientserver
+    import py4j.java_gateway
+    import py4j.protocol
+
+    sent = [0]
+    for cls in (py4j.clientserver.ClientServerConnection, py4j.java_gateway.GatewayConnection):
+        def counting(self, command, _send=cls.send_command):
+            sent[0] += not command.startswith(py4j.protocol.MEMORY_COMMAND_NAME)
+            return _send(self, command)
+
+        monkeypatch.setattr(cls, "send_command", counting)
+
+    def trips(call):
+        sent[0] = 0
+        call()
+        return sent[0]
+
+    S = SelectOperationType.SIMPLE_QUERY
+    ops = (
+        SelectOperationType.INTERSECTION,
+        SelectOperationType.UNION,
+        SelectOperationType.DIFFERENCE,
+    )
+
+    def program(kind, a, b):
+        return [
+            SelectOperation(S, QueryTerm(a, 1)),
+            SelectOperation(S, QueryTerm(b, 1)),
+            SelectOperation(kind),
+        ]
+
+    one = trips(lambda: svc.select2([SelectQuery(program(ops[0], 1, 2), page_count=2)]))
+    batch = [SelectQuery(program(ops[k % 3], 1 + k % 2, 2 - k % 2), page_count=2) for k in range(8)]
+    eight = trips(lambda: svc.select2(batch))
+    assert eight <= one + 10, (one, eight)
+
+    cursor = svc.select_edges(1, 1, count=1).next_cursor
+    assert isinstance(cursor, Cursor)
+    budget = {
+        "get": trips(lambda: svc.get(1, 1, 10)),
+        "select_edges": trips(lambda: svc.select_edges(1, 1, count=1)),
+        "cursor page": trips(lambda: svc.select_edges(1, 1, count=1, cursor=cursor)),
+    }
+    assert all(n <= 60 for n in budget.values()), budget
+
+
+def test_extreme_and_negative_ids_render_as_exact_literals(spark):
+    """64-bit extremes and negative ids reach every read path as exact BIGINT
+    literals (``-2**63`` included): point reads, metadata, count2, full-edge
+    pages at Start and across cursors in both directions, the batch, and
+    select2 batched and at a cursor all match a plain Python filter over the
+    same rows (and compound ids match the join composition).  An empty
+    states tuple or destination-id list is an empty result, not a parse
+    error."""
+    import unittest.mock as mock
+
+    import flockdb_spark.operators.algebra as A
+    from flockdb_spark.operators.algebra import Simple, Term
+    from flockdb_spark.operators.paging import CURSOR_END
+    from flockdb_spark.plans.compiler import compile_select
+    from flockdb_spark.service import EdgeQuery
+
+    MAX, MIN, NEG = 2**63 - 1, -(2**63), -5
+    rows = [  # (graph, source, destination, position, updated_at, state)
+        (1, MAX, MIN, 50, 100, 0), (1, MAX, NEG, 40, 100, 0), (1, MAX, 7, 30, 100, 0),
+        (1, MAX, 8, 20, 100, 2), (1, NEG, MAX, 50, 100, 0), (1, NEG, MIN, 45, 100, 0),
+        (1, NEG, 7, 10, 100, 0), (1, MIN, MAX, 60, 100, 0), (1, MIN, NEG, 60, 100, 0),
+        (2, MAX, MIN, 10, 100, 0),
+    ]
+    svc = FlockService(EdgeStore.from_edges(spark, edge_rows_df(spark, rows)))
+
+    def py_edges(vertex, forward=True, states=(0,), ids=None, graph=1):
+        """(position, id) of a term's edges in Start-page order."""
+        out = [
+            (p, d if forward else s)
+            for g, s, d, p, _, st in rows
+            if g == graph and (s if forward else d) == vertex and st in states
+        ]
+        return sorted((r for r in out if ids is None or r[1] in ids), reverse=True)
+
+    def py_ids(vertex, **kw):
+        return {i for _, i in py_edges(vertex, **kw)}
+
+    # point reads and metadata
+    assert svc.get(MAX, 1, MIN)["position"] == 50
+    assert svc.get(MIN, 1, MAX)["position"] == 60
+    assert svc.get(MAX, 2, MIN)["position"] == 10
+    assert svc.get(MIN, 2, MAX) is None
+    assert svc.get(MAX, 1, 8)["state"] == 2 and not svc.contains(MAX, 1, 8)
+    assert svc.contains(NEG, 1, MIN) and not svc.contains(MIN, 1, MIN)
+    for v in (MAX, MIN, NEG):
+        assert svc.get_metadata(v, 1)["count"] == len(py_ids(v))
+    assert svc.get_metadata(7, 1) is None
+
+    S, I, U, D = (
+        SelectOperationType.SIMPLE_QUERY,
+        SelectOperationType.INTERSECTION,
+        SelectOperationType.UNION,
+        SelectOperationType.DIFFERENCE,
+    )
+
+    def leaf(v, **kw):
+        return SelectOperation(S, QueryTerm(v, 1, **kw))
+
+    assert svc.count2([[leaf(MAX)], [leaf(MIN)], [leaf(NEG), leaf(MIN), SelectOperation(U)]]) == [
+        len(py_ids(MAX)), len(py_ids(MIN)), max(len(py_ids(NEG)), len(py_ids(MIN)))
+    ]
+
+    # full-edge pages: walk forward one row at a time, then one step back
+    for v, kw in ((MAX, {}), (MIN, {}), (NEG, {"destination_ids": (MAX, 7, MIN, 99)})):
+        want = py_edges(v, ids=kw.get("destination_ids"))
+        pages, cursor = [], "start"
+        while cursor != CURSOR_END:
+            page = svc.select_edges(v, 1, count=1, cursor=cursor, **kw)
+            pages.append(page)
+            cursor = page.next_cursor
+        assert [r for p in pages for r in p.rows] == want, v
+        back = svc.select_edges(v, 1, count=1, cursor=pages[-1].prev_cursor, **kw)
+        assert back.rows == pages[-2].rows, v
+
+    queries = [
+        EdgeQuery(Term(1, MAX), count=2),
+        EdgeQuery(Term(1, MIN, forward=False), count=5),
+        EdgeQuery(Term(1, NEG), destination_ids=(MAX, 7, MIN), count=5),
+        EdgeQuery(Term(1, MAX, states=(0, 2)), count=10),
+    ]
+    got = [p.rows for p in svc.select_edges_batch(queries)]
+    assert got == [
+        py_edges(MAX)[:2],
+        py_edges(MIN, forward=False),
+        py_edges(NEG, ids=(MAX, 7, MIN)),
+        py_edges(MAX, states=(0, 2)),
+    ]
+
+    # select2: batched Start pages, then the per-program path at each cursor
+    programs = {
+        "max∩neg": ([leaf(MAX), leaf(NEG), SelectOperation(I)], py_ids(MAX) & py_ids(NEG)),
+        "max∪min": ([leaf(MAX), leaf(MIN), SelectOperation(U)], py_ids(MAX) | py_ids(MIN)),
+        "neg−max": ([leaf(NEG), leaf(MAX), SelectOperation(D)], py_ids(NEG) - py_ids(MAX)),
+        "in∩←min": (
+            [
+                leaf(NEG, destination_ids=(MAX, MIN, 99)),
+                leaf(MIN, is_forward=False),
+                SelectOperation(I),
+            ],
+            py_ids(NEG, ids=(MAX, MIN, 99)) & py_ids(MIN, forward=False),
+        ),
+    }
+    firsts = svc.select2([SelectQuery(p, page_count=1) for p, _ in programs.values()])
+    for (name, (prog, want)), page in zip(programs.items(), firsts):
+        seen = [i for _, i in page.rows]
+        while page.next_cursor != CURSOR_END:
+            [page] = svc.select2([SelectQuery(prog, page_count=1, cursor=page.next_cursor)])
+            seen += [i for _, i in page.rows]
+        assert seen == sorted(want, reverse=True), name
+        tree = compile_select(prog)
+        with mock.patch.object(A, "flat_ids", lambda *_: None):  # join composition
+            assert {r["id"] for r in tree.ids(svc.store).collect()} == want, name
+
+    # empty states / empty destination-id lists: empty, never a ParseException
+    assert Simple(Term(1, MAX, True, ())).ids(svc.store).collect() == []
+    assert svc.select_edges(MAX, 1, states=()).rows == []
+    [batched] = svc.select_edges_batch([EdgeQuery(Term(1, MAX, states=()))])
+    assert batched.rows == []
+    [alone] = svc.select2([SelectQuery([leaf(MAX, states=())])])
+    assert alone.rows == []
+    union, meet = svc.select2(  # one batched scan
+        [
+            SelectQuery([leaf(MAX, states=()), leaf(NEG), SelectOperation(U)]),
+            SelectQuery([leaf(MAX, destination_ids=()), leaf(NEG), SelectOperation(I)]),
+        ]
+    )
+    assert meet.rows == []
+    assert [i for _, i in union.rows] == sorted(py_ids(NEG), reverse=True)
