@@ -146,10 +146,7 @@ BENCH_QUERIES = [
 #: every timed pass) and the warm/index-resident time is reported
 #: separately under "warm_index" (the number a real serving deployment
 #: sees after the one-off index build).
-INDEX_PERSISTED = {
-    "x15_ivf_ann", "x18_lsh_neardup", "x35_multiprobe_ann",
-    "x109_lsh_auto_neardup",
-}
+INDEX_PERSISTED = {"x18_lsh_neardup", "x109_lsh_auto_neardup"}
 
 #: queries whose DataFrame CONSTRUCTION performs eager corpus work (x84
 #: collects the count-min sketch to inline it as probe literals; the BM25

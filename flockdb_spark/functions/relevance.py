@@ -132,7 +132,7 @@ def _corpus_stats(terms: DataFrame) -> tuple[int, int]:
     return n_docs, int(row[1]) * 1000 // n_docs
 
 
-#: session-level corpus-stats memo keyed by (analyzed-plan semantic hash,
+#: session-level corpus-stats memo keyed by (input plan — see _plan_key,
 #: text_col): the BM25 family (x25 bm25_scores, x99 bm25_topk) pays the
 #: tokenize + blocking stats warm-up ONCE per (corpus, text_col) per
 #: session — exactly how a retrieval deployment amortizes its corpus
@@ -152,20 +152,32 @@ def _sql_str(s: str) -> str:
     whitespace-split tokens, but quotes/backslashes still need escaping)."""
     return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
-_CORPUS_MEMO: dict[
-    tuple[int, str, str], tuple[DataFrame, int, int, DataFrame, DataFrame]
-] = {}
+_CORPUS_MEMO: dict[tuple, tuple[DataFrame, int, int, DataFrame, DataFrame]] = {}
 _CORPUS_MEMO_MAX = 8
 
 
-def _plan_key(df: DataFrame) -> tuple[int, str]:
-    """Memo identity of an (assumed-immutable) input plan: the analyzed
-    plan's 32-bit semanticHash PLUS its canonicalized tree string — the
-    string disambiguates the (rare but possible) 32-bit hash collision
-    between two different corpora, which would otherwise silently serve the
-    wrong n_docs/avgdl as constant-folded literals."""
+def _plan_key(df: DataFrame) -> tuple:
+    """Memo identity of an input plan: the analyzed plan's 32-bit
+    semanticHash; its canonicalized tree string (a 32-bit hash collision
+    between two corpora would otherwise silently serve the wrong
+    n_docs/avgdl as constant-folded literals); and the sorted
+    ``(uri, size, mtime_ns)`` of every file the plan reads
+    (``df.inputFiles()``), so a file rewritten in place under the same path
+    is re-read, never served stale (the ``sources.edges._fingerprint``
+    rule).  A non-local file is keyed on its URI alone."""
+    import os
+    from urllib.parse import unquote, urlparse
+
+    files = []
+    for uri in sorted(df.inputFiles()):
+        u = urlparse(uri)
+        try:
+            st = os.stat(unquote(u.path)) if u.scheme in ("", "file") else None
+        except FileNotFoundError:  # deleted since the plan listed it
+            st = None
+        files.append((uri, st and st.st_size, st and st.st_mtime_ns))
     qe = df._jdf.queryExecution().analyzed()
-    return qe.semanticHash(), qe.canonicalized().toString()
+    return qe.semanticHash(), qe.canonicalized().toString(), tuple(files)
 
 
 def corpus_terms_stats(
@@ -174,10 +186,11 @@ def corpus_terms_stats(
     """The shared (cached_terms, n_docs, avgdl_milli, cached_df_table) for
     ``docs`` — memoized per (corpus plan, text_col) so repeated scorers in one
     session reuse one tokenize and one stats action.  The identity is the
-    ANALYZED plan's (semanticHash, canonicalized tree string): two reads of
-    the same parquet path key equal, a different source or projection does
-    not, and a 32-bit hash collision between different corpora cannot alias
-    (see _plan_key).
+    ANALYZED plan's (semanticHash, canonicalized tree string) plus its input
+    files' sizes and mtimes: two reads of the same unchanged parquet path
+    key equal, a different source or projection does not, a file rewritten
+    in place does not, and a 32-bit hash collision between different
+    corpora cannot alias (see _plan_key).
 
     The document-frequency table (term, df) is corpus statistics exactly like
     n_docs/avgdl — every family member (x25's idf + query derivation, x99's
@@ -191,6 +204,10 @@ def corpus_terms_stats(
     hit = _CORPUS_MEMO.get(key)
     if hit is not None:
         return (*hit[:3], hit[4])
+    # an entry for the same plan over since-rewritten files is stale, and
+    # its cached arrays would still match the new plan in the CacheManager
+    for old in [o for o in _CORPUS_MEMO if o[:2] == key[:2] and o[3] == text_col]:
+        _drop_corpus_entry(old)
     # What caches is the DOC-GRAIN token-array table, not the exploded
     # grouped stream (r11): the (doc_id, dl, term, tf) view is re-derived
     # map-side from the cached arrays per consumer (_TF_PAIRS — pure
@@ -221,32 +238,34 @@ def corpus_terms_stats(
         .cache()
     )
     while len(_CORPUS_MEMO) >= _CORPUS_MEMO_MAX:
-        oldest = next(iter(_CORPUS_MEMO))  # dicts iterate in insertion order
-        _, _, _, old_arrs, old_dftab = _CORPUS_MEMO.pop(oldest)
-        old_arrs.unpersist()
-        old_dftab.unpersist()
+        _drop_corpus_entry(next(iter(_CORPUS_MEMO)))  # oldest: insertion order
     _CORPUS_MEMO[key] = (terms, n_docs, avgdl_milli, arrs, dftab)
     return terms, n_docs, avgdl_milli, dftab
+
+
+def _drop_corpus_entry(key: tuple) -> None:
+    """Evict one corpus-stats entry and unpersist its cached tables."""
+    _, _, _, arrs, dftab = _CORPUS_MEMO.pop(key)
+    arrs.unpersist()
+    dftab.unpersist()
 
 
 def release_corpus_memo() -> None:
     """Unpersist and drop every memoized corpus-stats entry (bench calls this
     at pass boundaries so the first BM25-family query of a pass still pays
     the warm-up cold; tests call it to keep the fixture JVM lean)."""
-    for entry in _CORPUS_MEMO.values():
-        entry[3].unpersist()
-        entry[4].unpersist()
-    _CORPUS_MEMO.clear()
+    for key in list(_CORPUS_MEMO):
+        _drop_corpus_entry(key)
 
 
-#: session-level row-count memo keyed by the analyzed plan's semantic hash.
-#: A table's row count is CATALOG STATISTICS, not query work — a deployment's
-#: catalog knows it, and DuckDB reads it from parquet footers in microseconds
-#: — so callers that only need |T| of an immutable input (the hybrid leg
-#: selector, the lexical n_docs literal) shouldn't schedule a scan job per
-#: construction.  Assumes immutable input plans (the same assumption the
-#: edge store's memoized layout makes); tests reset via release_count_memo.
-_N_ROWS_MEMO: dict[tuple[int, str], int] = {}
+#: session-level row-count memo keyed by the input plan and its files'
+#: sizes and mtimes (_plan_key).  A table's row count is CATALOG
+#: STATISTICS, not query work — a deployment's catalog knows it, and DuckDB
+#: reads it from parquet footers in microseconds — so callers that only need
+#: |T| of an input (the hybrid leg selector, the lexical n_docs literal)
+#: shouldn't schedule a scan job per construction; tests reset via
+#: release_count_memo.
+_N_ROWS_MEMO: dict[tuple, int] = {}
 
 
 def cached_count(df: DataFrame) -> int:

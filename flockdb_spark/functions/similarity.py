@@ -8,28 +8,31 @@ not.  A 64-dim unit vector's quantized dot stays ≤ ~6.4e13, comfortably int64.
 
 Top-k ANN: one skeleton, a pruning stage plus an exact refine (the split of
 REPOSE, ICDE 2021, and of incremental top-k similarity search, EDBT 2020).
-Every Arrow-pass operator — ``brute_force_topk``, ``int8_ann_topk``,
-``pq_ann_topk``, ``pq_rerank_topk``, ``ivfpq_ann_topk``,
-``ivfpq_trained_ann_topk``, ``binary_ann_topk`` — is :func:`_ann_topk` plus
-a per-operator ``candidates`` callback:
+Every top-k operator — ``brute_force_topk``, ``int8_ann_topk``,
+``ivf_ann_topk``, ``lsh_ann_topk``, ``pq_ann_topk``, ``pq_rerank_topk``,
+``ivfpq_ann_topk``, ``ivfpq_trained_ann_topk``, ``binary_ann_topk`` — is
+:func:`_ann_topk` plus a per-operator ``candidates`` callback:
 
 1. one :func:`_collect_legs` job fetches the query vectors and any index
    seed rows; the operator's ``build`` turns them into driver state
-   (codebooks, ADC tables, probe cells, sketches), broadcast once;
+   (codebooks, ADC tables, probe cells, probe buckets, sketches),
+   broadcast once;
 2. one ``mapInArrow`` corpus pass: the callback scores each Arrow batch
-   (int64 GEMM, int8 GEMM, PQ/ADC lookups, cell-restricted residual ADC,
-   Hamming popcount) into (query, row, key) triples; the skeleton drops
+   (int64 GEMM, int8 GEMM, PQ/ADC lookups, exact dots of the rows in a
+   probed cell or bucket, cell-restricted residual ADC, Hamming popcount)
+   into (query, row, key) triples; the skeleton drops
    self-pairs and keeps each query's local top-k (:func:`_local_topk`);
 3. one query_id exchange ranks by (key, neighbor_id ASC) (:func:`_rank`);
    with a rerank the cut keeps the candidate count and re-ranks by the
    exact ``dot_micro2`` computed in the same pass.
 
 The shared index pieces are :func:`_pq_encode` (per-subspace argmin),
-:func:`_adc_tables`, :func:`_pq_train` (per-subspace Lloyd) and
-:func:`_cell_key` / :func:`_probe_cells` (coarse cells).  ``ivf_ann_topk``
-and ``lsh_ann_topk`` stay join-based — their candidate join runs in the JVM
-(LSH keeps pure column expressions: the bucket join is the 100 TB path when
-no broadcast matrix fits) — and share only :func:`_rank`.  Each ``*_sql``
+:func:`_adc_tables`, :func:`_pq_train` (per-subspace Lloyd),
+:func:`_cell_key` / :func:`_probe_cells` (coarse cells) and
+:func:`_lsh_buckets` / :func:`_lsh_probes` (hyperplane buckets).  The IVF
+and LSH filters test membership against the broadcast probe cells/buckets
+and compute the exact dot only for the surviving pairs
+(:func:`_row_dots`); no corpus-side index is materialized.  Each ``*_sql``
 function is the DuckDB twin the oracle gate compares against; the twins
 share no code with the engine.
 """
@@ -198,6 +201,15 @@ def _all_pairs(keys):
     return np.repeat(np.arange(n_q), n), np.tile(np.arange(n), n_q), keys.reshape(-1)
 
 
+def _row_dots(a, b):
+    """Exact int64 dot of each row of ``a`` with the same row of ``b`` —
+    row-wise over candidate pairs only, exact in float64 on the micro grid
+    (the :func:`_gemm53` bound)."""
+    import numpy as np
+
+    return np.einsum("ij,ij->i", a.astype(np.float64), b.astype(np.float64)).astype(np.int64)
+
+
 def _local_topk(qcol, ncol, key, k: int):
     """Indices of each query's first ``k`` rows under (key ASC, neighbor
     ASC) — one lexsort.  Exact: a row of the global top-k is in its own
@@ -249,8 +261,6 @@ def _ann_topk(
     dedup.release_caches convention).
 
     Output: (query_id, neighbor_id, key | dot_micro2[, nv], rank)."""
-    import numpy as np
-
     seed_rows: list[list] = []
     if query_rows is None:
         qids = [int(i) for i in query_ids]
@@ -280,11 +290,7 @@ def _ann_topk(
             qpos, row = qpos[sel], row[sel]
             cols = {"query_id": qids_np[qpos], "neighbor_id": ids[row], key: kcol[sel]}
             if rerank is not None:
-                # row-wise over ≤ rerank·|Q| winners; exact in float64 on
-                # the micro grid (the _gemm53 bound)
-                cols["dot_micro2"] = np.einsum(
-                    "ij,ij->i", v[row].astype(np.float64), qm[qpos].astype(np.float64)
-                ).astype(np.int64)
+                cols["dot_micro2"] = _row_dots(v[row], qm[qpos])
             if emit_vectors:
                 cols["nv"] = _list_array(v[row])
             yield pa.record_batch(cols)
@@ -447,37 +453,6 @@ def hyperplane_signature(
     return _bucket_of(_plane_sums(v, dims, planes, hash_mode, table))
 
 
-def hyperplane_probes(
-    vec_col, dims: int, planes: int, n_probe: int, hash_mode: str = "xxhash64",
-    table: int = 0,
-) -> F.Column:
-    """Multi-probe bucket set (array<long>): the base signature plus the
-    ``n_probe - 1`` single-bit flips with the smallest margin |v · h_p| — the
-    planes the vector sits closest to, i.e. the neighboring buckets most
-    likely to hold near neighbors the base bucket missed (Lv et al.,
-    multi-probe LSH, VLDB'07).  Pure column expressions."""
-    if planes == 0:
-        return F.array(F.lit(0).cast("long"))
-    v = F.col(vec_col) if isinstance(vec_col, str) else vec_col
-    sums = _plane_sums(v, dims, planes, hash_mode, table)
-    base = _bucket_of(sums)
-    # rank planes by |margin| ascending; struct sort is lexicographic
-    by_margin = F.array_sort(
-        F.array(
-            *[
-                F.struct(F.abs(s_p).alias("m"), F.lit(p).alias("p"))
-                for p, s_p in enumerate(sums)
-            ]
-        )
-    )
-    pow2 = F.array(*[F.lit(1 << p).cast("long") for p in range(planes)])
-    probes = [base]
-    for j in range(min(n_probe - 1, planes)):
-        flip_bit = F.element_at(pow2, F.element_at(by_margin, j + 1)["p"] + 1)
-        probes.append(base.bitwiseXOR(flip_bit))
-    return F.array_distinct(F.array(*probes))
-
-
 _H_CACHE: dict = {}
 
 
@@ -516,6 +491,34 @@ def hyperplane_matrix(spark, dims: int, planes: int, hash_mode: str, table: int 
                     H[p, r["i"]] = 1 if r[f"s{p}"] == 0 else -1
         _H_CACHE[key] = H
     return _H_CACHE[key]
+
+
+def _hyperplane_tables(
+    spark, dims: int, planes: int, hash_mode: str, n_tables: int, offset: int = 0
+):
+    """(n_tables, planes, dims) stack of :func:`hyperplane_matrix` for the
+    global tables ``offset … offset + n_tables − 1``."""
+    import numpy as np
+
+    return np.stack(
+        [hyperplane_matrix(spark, dims, planes, hash_mode, t + offset) for t in range(n_tables)]
+    )
+
+
+def _lsh_sums(x, h):
+    """(n, planes) exact signed sums ``x · h_p`` and the bucket each sign
+    pattern spells (bit p set ⇔ sum p > 0)."""
+    import numpy as np
+
+    sums = _gemm53(x, h.T)
+    return sums, ((sums > 0).astype(np.int64) << np.arange(h.shape[0])).sum(axis=1)
+
+
+def _lsh_buckets(x, hs):
+    """(n, n_tables) bucket of every row in every table of ``hs``."""
+    import numpy as np
+
+    return np.stack([_lsh_sums(x, h)[1] for h in hs], axis=1)
 
 
 def _np_sign(
@@ -564,14 +567,9 @@ def _np_sign(
     # multi-pass run signs with tables [p·L, (p+1)·L) of the uncapped run;
     # the emitted local `tbl` column stays [0, L) so per-pass bucket
     # grouping and first-collision masks are unchanged
-    hs = np.stack(
-        [
-            hyperplane_matrix(spark, dims, planes, hash_mode, t + table_offset)
-            for t in range(n_tables)
-        ]
+    bc = spark.sparkContext.broadcast(
+        _hyperplane_tables(spark, dims, planes, hash_mode, n_tables, table_offset)
     )
-    pow2 = (1 << np.arange(planes)).astype(np.int64)
-    bc = spark.sparkContext.broadcast(hs)
 
     def run(batches):
         import pyarrow as pa
@@ -585,10 +583,7 @@ def _np_sign(
             ids = pa.array(_i64_arrow(batch.column(0)))
             v = _quantize_arrow(batch.column(1))
             vec = _list_array(v)
-            bmat = np.empty((n, n_t), dtype=np.int64)
-            for t in range(n_t):
-                sums = _gemm53(v, h[t].T)  # (n, planes) int64 — exact
-                bmat[:, t] = ((sums > 0).astype(np.int64) * pow2).sum(axis=1)
+            bmat = _lsh_buckets(v, h)
             allb = None
             if carry_packed_buckets:
                 packed = np.zeros(n, dtype=np.uint64)
@@ -1005,6 +1000,17 @@ def _probe_cells(q_mat, c_mat, n_probe: int, by_d2: bool):
     return np.argsort(_cell_key(q_mat, c_mat, by_d2), axis=1, kind="stable")[:, :n_probe]
 
 
+def _ivf_candidates(v, batch, q_mat, index):
+    """Coarse-assign the batch (ties → lower cid) and pair each row with
+    every query that probes its cell, keyed by the exact dot."""
+    import numpy as np
+
+    c_mat, probe = index
+    cell = _cell_key(v, c_mat, False).argmin(axis=1)
+    qpos, _, row = np.nonzero(cell[None, None, :] == probe[:, :, None])
+    return qpos, row, _row_dots(v[row], q_mat[qpos])
+
+
 def ivf_ann_topk(
     emb: DataFrame,
     query_ids: list[int],
@@ -1013,7 +1019,6 @@ def ivf_ann_topk(
     n_probe: int = 4,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    persist_index: bool = False,
 ) -> DataFrame:
     """IVF (inverted-file) ANN: coarse-quantize the corpus into centroid
     cells, search only the query's ``n_probe`` nearest cells, exact-rerank
@@ -1021,85 +1026,26 @@ def ivf_ann_topk(
 
     The coarse quantizer here is deterministic — centroids are the embeddings
     of the ``n_centroids`` smallest ids — so results are oracle-checkable; a
-    production system k-means-trains them, but the scale-relevant plumbing
-    (broadcast centroids → one-pass assignment → cell-key join → rerank) is
-    identical.  Per query the join touches ~corpus·n_probe/n_centroids rows
-    instead of the full table; the assignment pass is one Arrow/numpy GEMM
-    per batch against the broadcast centroid matrix (a per-row expression
-    chain over n_centroids × dims interpreted lambdas measured 4× slower at
-    sf1.0), emitting each row's nearest cell; the query rows' n_probe probe
-    cells are computed driver-side from the same centroid matrix.
+    production system k-means-trains them (:func:`kmeans_fit`).  Plan shape:
+    :func:`_ann_topk` — one job collects the centroid seeds and the query
+    rows, the query probe cells are computed driver-side
+    (:func:`_probe_cells`, so ``n_probe`` clamps to the cell count), and the
+    one corpus pass assigns each Arrow batch's rows to their nearest cell
+    (dot-argmax, ties → lower cid) and scores only the rows in a query's
+    probed cells, with the exact integer dot.  ``ivfpq_ann_topk`` is the
+    same plan with residual-PQ scoring.
 
     Output: (query_id, neighbor_id, dot_micro2, rank) — same contract as
     ``brute_force_topk`` / ``lsh_ann_topk``."""
-    import numpy as np
 
-    qids = [int(i) for i in query_ids]
+    def build(seed_rows, q_rows, q_mat):
+        c_mat = _rows_matrix(seed_rows[0])[1]  # ascending cid (see _cell_key)
+        return c_mat, _probe_cells(q_mat, c_mat, n_probe, False)
 
-    # ONE construction job (r11, guide §2.4/§5): centroids (the n_centroids
-    # smallest ids) and the query vectors ride a single union collect, and
-    # the probe cells are computed DRIVER-SIDE with the same quantize →
-    # GEMM → stable-argsort math the executor assignment uses (the
-    # ivfpq_ann_topk pattern, x115-proven).  The old shape broadcast a
-    # FILTERED VIEW of the assignment mapInArrow output; filters cannot
-    # push through an opaque Python node, so the broadcast build paid a
-    # SECOND full-corpus assignment pass (or, with persist_index, the full
-    # cache materialization) before the corpus side even started.  One
-    # corpus pass remains — the algorithm's minimum.
-    cent_rows, q_rows = _collect_legs(
-        [
-            emb.orderBy(id_col).limit(n_centroids).select(id_col, vec_col),
-            emb.where(F.col(id_col).isin(qids)).select(id_col, vec_col),
-        ]
+    return _ann_topk(
+        emb.select(id_col, vec_col), query_ids, _ivf_candidates, "dot_micro2", k, desc=True,
+        seeds=[emb.orderBy(id_col).limit(n_centroids).select(id_col, vec_col)], build=build,
     )
-    c_ids, c_mat = _rows_matrix(cent_rows)  # ascending cid (see _cell_key)
-    bc = emb.sparkSession.sparkContext.broadcast((c_ids, c_mat))
-
-    def assign(batches):
-        import pyarrow as pa
-
-        cids, cmat = bc.value
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            ids = _i64_arrow(batch.column(0))
-            v = _quantize_arrow(batch.column(1))
-            cell = cids[_cell_key(v, cmat, False).argmin(axis=1)]
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(ids), _list_array(v), pa.array(cell)],
-                names=["vid", "ev", "cell"],
-            )
-
-    assigned = emb.select(id_col, vec_col).mapInArrow(
-        assign, "vid long, ev array<long>, cell long"
-    )
-    if persist_index:
-        # the assigned-cells table IS the IVF index — persist like any index
-        # (see lsh_ann_topk.persist_index)
-        assigned = assigned.cache()
-    corpus = assigned.select(F.col("vid").alias("neighbor_id"), "ev", "cell")
-    # driver-side probe cells: _np_quantize lands on the same micro grid as
-    # the executors' _quantize_arrow (brute_force_topk's scoring already
-    # relies on that equality), and the shared _cell_key reproduces the
-    # (cdot DESC, cid ASC) tie order — so each query's probe-cell set is
-    # bit-identical to the one a second corpus pass would produce
-    q_ids, q_mat = _rows_matrix(q_rows)
-    probe = _probe_cells(q_mat, c_mat, n_probe, False)
-    probe_rows = [
-        (int(q_ids[i]), [int(x) for x in q_mat[i]], int(c_ids[probe[i, p]]))
-        for i, p in np.ndindex(probe.shape)
-    ]
-    probes = F.broadcast(
-        emb.sparkSession.createDataFrame(
-            probe_rows, "query_id long, qv array<long>, cell long"
-        )
-    )
-    rerank = (
-        corpus.join(probes, "cell")
-        .where(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id", dot_q(F.col("qv"), F.col("ev")).alias("dot_micro2"))
-    )
-    return _rank(rerank, F.desc("dot_micro2"), k)
 
 
 def _subspace_d2(x, cw, n_subspaces: int, sub: int):
@@ -1458,6 +1404,37 @@ QUALIFY rank <= {k}
 """
 
 
+def _lsh_probes(q_mat, hs, n_probe: int):
+    """(n_tables, |Q|, ≤ n_probe) multi-probe bucket sets: per table, each
+    query's base bucket plus the ``n_probe − 1`` single-bit flips with the
+    smallest margin |q · h_p| (stable argsort: ties → lower plane) — the
+    planes the query sits closest to, i.e. the neighboring buckets most
+    likely to hold near neighbors the base bucket missed (Lv et al.,
+    multi-probe LSH, VLDB'07)."""
+    import numpy as np
+
+    out = []
+    for h in hs:
+        sums, base = _lsh_sums(q_mat, h)
+        flip = np.argsort(np.abs(sums), axis=1, kind="stable")[:, : max(n_probe - 1, 0)]
+        out.append(np.concatenate([base[:, None], base[:, None] ^ (1 << flip)], axis=1))
+    return np.stack(out)
+
+
+def _lsh_candidates(v, batch, q_mat, index):
+    """Pair each batch row with every query that probes its bucket in ANY
+    table (each pair once), keyed by the exact dot."""
+    import numpy as np
+
+    hs, probes = index
+    buckets = _lsh_buckets(v, hs)
+    hit = np.zeros((len(q_mat), len(v)), dtype=bool)
+    for t, probe in enumerate(probes):
+        hit |= (buckets[None, None, :, t] == probe[:, :, None]).any(axis=1)
+    qpos, row = np.nonzero(hit)
+    return qpos, row, _row_dots(v[row], q_mat[qpos])
+
+
 def lsh_ann_topk(
     emb: DataFrame,
     query_ids: list[int],
@@ -1469,21 +1446,23 @@ def lsh_ann_topk(
     hash_mode: str = "xxhash64",
     n_probe: int = 4,
     n_tables: int | None = None,
-    persist_index: bool = False,
     n_vectors: int | None = None,
     n_passes: int | None = None,
 ) -> DataFrame:
     """Bucketed ANN: exact ranking restricted to the query's LSH bucket(s).
 
-    At corpus scale the bucket join touches ~corpus·n_probe/2^planes rows
-    per query instead of the full table; recall is tunable via ``planes``
-    and ``n_probe`` — with ``n_probe > 1`` each query also probes the
-    buckets reached by flipping its smallest-margin hyperplane bits
-    (:func:`hyperplane_probes`), the standard multi-probe trade: probe
-    count buys recall without re-hashing the corpus; ``n_tables`` adds L
-    independent hyperplane sets (OR-amplification, recall 1-(1-p)^L) at L×
-    signing + candidate cost.  The corpus side stays signed ONCE per table
-    either way; only the tiny broadcast query side fans out.
+    Per query only the rows sharing one of its buckets are scored
+    (~corpus·n_probe·L/2^planes); recall is tunable via ``planes`` and
+    ``n_probe`` — with ``n_probe > 1`` each query also probes the buckets
+    reached by flipping its smallest-margin hyperplane bits
+    (:func:`_lsh_probes`), the standard multi-probe trade: probe count buys
+    recall without re-hashing the corpus; ``n_tables`` adds L independent
+    hyperplane sets (OR-amplification, recall 1-(1-p)^L) at L× signing
+    cost.  Plan shape: :func:`_ann_topk` — the query rows are signed
+    driver-side with the same ±1 tables as the corpus
+    (:func:`hyperplane_matrix`), and the one corpus pass signs each Arrow
+    batch (one int64 GEMM per table) and scores its rows in any probed
+    bucket with the exact integer dot.
 
     By default (``planes=None``/``n_tables=None``) the shape AUTO-SIZES to
     the corpus like :func:`lsh_neardup_pairs`: planes from
@@ -1497,7 +1476,9 @@ def lsh_ann_topk(
     volume stays ~n_probe·L·budget instead of n_probe·L·n/16.  Cheaper
     shapes (e.g. the single-table planes=6 n_probe=1 L=1 minimum, recall
     0.08) remain available explicitly when candidate volume must be
-    minimal."""
+    minimal.
+
+    Output: (query_id, neighbor_id, dot_micro2, rank)."""
     if planes is None:
         # callers that already counted the corpus (e.g. hybrid_rrf_topk's
         # leg selector) pass n_vectors so the auto shape costs zero jobs
@@ -1516,79 +1497,19 @@ def lsh_ann_topk(
     if n_passes is not None and n_passes > 1:
         # shape-dict compatibility with lsh_neardup_pairs' recovery: for
         # top-k the candidate volume is QUERY-bounded (|Q|·n_probe·budget
-        # per table), so extra passes fold into one signing job as extra
-        # tables — same seeds (global table index), same output as a
+        # per table), so extra passes fold into the one corpus pass as
+        # extra tables — same seeds (global table index), same output as a
         # chunked run, no peak-shuffle concern to chunk around
         n_tables = n_tables * int(n_passes)
 
-    # corpus signing: vectorized numpy GEMM path (the query side below stays
-    # in column expressions — it is broadcast-tiny and needs the per-plane
-    # margins for multi-probe)
-    if planes == 0:
-        sig = emb.select(
-            F.col(id_col).alias("neighbor_id"), quantized(vec_col).alias("ev")
-        ).select(
-            "neighbor_id", "ev", F.lit(0).alias("tbl"), F.lit(0).cast("long").alias("bucket")
-        )
-    else:
-        sig = _np_sign(
-            emb, id_col, vec_col, dims, planes, hash_mode, n_tables, "neighbor_id", "ev"
-        )
-    if persist_index:
-        # the signed corpus IS the index: persisting it is the production
-        # deployment shape (sign once at ingest, serve many queries) and the
-        # same treatment the edge store's memoized layout gets (store_for);
-        # repeat executions of this plan then measure query-over-index cost
-        sig = sig.cache()
-    qids = [int(i) for i in query_ids]
+    def build(_, q_rows, q_mat):
+        hs = _hyperplane_tables(emb.sparkSession, dims, planes, hash_mode, n_tables)
+        return hs, _lsh_probes(q_mat, hs, n_probe)
 
-    def tag_table(t: int):
-        # closure, not a default arg: pyspark counts lambda params strictly
-        return lambda b: F.struct(F.lit(t).alias("qtbl"), b.alias("qbucket"))
-
-    q = (
-        emb.where(F.col(id_col).isin(qids))
-        .select(F.col(id_col).alias("query_id"), quantized(vec_col).alias("qv"))
-        .select(
-            "query_id",
-            "qv",
-            F.explode(
-                F.flatten(
-                    F.array(
-                        *[
-                            F.transform(
-                                hyperplane_probes(
-                                    F.col("qv"), dims, planes, n_probe, hash_mode, t
-                                ),
-                                tag_table(t),
-                            )
-                            for t in range(n_tables)
-                        ]
-                    )
-                )
-            ).alias("_qb"),
-        )
-        .select("query_id", "qv", "_qb.qtbl", "_qb.qbucket")
+    return _ann_topk(
+        emb.select(id_col, vec_col), query_ids, _lsh_candidates, "dot_micro2", k,
+        desc=True, build=build,
     )
-    scored = (
-        sig.join(
-            F.broadcast(q),
-            (F.col("bucket") == F.col("qbucket")) & (F.col("tbl") == F.col("qtbl")),
-        )
-        .where(F.col("neighbor_id") != F.col("query_id"))
-        # a neighbor found via two probes/tables must rank once.  The dedup
-        # aggregate and the ranking window share ONE exchange: hash
-        # partitioning on query_id satisfies both the (query_id, neighbor_id)
-        # dedup's clustering requirement (subset rule) and the window's —
-        # without the explicit repartition Catalyst plans exchange(q, n) for
-        # the aggregate PLUS exchange(q) for the window (guide §2.4).
-        # Candidate volume per query is bucket-bounded (n_probe·L·budget), so
-        # one partition per query never sees corpus-sized input.
-        .repartition("query_id")
-        .dropDuplicates(["query_id", "neighbor_id"])
-        .select("query_id", "neighbor_id", dot_q(F.col("qv"), F.col("ev")).alias("dot_micro2"))
-    )
-    return _rank(scored, F.desc("dot_micro2"), k)
 
 
 def _np_int8(mat_micro):
@@ -1775,21 +1696,15 @@ def semantic_assign(
             import pyarrow as pa
 
             cmat = bc.value
-            cnorm = (cmat * cmat).sum(axis=1)  # |c|^2, int64-exact
             for batch in batches:
                 n_rows = batch.num_rows
                 if n_rows == 0:
                     continue
                 ids = _i64_arrow(batch.column(0))
                 v = _quantize_arrow(batch.column(1))
-                # |x-c|^2 = |x|^2 - 2 x·c + |c|^2, all int64-exact;
-                # argmin ties -> first occurrence = lowest cid (cmat rows
-                # are cid-ascending) — same rule as the expression path
-                d = (
-                    (v * v).sum(axis=1)[:, None]
-                    - 2 * _gemm53(v, cmat.T)
-                    + cnorm[None, :]
-                )
+                # |x-c|^2 = |x|^2 + (|c|^2 - 2 x·c), all int64-exact; ties
+                # -> lowest cid, the same rule as the expression path
+                d = _cell_key(v, cmat, True)
                 best = d.argmin(axis=1)
                 yield pa.record_batch(
                     {
@@ -1797,7 +1712,7 @@ def semantic_assign(
                         "ev": _list_array(v),
                         "cluster": pa.array(best.astype(np.int32)),
                         "dist_micro2": pa.array(
-                            d[np.arange(n_rows), best].astype(np.int64)
+                            (v * v).sum(axis=1) + d[np.arange(n_rows), best]
                         ),
                     }
                 )
@@ -1941,8 +1856,8 @@ def kmeans_fit(
     """Lloyd's k-means over the embedding corpus, exact integer arithmetic —
     the coarse-quantizer TRAINING step that ``ivf_ann_topk``'s docstring
     defers to production (its cells are seeded deterministically; this
-    trains them).  Composes the proven pieces: the same broadcast-matrix
-    Arrow/numpy GEMM as the IVF assignment pass, with per-batch numpy
+    trains them).  Composes the proven pieces: the IVF family's coarse-cell
+    rule (:func:`_cell_key`, argmin squared distance), with per-batch numpy
     partial sums whose reduce is the (cluster, dim) floor-mean —
     ``label_centroids``' update rule with the map-side combine made
     explicit.
@@ -1985,7 +1900,6 @@ def kmeans_fit(
             import pyarrow as pa
 
             cids, cmat = bc.value
-            cnorm = (cmat * cmat).sum(axis=1)  # |c|^2, int64-exact
             for batch in batches:
                 n = batch.num_rows
                 if n == 0:
@@ -1994,9 +1908,7 @@ def kmeans_fit(
                     batch.column(batch.schema.get_field_index("ev")), n
                 )
                 dims = v.shape[1]
-                # argmin |x-c|^2 == argmin(|c|^2 - 2 x·c); ties -> first
-                # (lowest cid: cmat rows are cid-ascending)
-                best = (cnorm[None, :] - 2 * _gemm53(v, cmat.T)).argmin(axis=1)
+                best = _cell_key(v, cmat, True).argmin(axis=1)
                 uniq = np.unique(best)
                 sums = np.stack([v[best == b].sum(axis=0) for b in uniq])
                 cnts = np.array([(best == b).sum() for b in uniq], dtype=np.int64)

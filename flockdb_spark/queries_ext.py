@@ -422,8 +422,7 @@ def x06(spark: SparkSession, sf_dir: str) -> DataFrame:
     # picks below ~8k vectors, pinned here so this oracle stays valid at
     # every sweep SF while the AUTO rule itself is gated by x109
     return similarity.lsh_ann_topk(
-        emb, ANN_QUERY_IDS, k=10, planes=4, n_tables=8,
-        hash_mode="portable", persist_index=True,
+        emb, ANN_QUERY_IDS, k=10, planes=4, n_tables=8, hash_mode="portable",
     )
 
 
@@ -468,7 +467,7 @@ QUALIFY rank <= 10
 )
 def x15(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _read(spark, sf_dir, "embeddings")
-    return similarity.ivf_ann_topk(emb, ANN_QUERY_IDS, k=10, n_centroids=16, n_probe=4, persist_index=True)
+    return similarity.ivf_ann_topk(emb, ANN_QUERY_IDS, k=10, n_centroids=16, n_probe=4)
 
 
 # ---------------------------------------------------------------------------
@@ -1201,7 +1200,6 @@ def x35(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_probe=_X35_NPROBE,
         n_tables=1,
         hash_mode="portable",
-        persist_index=True,
     )
 
 

@@ -439,7 +439,8 @@ def streaming_ivf_cell_index(
     population and smallest member id, folded incrementally as vectors
     arrive — the stats an ANN query router reads to pick probe budgets and
     a balance monitor watches for skewed cells (the always-on companion to
-    the batch ``ivf_ann_topk`` index build).
+    the batch ``ivf_ann_topk``, which assigns cells inside its one corpus
+    pass and keeps no index).
 
     Assignment is the IVF rule (argmax dot vs the broadcast centroid
     literals, ties to the lower cid) expressed ENTIRELY in JVM expressions

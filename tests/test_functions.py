@@ -233,6 +233,34 @@ def test_corpus_memo_df_table(spark):
     assert not dftab.storageLevel.useMemory
 
 
+def test_relevance_memos_rekey_when_inputs_rewritten_in_place(spark, tmp_path):
+    """The row-count and corpus-stats memos key on the input files' sizes
+    and mtimes, not only on the plan text: a parquet file rewritten in place
+    under the same path is re-read, never served stale."""
+    import pyarrow.parquet as pq
+    from conftest import SF_DIR
+
+    from flockdb_spark.functions import relevance
+
+    src = pq.read_table(f"{SF_DIR}/documents.parquet", columns=["doc_id", "text"])
+    path = str(tmp_path / "documents.parquet")
+    relevance.release_count_memo()
+    relevance.release_corpus_memo()
+    try:
+        pq.write_table(src, path)
+        docs = spark.read.parquet(path)
+        n = src.num_rows
+        assert relevance.cached_count(docs) == n
+        assert relevance.corpus_terms_stats(docs)[1] == n
+        pq.write_table(src.slice(0, 10), path)
+        docs = spark.read.parquet(path)
+        assert relevance.cached_count(docs) == 10
+        assert relevance.corpus_terms_stats(docs)[1] == 10
+    finally:
+        relevance.release_count_memo()
+        relevance.release_corpus_memo()
+
+
 def test_pagerank_and_x03_release_convention(spark):
     """r11: pagerank's loop-invariant e_deg cache and x03's signature cache
     follow the _flockdb_caches release convention (the bench releases them
@@ -2345,11 +2373,11 @@ def test_rerank_is_single_pass_no_joins(spark):
         assert plan.count("Exchange hashpartitioning(query_id") == 1, plan
 
 
-def test_hybrid_rrf_dense_leg_auto_switch(spark):
+def test_hybrid_rrf_dense_leg_auto_switch(spark, monkeypatch):
     """hybrid_rrf_topk's dense leg auto-selects: brute GEMM under the dot
-    budget, LSH-bucketed ANN above it — the plan must actually change at
-    the threshold (VERDICT r6 item 5)."""
-    from flockdb_spark.functions import relevance
+    budget, LSH-bucketed ANN above it — the selector must actually switch
+    legs at the threshold (VERDICT r6 item 5)."""
+    from flockdb_spark.functions import relevance, similarity
     from flockdb_spark.sources.edges import _read
 
     docs = _read(spark, "/root/testdata/sf0.001", "documents")
@@ -2360,12 +2388,21 @@ def test_hybrid_rrf_dense_leg_auto_switch(spark):
         df = relevance.hybrid_rrf_topk(docs, emb, qids, k=5, **kw)
         return df._jdf.queryExecution().executedPlan().toString()
 
+    lsh_calls = []
+    orig_lsh = similarity.lsh_ann_topk
+
+    def lsh_spy(*a, **kw):
+        lsh_calls.append(kw)
+        return orig_lsh(*a, **kw)
+
+    monkeypatch.setattr(similarity, "lsh_ann_topk", lsh_spy)
     # under the budget: brute-force leg — no LSH bucket column anywhere
     brute_plan = plan_of()
     assert "bucket" not in brute_plan
-    # budget 0 forces the ANN leg: the bucket-keyed probe join appears
-    ann_plan = plan_of(dense_brute_max_dots=0)
-    assert "bucket" in ann_plan
+    assert lsh_calls == []
+    # budget 0 forces the ANN leg: the selector calls lsh_ann_topk
+    plan_of(dense_brute_max_dots=0)
+    assert len(lsh_calls) == 1
 
     # and at gate scale the ANN auto-shape has recall 1.0, so the fused
     # output is identical either way
@@ -3123,7 +3160,7 @@ def test_arrow_pass_operators_exact_across_batch_boundaries(spark):
 
     emb = _read(spark, SF_DIR, "embeddings")
     qids = [0, 1, 2, 7, 42]
-    ops = ["brute", "int8", "pq", "pq_rerank", "ivfpq", "ivfpq_trained", "binary"]
+    ops = ["brute", "int8", "ivf", "lsh", "pq", "pq_rerank", "ivfpq", "ivfpq_trained", "binary"]
 
     def run_all():
         return {op: sorted(map(tuple, _ANN_OPS[op](emb, qids).collect())) for op in ops}
