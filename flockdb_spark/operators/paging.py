@@ -17,9 +17,12 @@ Differences from the reference, on purpose:
   trick (``SqlShard.scala:263-278``) is kept: one SQL statement over the
   caller's DataFrame serves the page *and* its opposite-direction probe,
   ``(… ORDER BY … LIMIT n+1) UNION ALL (… LIMIT 1)`` (the page's own extra
-  row is the same-direction probe).  A Start page is one Spark job; a cursor
-  page is two, because inside the UNION the page's top-k goes through a
-  single-partition exchange, which AQE runs as its own job.
+  row is the same-direction probe).  A Start page is one Spark job.  A
+  cursor page over a multi-partition ``df`` is two: inside the UNION the
+  page's top-k goes through a single-partition exchange, which AQE runs as
+  its own job.  Over a single-partition ``df`` (``FlockService``'s serving
+  view, whose edges are ``coalesce(1)``) the exchange is not needed and a
+  cursor page is one job too.
 
 At scale the page query is a filter + top-k (TakeOrderedAndProject on a
 Start page) — no shuffle of the data, no full materialization of the

@@ -7,6 +7,8 @@ select2 / select_edges / execute  (count and select are the deprecated pair).
 
 from __future__ import annotations
 
+import itertools
+import threading
 import time
 from dataclasses import dataclass
 
@@ -62,11 +64,59 @@ class EdgeQuery:
     cursor: Cursor | str = CURSOR_START
 
 
+_service_ids = itertools.count()
+
+
+def _leaves(nodes):
+    """Every leaf (Simple / WhereIn) of a list of query trees."""
+    stack = list(nodes)
+    while stack:
+        node = stack.pop()
+        kids = node.children()
+        if not kids:
+            yield node
+        stack.extend(kids)
+
+
 class FlockService:
     """Stateful facade over an EdgeStore.  Reads are pure; ``execute``
     replaces the store's DataFrames with the merged result (the reference ack's
     writes into a queue and applies them asynchronously, ``doc/blog.md:67-75``;
-    batch Spark applies them synchronously per call)."""
+    batch Spark applies them synchronously per call).
+
+    **The serving view.**  FlockDB's reads are paged lookups over one
+    adjacency list, not data-sized jobs (``doc/blog.md:90-93``).  Every read
+    the store's layout prunes — ``get``/``contains``, ``get_metadata``,
+    ``count2``, and each ``select2`` / ``select_edges[_batch]`` whose leaves
+    are all forward terms — runs in a child session of the store's
+    (``spark.newSession()``), which inherits every modifiable SQL conf the
+    parent has set and differs in one: ``spark.sql.codegen.wholeStage`` is
+    off.  It reads the store's tables re-bound into that session through
+    one global temp view per table, ``edges`` as ``coalesce(1)``.  Filters
+    push through the coalesce, so a lookup still reads one file; the flags
+    aggregation, the per-query page window and a cursor page's inner
+    ``LIMIT`` then need no exchange, so each read is one Spark job, and no
+    per-request whole-stage class is compiled (its inlined id literals
+    differ on every call; a forward cursor page compiled 4 classes per call
+    on the main session, 1 on the view).
+
+    Reads with a backward leaf keep the main session's plan: the layout does
+    not prune on ``destination_id``, so such a read scans the whole graph
+    partition, and on the view that data-sized scan would run in one task.
+    Measured at sf0.1 (local[4], fresh ids per call, the three routes
+    interleaved in one process), forcing backward reads onto the view took
+    a backward Start page 176 → 287 ms (a second run: 123 → 204 ms).  Its
+    cursor page and union came out 10–20% faster there at sf0.1, but each
+    is still a single-task scan of an unpruned partition, whose cost grows
+    with the data.  Routed as here, a top-degree forward union went
+    333 → 206 ms and a forward cursor page 284 → 215 ms.
+
+    The view is re-bound whenever ``store.edges`` / ``store.metadata``
+    change identity (a pure-Python check per read): after ``execute`` and
+    ``bulk_load`` and after any direct assignment.  The operators and the
+    main session's conf are untouched, and job groups, scheduler pools and
+    ``cancelJobGroup`` are SparkContext-wide, so classes and timeouts apply
+    to both sessions alike."""
 
     #: per-class timeout budget in seconds (O5, config/production.scala:26-35
     #: — Select 1s, Execute 1s, SelectCopy 15s, SelectModify 3s...).  Empty
@@ -77,6 +127,55 @@ class FlockService:
     def __init__(self, store: EdgeStore, timeouts: dict | None = None):
         self.store = store
         self.timeouts = dict(self.DEFAULT_TIMEOUTS if timeouts is None else timeouts)
+        parent = store.spark
+        self._session = parent.newSession()
+        # a new session starts from the SparkConf: confs the parent set at
+        # run time (the loaders' parquet NANOS_CONF among them) are copied
+        inherited = self._session.conf.getAll
+        for key, value in parent.conf.getAll.items():
+            if inherited.get(key) != value and parent.conf.isModifiable(key):
+                self._session.conf.set(key, value)
+        self._session.conf.set("spark.sql.codegen.wholeStage", "false")
+        self._views_db = parent.conf.get("spark.sql.globalTempDatabase")
+        self._views = f"flock_serving_{next(_service_ids)}"
+        self._bind_lock = threading.Lock()
+        self._bind()
+
+    def _bind(self) -> tuple[DataFrame, DataFrame, EdgeStore]:
+        """(Re)bind the serving view to the store's current tables.
+
+        ``_serving`` is ``(edges, metadata, view store)``: the tables bound
+        and the store over them, published as one attribute so a reader
+        never pairs one table's identity with another table's view.  The
+        lock keeps one bind's replace-then-read of the shared view names
+        from interleaving with another's."""
+        with self._bind_lock:
+            edges, metadata = self.store.edges, self.store.metadata
+            views = []
+            for df, table in ((edges, "edges"), (metadata, "metadata")):
+                view = f"{self._views}_{table}"
+                df.createOrReplaceGlobalTempView(view)
+                views.append(self._session.table(f"{self._views_db}.{view}"))
+            self._serving = (
+                edges, metadata, EdgeStore(self._session, views[0].coalesce(1), views[1])
+            )
+            return self._serving
+
+    def _store_for(self, forward: bool = True) -> EdgeStore:
+        """The serving view for a pruned read, else the main store."""
+        if not forward:
+            return self.store
+        edges, metadata, view = self._serving
+        if edges is not self.store.edges or metadata is not self.store.metadata:
+            view = self._bind()[2]
+        return view
+
+    def _swap(self, edges: DataFrame, metadata: DataFrame) -> None:
+        """Publish a write: new tables, no UNIQUE-index twin (graph.py's
+        contract — the twin describes the pre-write rows), view re-bound."""
+        self.store.edges, self.store.metadata = edges, metadata
+        self.store.by_src_dst = None
+        self._bind()
 
     def _classed(self, cls: str):
         """Scheduler-pool + job-group + timeout scope for one service action
@@ -94,7 +193,7 @@ class FlockService:
         ``None``.  Pass ``strict=True`` for reference-exact raising."""
         with self._classed(QueryClass.SELECT_SINGLE):
             rows = (
-                self.store.edges.where(
+                self._store_for().edges.where(
                     f"graph_id = {int(graph_id)} AND source_id = {_bigint(source_id)} "
                     f"AND destination_id = {_bigint(destination_id)}"
                 )
@@ -122,7 +221,7 @@ class FlockService:
         ``strict=True`` raises ``FlockException``."""
         with self._classed(QueryClass.SELECT_METADATA):
             rows = (
-                self.store.metadata.where(
+                self._store_for().metadata.where(
                     f"graph_id = {int(graph_id)} AND source_id = {_bigint(source_id)}"
                 )
                 .limit(1)
@@ -143,21 +242,26 @@ class FlockService:
         """R14/R18 — N independent compound paged queries
         (``EdgesService.scala:86-100``).  The whole batch of Start-cursor
         flattenable programs (any set-op tree over Simple / inline-IN leaves)
-        runs as ONE SQL statement: one scan and two exchanges, the flags
-        aggregation and the per-program page window
-        (``operators/batch.batch_flat_pages``, q23's plan shape); anything
-        else — leaf roots, mid-walk cursors, broadcast IN-lists — falls back
-        to one :func:`paginate` statement per program.  Pages are in the
-        reference's order, destination id DESC (``SqlShard.select``)."""
+        runs as ONE SQL statement: one scan, the flags aggregation and the
+        per-program page window (``operators/batch.batch_flat_pages``, q23's
+        plan shape); anything else — leaf roots, mid-walk cursors, broadcast
+        IN-lists — falls back to one :func:`paginate` statement per program.
+        A batch whose leaves are all forward terms runs on the serving view,
+        where the aggregation and the window need no exchange and each
+        statement is one Spark job; a batch with a backward leaf runs on the
+        main session (two exchanges, three jobs for the batched statement).
+        Pages are in the reference's order, destination id DESC
+        (``SqlShard.select``)."""
         if not queries:
             return []
         trees = [compile_select(q.operations) for q in queries]
+        store = self._store_for(all(leaf.term.forward for leaf in _leaves(trees)))
         cls = class_for_trees(trees, INLINE_IN_LIST_MAX)
         with self._classed(cls):
             batched = None
             if all(q.cursor == CURSOR_START for q in queries):
                 batched = batch_flat_pages(
-                    self.store, [(t, q.page_count) for t, q in zip(trees, queries)]
+                    store, [(t, q.page_count) for t, q in zip(trees, queries)]
                 )
             if batched is not None:
                 by_qix: dict[int, list[int]] = {i: [] for i in range(len(queries))}
@@ -175,7 +279,7 @@ class FlockService:
                 return out
             # set-op results are id-ordered; the id is its own sort key
             return [
-                paginate(tree.ids(self.store), "id", "id", q.page_count, q.cursor)
+                paginate(tree.ids(store), "id", "id", q.page_count, q.cursor)
                 for q, tree in zip(queries, trees)
             ]
 
@@ -201,9 +305,10 @@ class FlockService:
         cursor: Cursor | str,
     ) -> Page:
         node = Simple(term) if destination_ids is None else WhereIn(term, destination_ids)
+        store = self._store_for(term.forward)
         with self._classed(class_for_trees([node], INLINE_IN_LIST_MAX)):
             return paginate(
-                node.edges(self.store),
+                node.edges(store),
                 "position",
                 term.id_col,
                 count,
@@ -215,10 +320,13 @@ class FlockService:
         """The reference's REAL selectEdges signature — ``list<EdgeQuery>`` in
         one call (``Flockdb.thrift:158-160``; ``EdgesService.scala:102-119``
         loops the list).  The whole batch of Start-cursor queries runs as ONE
-        edge scan + one N·page-sized shuffle
+        edge scan and a per-query page window
         (``operators/batch.batch_edge_pages`` — q24's gated plan shape, the
         selectEdges twin of select2's q23 batcher); mid-walk cursors fall back
-        to one plan per query."""
+        to one plan per query.  An all-forward batch runs on the serving view
+        as one Spark job with no exchange; a batch with a backward term runs
+        on the main session, where the window takes one N·page-sized
+        shuffle."""
         if not queries:
             return []
         if not all(q.cursor == CURSOR_START for q in queries):
@@ -227,7 +335,8 @@ class FlockService:
                 for q in queries
             ]
         batched = batch_edge_pages(
-            self.store, [(q.term, q.destination_ids, q.count) for q in queries]
+            self._store_for(all(q.term.forward for q in queries)),
+            [(q.term, q.destination_ids, q.count) for q in queries],
         )
         by_qix: dict[int, list] = {i: [] for i in range(len(queries))}
         # Classify the whole batch by its heaviest member, exactly as the
@@ -270,9 +379,10 @@ class FlockService:
         lookups for all programs are batched into a single metadata collect
         (``Flockdb.thrift:154-156`` takes the whole program list at once)."""
         trees = [compile_select(p) for p in programs]
+        store = self._store_for()
         with self._classed(QueryClass.SELECT):
-            counts = fetch_leaf_counts(self.store, trees)
-            return [size_estimate(self.store, t, _counts=counts) for t in trees]
+            counts = fetch_leaf_counts(store, trees)
+            return [size_estimate(store, t, _counts=counts) for t in trees]
 
     count = count2  # deprecated alias (Flockdb.thrift:165)
 
@@ -313,11 +423,11 @@ class FlockService:
         """W8 — ``bulkUnsafeInsertEdges/Metadata`` (``SqlShard.scala:402-430``):
         plain append, bypassing LWW and count maintenance — the copy path's
         fast lane.  Use ``execute``/reconcile for anything user-facing."""
-        self.store.edges = self.store.edges.unionByName(edges).localCheckpoint(eager=True)
+        new_edges = self.store.edges.unionByName(edges).localCheckpoint(eager=True)
+        new_metadata = self.store.metadata
         if metadata is not None:
-            self.store.metadata = self.store.metadata.unionByName(metadata).localCheckpoint(
-                eager=True
-            )
+            new_metadata = new_metadata.unionByName(metadata).localCheckpoint(eager=True)
+        self._swap(new_edges, new_metadata)
 
     # -- writes (EdgesService.scala:121-129) --------------------------------
 
@@ -343,5 +453,4 @@ class FlockService:
             # metadata stale); the store is swapped only after both succeed.
             new_edges = edges.localCheckpoint(eager=True)
             new_metadata = metadata.localCheckpoint(eager=True)
-        self.store.edges = new_edges
-        self.store.metadata = new_metadata
+        self._swap(new_edges, new_metadata)

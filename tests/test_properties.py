@@ -426,3 +426,75 @@ def test_span_rewrite_conservation(spark):
                 matched += 1
         assert pos >= len(rebuilt.rstrip()) and matched == r["n_kept"], (
             r["doc_id"], rebuilt, orig_segs)
+
+
+# --- FlockService.select2 (serving view or main session) vs the join composition
+
+_rpn_leaf = st_.tuples(
+    st_.integers(min_value=1, max_value=5),                 # vertex
+    st_.booleans(),                                         # forward / backward
+    st_.one_of(                                             # Simple / WhereIn leaf
+        st_.none(), st_.lists(st_.integers(min_value=1, max_value=5), max_size=3).map(tuple)
+    ),
+)
+
+
+@st_.composite
+def rpn_strategy(draw, max_leaves=4):
+    """A random select2 program in RPN: 1..max_leaves leaves, folded
+    left-to-right by random set ops (a one-leaf program is a leaf root)."""
+    from flockdb_spark.plans.compiler import QueryTerm, SelectOperation, SelectOperationType as T
+
+    n = draw(st_.integers(min_value=1, max_value=max_leaves))
+    prog = []
+    for k in range(n):
+        src, fwd, dests = draw(_rpn_leaf)
+        prog.append(SelectOperation(T.SIMPLE_QUERY, QueryTerm(src, 1, fwd, dests)))
+        if k:
+            kind = draw(st_.sampled_from([T.INTERSECTION, T.UNION, T.DIFFERENCE]))
+            prog.append(SelectOperation(kind))
+    return prog
+
+
+@settings(max_examples=10, deadline=None)
+@given(st_.lists(rpn_strategy(), min_size=1, max_size=3), st_.integers(min_value=1, max_value=3))
+def test_service_select2_matches_join_composition_pages(spark, programs, page_count):
+    """Any batch of programs — forward and backward leaves, WhereIn leaves,
+    leaf roots — paged through ``FlockService.select2`` (the Start page,
+    then one cursor step per program) equals ``paginate`` over each tree's
+    join composition on the main store: rows and both cursors."""
+    import unittest.mock as mock
+
+    import flockdb_spark.operators.algebra as A
+    from conftest import edge_rows_df
+    from flockdb_spark.graph import EdgeStore
+    from flockdb_spark.operators.paging import CURSOR_START, Cursor, paginate
+    from flockdb_spark.plans.compiler import compile_select
+    from flockdb_spark.service import FlockService, SelectQuery
+
+    rows = [
+        (1, 1, 2, 0, 10, 0), (1, 1, 3, 0, 10, 0), (1, 2, 3, 0, 10, 0),
+        (1, 2, 4, 0, 10, 0), (1, 3, 1, 0, 10, 0), (1, 4, 1, 0, 10, 0),
+        (1, 4, 5, 0, 10, 2), (1, 5, 2, 0, 10, 0), (1, 1, 5, 0, 10, 1),
+        (1, 5, 4, 0, 10, 0), (1, 3, 4, 0, 10, 0), (1, 1, 4, 0, 10, 0),
+    ]
+    store = EdgeStore.from_edges(spark, edge_rows_df(spark, rows))
+    svc = FlockService(store)
+    trees = [compile_select(p) for p in programs]
+
+    def expected(tree, cursor):
+        with mock.patch.object(A, "flat_ids", lambda *_: None):  # join composition
+            return paginate(tree.ids(store), "id", "id", page_count, cursor)
+
+    starts = svc.select2([SelectQuery(p, page_count) for p in programs])
+    for prog, tree, start in zip(programs, trees, starts):
+        want = expected(tree, CURSOR_START)
+        assert (start.rows, start.next_cursor, start.prev_cursor) == (
+            want.rows, want.next_cursor, want.prev_cursor
+        ), prog
+        if isinstance(start.next_cursor, Cursor):
+            [got] = svc.select2([SelectQuery(prog, page_count, start.next_cursor)])
+            want = expected(tree, start.next_cursor)
+            assert (got.rows, got.next_cursor, got.prev_cursor) == (
+                want.rows, want.next_cursor, want.prev_cursor
+            ), prog

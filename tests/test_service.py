@@ -682,3 +682,247 @@ def test_extreme_and_negative_ids_render_as_exact_literals(spark):
     )
     assert meet.rows == []
     assert [i for _, i in union.rows] == sorted(py_ids(NEG), reverse=True)
+
+
+def _jobs_per_call(spark, monkeypatch):
+    """A job-group probe: ``count(call)`` is the number of Spark jobs the
+    service ran for one call, read from the groups its class scopes set."""
+    import flockdb_spark.service as svcmod
+
+    sc = spark.sparkContext
+    groups = []
+    orig = svcmod.query_class
+
+    class Probe:
+        def __init__(self, inner):
+            self.inner = inner
+
+        def __enter__(self):
+            out = self.inner.__enter__()
+            groups.append(sc.getLocalProperty("spark.jobGroup.id"))
+            return out
+
+        def __exit__(self, *a):
+            return self.inner.__exit__(*a)
+
+    monkeypatch.setattr(svcmod, "query_class", lambda s, cls, t=None: Probe(orig(s, cls, t)))
+
+    def count(call):
+        groups.clear()
+        call()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return sum(len(sc.statusTracker().getJobIdsForGroup(g)) for g in groups)
+
+    return count
+
+
+def test_pruned_reads_are_one_spark_job(svc, spark, monkeypatch):
+    """Every read the layout prunes runs on the serving view as ONE Spark
+    job: the flags aggregation, the page window and a cursor page's inner
+    LIMIT need no exchange over the coalesced edges.  A read with a
+    backward leaf keeps the main session's plan (a cursor page: 2 jobs)."""
+    from flockdb_spark.operators.algebra import Term
+    from flockdb_spark.service import EdgeQuery
+
+    count = _jobs_per_call(spark, monkeypatch)
+    S, I, U, D = (
+        SelectOperationType.SIMPLE_QUERY,
+        SelectOperationType.INTERSECTION,
+        SelectOperationType.UNION,
+        SelectOperationType.DIFFERENCE,
+    )
+
+    def program(kind, a, b, fwd=True):
+        return [
+            SelectOperation(S, QueryTerm(a, 1, fwd)),
+            SelectOperation(S, QueryTerm(b, 1, fwd)),
+            SelectOperation(kind),
+        ]
+
+    batch = [SelectQuery(program(k, 1, 2), page_count=1) for k in (I, U, D)]
+    first = svc.select2(batch)
+    assert isinstance(first[1].next_cursor, Cursor)
+    edge_page = svc.select_edges(1, 1, count=1)
+    back = [SelectOperation(S, QueryTerm(12, 1, False))]
+    [back_page] = svc.select2([SelectQuery(back, page_count=1)])
+    assert isinstance(back_page.next_cursor, Cursor)
+
+    jobs = {
+        "select2 batch": count(lambda: svc.select2(batch)),
+        "select2 cursor": count(
+            lambda: svc.select2([SelectQuery(program(U, 1, 2), 1, first[1].next_cursor)])
+        ),
+        "select_edges cursor": count(
+            lambda: svc.select_edges(1, 1, count=1, cursor=edge_page.next_cursor)
+        ),
+        "select_edges_batch": count(
+            lambda: svc.select_edges_batch(
+                [EdgeQuery(Term(1, 1), count=1), EdgeQuery(Term(1, 2), (11, 13), count=1)]
+            )
+        ),
+        "backward cursor": count(
+            lambda: svc.select2([SelectQuery(back, 1, back_page.next_cursor)])
+        ),
+    }
+    assert jobs == {
+        "select2 batch": 1,
+        "select2 cursor": 1,
+        "select_edges cursor": 1,
+        "select_edges_batch": 1,
+        "backward cursor": 2,
+    }
+
+
+def test_every_read_path_sees_writes(svc, spark):
+    """The serving view is re-bound on every store swap — ``execute``,
+    ``bulk_load`` and a direct ``store.edges =`` assignment — so point
+    reads, metadata, count2, select2 (batched, leaf and cursor pages),
+    select_edges (Start and cursor) and the batch all see the new rows."""
+    from flockdb_spark.operators.algebra import Term
+    from flockdb_spark.schema import METADATA_SCHEMA
+    from flockdb_spark.service import EdgeQuery
+
+    S, U = SelectOperationType.SIMPLE_QUERY, SelectOperationType.UNION
+
+    def reads(src, dest):
+        """What each read path says about the edge src -> dest in graph 1."""
+        union = [SelectOperation(S, QueryTerm(src, 1)), SelectOperation(S, QueryTerm(2, 1)),
+                 SelectOperation(U)]
+        leaf = [SelectOperation(S, QueryTerm(src, 1))]
+        [batched] = svc.select2([SelectQuery(union, page_count=1)])
+        [cursor] = svc.select2([SelectQuery(leaf, page_count=1, cursor=Cursor(2**62, 2**62))])
+        [edges] = svc.select_edges_batch([EdgeQuery(Term(1, src))])
+        back = svc.select_edges_batch([EdgeQuery(Term(1, dest, forward=False))])[0]
+        return {
+            "get": svc.get(src, 1, dest) is not None,
+            "contains": svc.contains(src, 1, dest),
+            "metadata": svc.get_metadata(src, 1) is not None,
+            "count2": svc.count2([leaf])[0] > 0,
+            "select2 batched": dest in [i for _, i in batched.rows],
+            "select2 leaf": dest in [i for _, i in svc.select2([SelectQuery(leaf)])[0].rows],
+            "select2 cursor": dest in [i for _, i in cursor.rows],
+            "select_edges": dest in [i for _, i in svc.select_edges(src, 1).rows],
+            "select_edges cursor": dest in [
+                i for _, i in svc.select_edges(src, 1, cursor=Cursor(2**62, 2**62)).rows
+            ],
+            "select_edges_batch": dest in [i for _, i in edges.rows],
+            "backward": src in [i for _, i in back.rows],
+        }
+
+    assert not any(reads(7, 999).values())
+    svc.execute([op(ExecuteOperationType.ADD, 7, (999,))], at=2000)
+    assert all(reads(7, 999).values()), reads(7, 999)
+
+    def metadata_row(src):
+        return spark.createDataFrame([(1, src, 1, 0, 100)], METADATA_SCHEMA)
+
+    # bulk_load appends edges and metadata without LWW or count maintenance
+    assert not any(reads(8, 888).values())
+    svc.bulk_load(edge_rows_df(spark, [(1, 8, 888, 5000, 100, 0)]), metadata_row(8))
+    assert all(reads(8, 888).values()), reads(8, 888)
+
+    # a direct assignment is picked up by the next read, with no explicit rebind
+    extra = edge_rows_df(spark, [(1, 9, 777, 5000, 100, 0)])
+    assert not any(reads(9, 777).values())
+    svc.store.edges = svc.store.edges.unionByName(extra)
+    svc.store.metadata = svc.store.metadata.unionByName(metadata_row(9))
+    assert all(reads(9, 777).values()), reads(9, 777)
+
+
+def test_serving_session_inherits_the_parent_conf(svc, spark):
+    """The serving view's session equals the store's session on every
+    modifiable SQL conf the parent has set, runtime sets included, and
+    differs only in whole-stage codegen; the parent's setting is unchanged."""
+    key = "spark.sql.codegen.wholeStage"
+    before = spark.conf.get(key)
+    spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "7mb")  # a runtime set
+    try:
+        child = FlockService(svc.store)._session
+        assert child is not spark
+        parent = spark.conf.getAll
+        inherited = child.conf.getAll
+        differs = {
+            k: (v, inherited.get(k))
+            for k, v in parent.items()
+            if spark.conf.isModifiable(k) and inherited.get(k) != v
+        }
+        assert set(differs) <= {key}, differs
+        assert inherited["spark.sql.adaptive.autoBroadcastJoinThreshold"] == "7mb"
+        assert child.conf.get(key) == "false"
+        assert spark.conf.get(key) == before
+    finally:
+        spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
+
+
+def test_writes_drop_the_stale_unique_twin(spark):
+    """graph.py's contract: a mutated store has no UNIQUE-index twin.
+    ``execute`` and ``bulk_load`` publish new tables, so q07 over the same
+    memoized store must rank the new edge, not serve the pre-write twin."""
+    from conftest import SF_DIR as sf_dir
+    from flockdb_spark.queries import params_for, q07, store_for
+
+    st = store_for(spark, sf_dir)
+    saved = (st.edges, st.metadata, st.by_src_dst)
+    assert st.by_src_dst is not None
+    first = int(params_for(spark, sf_dir)["first"])
+    try:
+        svc = FlockService(st)
+        svc.execute([op(ExecuteOperationType.ADD, first, (10**12,))], at=2_000_000_000)
+        assert st.by_src_dst is None
+        top = q07(spark, sf_dir).where(f"source_id = {first} AND rn = 1").collect()
+        assert [r["destination_id"] for r in top] == [10**12]
+
+        st.by_src_dst = saved[2]
+        svc.bulk_load(edge_rows_df(spark, [(1, first, 10**12 + 1, 1, 100, 0)]))
+        assert st.by_src_dst is None
+        top = q07(spark, sf_dir).where(f"source_id = {first} AND rn = 1").collect()
+        assert [r["destination_id"] for r in top] == [10**12 + 1]
+    finally:
+        st.edges, st.metadata, st.by_src_dst = saved
+
+
+def test_racing_rebinds_never_leave_a_stale_view(svc, monkeypatch):
+    """Two reads re-binding the serving view at once — one for the table it
+    saw, one for the table assigned since — must not leave the view
+    recording the newer table while serving the older.  The probe forces
+    the bad interleaving: the older bind replaces the shared view right
+    after the newer one did, before the newer reads it back, and publishes
+    first.  Binds hold a lock, so the older runs alone (its wait times
+    out) and the newer reads back its own table."""
+    import threading
+    import time
+
+    base = svc.store.edges
+    older, newer = (
+        base.selectExpr(*(f"{k} AS count" if c == "count" else c for c in base.columns))
+        for k in (1, 2)
+    )
+    older_binding, newer_replaced, older_replaced = (threading.Event() for _ in range(3))
+    replace = type(base).createOrReplaceGlobalTempView
+
+    def racing_replace(self, name):
+        if self is older and name.endswith("_edges"):
+            older_binding.set()
+            newer_replaced.wait(timeout=1)
+            replace(self, name)
+            older_replaced.set()
+        elif self is newer and name.endswith("_edges"):
+            replace(self, name)
+            newer_replaced.set()
+            older_replaced.wait(timeout=1)
+            time.sleep(0.2)  # the older bind publishes first
+        else:
+            replace(self, name)
+
+    monkeypatch.setattr(type(base), "createOrReplaceGlobalTempView", racing_replace)
+    svc.store.edges = older
+    first = threading.Thread(target=svc._store_for)
+    first.start()
+    assert older_binding.wait(timeout=60)
+    svc.store.edges = newer
+    second = threading.Thread(target=svc._store_for)
+    second.start()
+    for t in (first, second):
+        t.join(timeout=60)
+    assert not first.is_alive() and not second.is_alive()
+    assert svc.get(1, 1, 10)["count"] == 2
