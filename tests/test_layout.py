@@ -65,24 +65,38 @@ def test_zorder_key_locality_and_range(spark):
 def test_store_for_rebuilds_after_inputs_regenerated_in_place(spark, tmp_path, monkeypatch):
     """No silent staleness: the persisted layout and the in-process memos key
     on the inputs' fingerprint, so rewriting an input parquet in place (as
-    tools/gen_sfN.py does to its fixed output dir) rebuilds the store."""
+    tools/gen_sfN.py does to its fixed output dir) rebuilds the store — and
+    publishing the new layout removes the one it supersedes, but not the
+    layout of a different input that shares the basename, a scratch dir, or
+    a dir that records no input path."""
     import shutil
     import stat
 
     import pyarrow.parquet as pq
 
     from conftest import SF_DIR
-    from flockdb_spark.queries import params_for, store_for
+    from flockdb_spark.queries import _store_cache_dir, params_for, store_for
 
-    sf = tmp_path / "sf"
-    shutil.copytree(SF_DIR, sf)
-    for f in sf.iterdir():
-        f.chmod(f.stat().st_mode | stat.S_IWUSR)
-    sf.chmod(sf.stat().st_mode | stat.S_IWUSR)
-    monkeypatch.setenv("FLOCKDB_STORE_CACHE", str(tmp_path / "cache"))
+    sf, twin = tmp_path / "sf", tmp_path / "other" / "sf"
+    for d in (sf, twin):
+        shutil.copytree(SF_DIR, d)
+        for f in d.iterdir():
+            f.chmod(f.stat().st_mode | stat.S_IWUSR)
+        d.chmod(d.stat().st_mode | stat.S_IWUSR)
+    cache = tmp_path / "cache"
+    monkeypatch.setenv("FLOCKDB_STORE_CACHE", str(cache))
 
     before = store_for(spark, str(sf)).edges.count()
     params_before = params_for(spark, str(sf))
+    old_layout = _store_cache_dir(str(sf))
+    twin_layout = _store_cache_dir(str(twin))
+    store_for(spark, str(twin))
+    assert twin_layout.name.split("-")[0] == old_layout.name.split("-")[0]
+    scratch = cache / f"{old_layout.name}.tmp-1"
+    scratch.mkdir()
+    (scratch / "input_path").write_text(str(sf.resolve()))
+    (cache / "sf-unrecorded").mkdir()
+
     orders = pq.read_table(sf / "orders.parquet")
     kept = orders.num_rows // 2
     pq.write_table(orders.slice(0, kept), sf / "orders.parquet")
@@ -92,4 +106,8 @@ def test_store_for_rebuilds_after_inputs_regenerated_in_place(spark, tmp_path, m
     assert after.edges.count() == before - (orders.num_rows - kept)
     assert after.graph(1).count() == kept
     assert params_for(spark, str(sf)) is not params_before
-    assert len(list((tmp_path / "cache").iterdir())) == 2  # a new layout dir
+    new_layout = _store_cache_dir(str(sf))
+    assert new_layout != old_layout
+    assert sorted(cache.iterdir()) == sorted(
+        [new_layout, twin_layout, scratch, cache / "sf-unrecorded"]
+    )

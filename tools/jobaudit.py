@@ -1,8 +1,11 @@
 """Per-query job/stage/task audit — the status-tracker method VERDICT r7/r8
 used to separate job-floor cost from plan waste.  Runs each named query at
-the given SF exactly like bench.py's timed pass (noop sink, CONSTRUCT_IN_PASS
-rebuilt, index-persisted caches cleared) and prints one line per query:
-wall seconds, Spark job count, stage count, task count.
+the given SF exactly like bench.py's timed pass (noop sink, DataFrame built
+inside the timed section) three times and prints, per attempt, one line
+with wall seconds, construction seconds, Spark job, stage and task counts,
+then one line per Spark job from the AppStatusStore: job id, wall, task
+count and callsite/description — so a multi-job query's wall can be
+attributed to specific collects/broadcasts/actions instead of guessed at.
 
 Usage: python tools/jobaudit.py [sf_dir] query [query ...]
 """
@@ -21,7 +24,7 @@ def main() -> None:
     sf_dir = args.pop(0) if args and "/" in args[0] else "/root/testdata/sf0.1"
     names = args
 
-    from bench import CONSTRUCT_IN_PASS, INDEX_PERSISTED, shuffle_partitions_for
+    from bench import shuffle_partitions_for
     from flockdb_spark.session import get_spark
     import __spark_entry__ as entrymod
 
@@ -42,11 +45,10 @@ def main() -> None:
 
     tracker = spark.sparkContext.statusTracker()
     jsc = spark.sparkContext._jsc.sc().statusTracker()
+    store = spark.sparkContext._jsc.sc().statusStore()
 
     for name in names:
         for attempt in range(3):
-            if name in INDEX_PERSISTED:
-                spark.catalog.clearCache()
             # attempt-boundary hygiene, same as bench.py's pass boundary:
             # force a full GC OUTSIDE the timed section so ContextCleaner's
             # weak-ref shuffle/broadcast cleanup from the previous attempt
@@ -62,9 +64,10 @@ def main() -> None:
             spark.sparkContext.setJobGroup(group, group)
             t0 = time.perf_counter()
             df = qs[name](spark, sf_dir)
+            c1 = time.perf_counter()
             df.write.format("noop").mode("overwrite").save()
             dt = time.perf_counter() - t0
-            job_ids = list(tracker.getJobIdsForGroup(group) or [])
+            job_ids = sorted(tracker.getJobIdsForGroup(group) or [])
             n_stages = 0
             n_tasks = 0
             for j in job_ids:
@@ -77,10 +80,26 @@ def main() -> None:
                         n_stages += 1
                         n_tasks += si.get().numTasks()
             print(
-                f"{name} attempt={attempt} wall={dt:.3f}s jobs={len(job_ids)} "
-                f"stages={n_stages} tasks={n_tasks}",
+                f"{name} attempt={attempt} wall={dt:.3f}s construct={c1 - t0:.3f}s "
+                f"jobs={len(job_ids)} stages={n_stages} tasks={n_tasks}",
                 flush=True,
             )
+            for j in job_ids:
+                try:
+                    jd = store.job(j)
+                except Exception:
+                    continue
+                sub, comp = jd.submissionTime(), jd.completionTime()
+                ms = (
+                    comp.get().getTime() - sub.get().getTime()
+                    if sub.isDefined() and comp.isDefined()
+                    else -1
+                )
+                dtxt = " ".join(str(jd.name()).split())[:110]
+                print(
+                    f"  job {j:>4} {ms / 1000.0:7.3f}s tasks={jd.numTasks():>4} {dtxt}",
+                    flush=True,
+                )
             spark.sparkContext.setJobGroup("", "")
             for c in getattr(df, "_flockdb_caches", []):
                 c.unpersist()
