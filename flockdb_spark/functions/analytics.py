@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import tsutil
+from ..operators.classes import hold
 
 PR_UNIT = 1_000_000_000  # initial rank mass per node, in nano-units
 PR_DAMP_NUM, PR_DAMP_DEN = 85, 100  # d = 0.85
@@ -49,7 +50,7 @@ def pagerank(edges: DataFrame, graph_id: int, iterations: int = 3) -> DataFrame:
     # instead: read the edge table from write_optimized(buckets=N) and the
     # scan itself reports hash(source_id) with zero exchanges — see
     # test_plans.py's bucketed-join assertions.
-    e_deg = e.join(out_deg, "src").cache()
+    e_deg = hold(e.join(out_deg, "src").cache())
     base = PR_UNIT * (PR_DAMP_DEN - PR_DAMP_NUM) // PR_DAMP_DEN
     pr_of = f"({base} + (coalesce(in_sum, 0) * {PR_DAMP_NUM}) div {PR_DAMP_DEN})"
 
@@ -72,11 +73,9 @@ def pagerank(edges: DataFrame, graph_id: int, iterations: int = 3) -> DataFrame:
         .union(e_deg.select(F.col("dst").alias("node")))
         .distinct()
     )
-    out = nodes.join(contrib, "node", "left").select(
+    return nodes.join(contrib, "node", "left").select(
         F.col("node").alias("node_id"), F.expr(pr_of).cast("long").alias("pr")
     )
-    out._flockdb_caches = [e_deg]  # dedup.release_caches convention
-    return out
 
 
 def interaction_pairs(events: DataFrame) -> DataFrame:
@@ -136,11 +135,11 @@ def triangle_counts(pairs: DataFrame) -> DataFrame:
     # cached pre-partitioned on the wedge key: both wedge sides read the
     # SAME cached relation already hashed on `a`, so the self-join adds no
     # exchange at all
-    orient = ed.select(
+    orient = hold(ed.select(
         F.when(u_first, F.col("u")).otherwise(F.col("v")).alias("a"),
         F.when(u_first, F.col("v")).otherwise(F.col("u")).alias("b"),
         F.when(u_first, F.col("dv")).otherwise(F.col("du")).alias("db"),
-    ).repartition("a").cache()
+    ).repartition("a").cache())
     o1, o2 = orient.alias("o1"), orient.alias("o2")
     wedge = o1.join(
         o2,
@@ -153,13 +152,11 @@ def triangle_counts(pairs: DataFrame) -> DataFrame:
     tri = wedge.join(
         orient.select(F.col("a").alias("y"), F.col("b").alias("z")), ["y", "z"], "left_semi"
     )
-    out = (
+    return (
         tri.select(F.explode(F.array("x", "y", "z")).alias("node_id"))
         .groupBy("node_id")
         .agg(F.count(F.lit(1)).cast("long").alias("n_triangles"))
     )
-    out._flockdb_caches = [orient]  # dedup.release_caches convention
-    return out
 
 
 def link_prediction(
@@ -498,7 +495,7 @@ def personalized_pagerank(
         F.col("source_id").alias("src"), F.col("destination_id").alias("dst")
     )
     out_deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("out_deg"))
-    e_deg = e.join(out_deg, "src").cache()
+    e_deg = hold(e.join(out_deg, "src").cache())
     nodes = (
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))
@@ -521,9 +518,7 @@ def personalized_pagerank(
                 f" AS BIGINT)"
             ).alias("pr"),
         )
-    out = pr.select(F.col("node").alias("node_id"), "pr")
-    out._flockdb_caches = [e_deg]  # dedup.release_caches convention
-    return out
+    return pr.select(F.col("node").alias("node_id"), "pr")
 
 
 def personalized_pagerank_sql(

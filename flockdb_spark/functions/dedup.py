@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..operators.classes import hold
 from .text import tokens
 
 
@@ -89,14 +90,14 @@ def ngram_jaccard_pairs(
     configuration).
 
     Cache lifetime: with ``max_shingle_df`` set the shingle table is cached
-    (it feeds three consumers).  The cached frame is attached to the result
-    as ``result._flockdb_caches``; call :func:`release_caches` on the result
-    once it is materialized, or leave it to Spark's ContextCleaner (the cache
-    is dropped when the frame is garbage-collected driver-side).
+    (it feeds three consumers) and held by the active query scope
+    (:func:`flockdb_spark.operators.classes.hold`), which releases it when
+    the query ends; with no scope active it stays cached until
+    ``spark.catalog.clearCache()``.
     """
     sh = word_shingles(df, n, text_col, id_col)
     if max_shingle_df is not None:
-        sh = sh.cache()
+        sh = hold(sh.cache())
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
     pair_sh = sh
     if max_shingle_df is not None:
@@ -127,10 +128,7 @@ def ngram_jaccard_pairs(
         )
         .where(F.col("jaccard_micro") >= int(threshold * 1_000_000))
     )
-    out = out.select("a", "b", "n_inter", "n_union", "jaccard_micro")
-    if max_shingle_df is not None:
-        out._flockdb_caches = [sh]  # see docstring: release after materializing
-    return out
+    return out.select("a", "b", "n_inter", "n_union", "jaccard_micro")
 
 
 def containment_pairs(
@@ -160,7 +158,7 @@ def containment_pairs(
     """
     sh = word_shingles(df, n, text_col, id_col)
     if max_shingle_df is not None:
-        sh = sh.cache()
+        sh = hold(sh.cache())
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
     pair_sh = sh
     if max_shingle_df is not None:
@@ -181,7 +179,7 @@ def containment_pairs(
     )
     sa = sizes.select(F.col("doc_id").alias("a"), F.col("n_sh").alias("n_a"))
     sb = sizes.select(F.col("doc_id").alias("b"), F.col("n_sh").alias("n_b"))
-    out = (
+    return (
         inter.join(sa, "a")
         .join(sb, "b")
         .withColumn(
@@ -191,32 +189,6 @@ def containment_pairs(
         .where(F.col("containment_micro") >= int(threshold * 1_000_000))
         .select("a", "b", "n_inter", "n_a", "n_b", "containment_micro")
     )
-    if max_shingle_df is not None:
-        out._flockdb_caches = [sh]
-    return out
-
-
-def release_caches(df: DataFrame) -> None:
-    """Unpersist any internal caches attached to a result frame by the
-    functions in this module (safe only after the result is materialized).
-
-    The handle is a plain Python attribute, so ANY transformation
-    (``df.select(...)``, a join, a rename) returns a new frame WITHOUT it —
-    composed consumers must re-attach it with :func:`carry_caches` or the
-    cache silently lives until driver-side GC."""
-    for cached in getattr(df, "_flockdb_caches", []):
-        cached.unpersist()
-
-
-def carry_caches(dst: DataFrame, *srcs: DataFrame) -> DataFrame:
-    """Propagate the ``_flockdb_caches`` handles from ``srcs`` onto ``dst``
-    and return ``dst`` — use whenever a cached-producing result is further
-    transformed, so :func:`release_caches` on the final frame still finds
-    every internal cache."""
-    handles = [c for s in srcs for c in getattr(s, "_flockdb_caches", [])]
-    if handles:
-        dst._flockdb_caches = [*getattr(dst, "_flockdb_caches", []), *handles]
-    return dst
 
 
 # -- MinHash + LSH -----------------------------------------------------------

@@ -215,7 +215,7 @@ def corpus_terms_stats(
     # exchange of the build disappears AND the cache materializes ~10×
     # fewer rows.  Measured (this box): cold build + one scoring pass
     # 2.6 s → 1.95 s at sf0.1, 14.1–15.8 s → 11.0–13.1 s at sf1.0,
-    # bit-identical scores (probe in OPTIMIZATION_r11.md).  The blocking
+    # bit-identical scores (probe in docs/history/OPTIMIZATION_r11.md).  The blocking
     # stats action doubles as the cache materializer, exactly as before
     # (see _corpus_stats' rationale) — it is now a plain count+sum over
     # doc-grain rows (no groupBy(doc_id) needed: doc_id is unique, the

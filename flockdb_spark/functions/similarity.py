@@ -44,6 +44,8 @@ from collections.abc import Iterator
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..operators.classes import hold
+
 MICRO = 1_000_000
 
 
@@ -257,8 +259,9 @@ def _ann_topk(
     global cut keeps ``n`` candidates per query by key, and those re-rank
     by (dot_micro2 DESC, neighbor_id ASC) — two windows, one exchange.
     ``emit_vectors`` carries the winners' micro vectors as ``nv``.  The
-    broadcast rides the result as ``_flockdb_caches`` (the
-    dedup.release_caches convention).
+    broadcast is held by the active query scope
+    (:func:`flockdb_spark.operators.classes.hold`), which unpersists it when
+    the query ends.
 
     Output: (query_id, neighbor_id, key | dot_micro2[, nv], rank)."""
     seed_rows: list[list] = []
@@ -271,7 +274,7 @@ def _ann_topk(
         scan, build = scan.limit(0), None
     q_ids, q_mat = _rows_matrix(query_rows)
     state = build(seed_rows, query_rows, q_mat) if build else None
-    bc = scan.sparkSession.sparkContext.broadcast((q_ids, q_mat, state))
+    bc = hold(scan.sparkSession.sparkContext.broadcast((q_ids, q_mat, state)))
     cut = k if rerank is None else rerank
 
     def score(batches):
@@ -300,12 +303,9 @@ def _ann_topk(
     scored = scan.mapInArrow(score, schema)
     order = F.desc(key) if desc else F.asc(key)
     if rerank is None:
-        out = _rank(scored, order, k)
-    else:
-        cand = _rank(scored, order, rerank).select("query_id", "neighbor_id", "dot_micro2")
-        out = _rank(cand, F.desc("dot_micro2"), k)
-    out._flockdb_caches = [bc]
-    return out
+        return _rank(scored, order, k)
+    cand = _rank(scored, order, rerank).select("query_id", "neighbor_id", "dot_micro2")
+    return _rank(cand, F.desc("dot_micro2"), k)
 
 
 def brute_force_topk(

@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .. import tsutil
+from ..operators.classes import hold
 
 #: dyadic quartile grid — exact in binary floating point, so Spark's
 #: ``percentile`` and DuckDB's ``quantile_cont`` agree to the last bit
@@ -366,8 +367,8 @@ def vocab_drift(
             .agg(F.count(F.lit(1)).cast("long").alias("c"))
         )
 
-    ca = counts(docs_a).withColumnRenamed("c", "c_a").cache()
-    cb = counts(docs_b).withColumnRenamed("c", "c_b").cache()
+    ca = hold(counts(docs_a).withColumnRenamed("c", "c_a").cache())
+    cb = hold(counts(docs_b).withColumnRenamed("c", "c_b").cache())
     # the totals ride a broadcast 1-row cross join (aggregated off the
     # cached count tables, vocabulary-sized) — no blocking driver pull, the
     # whole monitor is one lazy plan / one Spark job
@@ -398,14 +399,12 @@ def vocab_drift(
         .orderBy(F.desc("drift_micro"), F.asc("term"))
         .limit(k)
     )
-    out = j.withColumn(
+    return j.withColumn(
         "rnk",
         F.row_number().over(
             Window.orderBy(F.desc("drift_micro"), F.asc("term"))
         ).cast("long"),
     )
-    out._flockdb_caches = [ca, cb]
-    return out
 
 
 def vocab_drift_single_scan(
@@ -435,7 +434,7 @@ def vocab_drift_single_scan(
     from .text import tokens
 
     s = side if not isinstance(side, str) else F.col(side)
-    counts = (
+    counts = hold(
         docs.select(s.cast("int").alias("_side"), F.explode(tokens(text_col)).alias("term"))
         .groupBy("term")
         .agg(
@@ -465,14 +464,12 @@ def vocab_drift_single_scan(
         .orderBy(F.desc("drift_micro"), F.asc("term"))
         .limit(k)
     )
-    out = j.withColumn(
+    return j.withColumn(
         "rnk",
         F.row_number().over(
             Window.orderBy(F.desc("drift_micro"), F.asc("term"))
         ).cast("long"),
     )
-    out._flockdb_caches = [counts]
-    return out
 
 
 def vocab_drift_sql(k: int = 20) -> str:

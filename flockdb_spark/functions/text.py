@@ -13,6 +13,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..operators.classes import hold
+
 #: marker stopwords per language for the n-gram/stopword language-ID heuristic
 LANG_MARKERS = {
     "en": ("the", "a", "of", "and", "to"),
@@ -349,18 +351,17 @@ def boilerplate_coverage(
     n_boiler, so the old separate per-doc totals aggregation AND the final
     doc-keyed join (whose small-SF plan broadcast a DOC-GRAIN table — an
     estimate that degrades to a corpus SMJ at scale) are gone.  No driver
-    materialization; no pair blow-up, so no skew cap needed.  Cache
-    lifetime follows the ``dedup`` convention: the cached frame rides on
-    the result as ``_flockdb_caches`` — release with
-    :func:`flockdb_spark.functions.dedup.release_caches` once materialized,
-    or leave it to the ContextCleaner.
+    materialization; no pair blow-up, so no skew cap needed.  The cached
+    frame is held by the active query scope
+    (:func:`flockdb_spark.operators.classes.hold`), which releases it when
+    the query ends, however the result is composed afterwards.
 
     Output: (doc_id, n_grams, n_boiler, boiler_micro) — integers only.
     """
     from pyspark.ml.feature import NGram
 
     tok = docs.select(F.col("doc_id"), tokens(text_col).alias("_w"))
-    arrs = (
+    arrs = hold(
         NGram(n=n, inputCol="_w", outputCol="_g")
         .transform(tok)
         .select("doc_id", F.array_distinct("_g").alias("_grams"))
@@ -373,7 +374,7 @@ def boilerplate_coverage(
         .where(F.col("df") >= min_docs)
         .select("shingle", F.lit(1).alias("_b"))
     )
-    out = (
+    return (
         sh.join(boiler, "shingle", "left")
         .groupBy("doc_id")
         .agg(
@@ -387,8 +388,6 @@ def boilerplate_coverage(
             F.expr("n_boiler * 1000000 div n_grams").alias("boiler_micro"),
         )
     )
-    out._flockdb_caches = [arrs]  # release after materializing (see docstring)
-    return out
 
 
 def boilerplate_coverage_sql(n: int = 5, min_docs: int = 3) -> str:
@@ -619,8 +618,8 @@ def bigram_surprisal(
     join is keyed on the bigram and reuses that partitioning; one final
     agg back to doc grain.  The count table is corpus-sized — it stays a
     shuffle join (broadcasting it would assume a small vocabulary).  The
-    cached occurrence stream is attached as ``_flockdb_caches``
-    (dedup.release_caches convention).  A doc-grain pre-aggregation
+    cached occurrence stream is held by the active query scope
+    (:func:`flockdb_spark.operators.classes.hold`).  A doc-grain pre-aggregation
     ``(doc_id, pair, m)`` was measured and REJECTED: natural text has
     few doc-local repeat bigrams, so the extra full-width shuffle buys
     no row reduction (2× slower at sf1.0).
@@ -648,7 +647,7 @@ def bigram_surprisal(
         docs.select("doc_id", tokens(text_col).alias("_w"))
         .select("doc_id", F.explode(pairs).alias("pair"))
     )
-    bg = bg.cache()
+    bg = hold(bg.cache())
     counts = bg.groupBy("pair").agg(F.count(F.lit(1)).alias("c"))
     total = counts.agg(F.sum("c").alias("n")).select("n")
     # the 1-row N broadcast deliberately joins the STREAM here (not the
@@ -657,7 +656,7 @@ def bigram_surprisal(
     # ReusedExchange of bg's shuffle — measured 1.9x slower at sf1.0
     # (3.66 s vs 1.94 s min-of-5); the stream-side BNLJ tax is the cheaper
     # of the two effects on this plan
-    out = (
+    return (
         bg.join(counts, "pair")
         .join(F.broadcast(total))
         .groupBy("doc_id")
@@ -671,8 +670,6 @@ def bigram_surprisal(
             ).alias("surprisal_micro"),
         )
     )
-    out._flockdb_caches = [bg]  # released by the caller post-materialization
-    return out
 
 
 def bigram_surprisal_sql() -> str:
@@ -1192,9 +1189,10 @@ def heavy_hitters(
     re-derives map-side from cache on each pass, and the doc-grain cache
     is ~an order of magnitude fewer rows to materialize — measured 9.1 s
     → 4.4 s steady at sf3.0 together with the depth change below.  The
-    cache handle rides on the result as ``_flockdb_caches`` (the dedup.py
-    convention) so callers release it after materialization; at 100 TB
-    use a disk-backed storage level or accept the second scan.
+    cache is held by the active query scope
+    (:func:`flockdb_spark.operators.classes.hold`), which releases it when
+    the query ends; at 100 TB use a disk-backed storage level or accept
+    the second scan.
 
     Default sketch shape is depth=1 × width=1024 (r11; was 2×512, the
     textbook's 4×256): the sketch pass fans every token out ``depth``×
@@ -1215,7 +1213,7 @@ def heavy_hitters(
             est = 1 << 62
         strategy = "sketch" if est >= sketch_min_bytes else "exact"
     if strategy == "exact":
-        counts = (
+        counts = hold(
             docs.select(F.explode(tokens(text_col)).alias("word"))
             .groupBy("word")
             .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
@@ -1225,13 +1223,11 @@ def heavy_hitters(
         # branch via the 'auto' small-input route)
         total = int(counts.agg(F.coalesce(F.sum("cnt"), F.lit(0))).first()[0])
         thr = max(total * per_mille // 1000, 1)
-        out = counts.where(F.col("cnt") >= thr)
-        out._flockdb_caches = [counts]
-        return out
+        return counts.where(F.col("cnt") >= thr)
     if strategy != "sketch":
         raise ValueError(f"unknown strategy {strategy!r}")
 
-    arrs = docs.select(tokens(text_col).alias("_w")).cache()
+    arrs = hold(docs.select(tokens(text_col).alias("_w")).cache())
     toks = arrs.select(F.explode("_w").alias("word"))
 
     fp = portable_hash("word")
@@ -1282,14 +1278,12 @@ def heavy_hitters(
         for r in range(depth)
     ]
     est = ests[0] if len(ests) == 1 else F.least(*ests)
-    out = (
+    return (
         probed.where(est >= thr)
         .groupBy("word")
         .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
         .where(F.col("cnt") >= thr)
     )
-    out._flockdb_caches = [arrs]  # released by the caller post-materialization
-    return out
 
 
 def heavy_hitters_sql(per_mille: int = 10, table: str = "documents") -> str:
@@ -1552,21 +1546,19 @@ def kneser_ney_bigrams(docs: DataFrame, text_col: str = "text") -> DataFrame:
 
     Output: (w1, w2, c, p_kn_micro).
     """
-    c12 = _bigram_type_counts(docs, text_col)
-    out = _kn_from_c12(c12)
-    out._flockdb_caches = [c12]  # dedup.release_caches convention
-    return out
+    return _kn_from_c12(_bigram_type_counts(docs, text_col))
 
 
 def _bigram_type_counts(docs: DataFrame, text_col: str) -> DataFrame:
-    """Corpus → cached bigram-type table (w1, w2, c).  Cached because every
-    KN marginal (left, continuation, total) re-aggregates FROM this table —
-    without the cache each marginal would replay the corpus-wide bigram
-    aggregation instead of re-reading the vocabulary-sized type table."""
+    """Corpus → cached bigram-type table (w1, w2, c), held by the active
+    query scope.  Cached because every KN marginal (left, continuation,
+    total) re-aggregates FROM this table — without the cache each marginal
+    would replay the corpus-wide bigram aggregation instead of re-reading
+    the vocabulary-sized type table."""
     bg = _bigram_pairs(docs, text_col)
-    return bg.groupBy("w1", "w2").agg(
+    return hold(bg.groupBy("w1", "w2").agg(
         F.count(F.lit(1)).cast("long").alias("c")
-    ).cache()
+    ).cache())
 
 
 def _kn_from_c12(c12: DataFrame) -> DataFrame:
@@ -1686,14 +1678,12 @@ def kn_surprisal(
             ).alias("p"),
         )
     )
-    out = joined.groupBy("doc_id").agg(
+    return joined.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_bigrams"),
         F.expr("sum(1000000000000 div p) div count(*)")
         .cast("long")
         .alias("kn_surprisal"),
     )
-    out._flockdb_caches = [c12]  # dedup.release_caches convention
-    return out
 
 
 def kn_surprisal_sql(
@@ -1796,11 +1786,9 @@ def collocations(
             .alias("lift_micro"),
         )
     )
-    out = scored.orderBy(
+    return scored.orderBy(
         F.desc("lift_micro"), F.asc("w1"), F.asc("w2")
     ).limit(top_k)
-    out._flockdb_caches = [c12]  # dedup.release_caches convention
-    return out
 
 
 def collocations_sql(

@@ -19,6 +19,10 @@ service action:
   ``SqlQueryTimeoutException`` path.  Timeouts are DISABLED by default
   locally (the reference's 1s budgets are per-MySQL-shard numbers, not
   Spark-job numbers); a deployment sets ``FlockService.timeouts``.
+- **per-query resources** → a :class:`QueryScope`: every intermediate cache
+  an operator creates (a cached DataFrame, a Broadcast) is registered with
+  :func:`hold` and released when the query's scope ends, so a later
+  ``.select()`` or join on the result can no longer lose it.
 """
 
 from __future__ import annotations
@@ -26,6 +30,7 @@ from __future__ import annotations
 import itertools
 import threading
 from contextlib import contextmanager
+from contextvars import ContextVar
 
 
 class QueryClass:
@@ -65,11 +70,59 @@ class FlockTimeoutException(Exception):
     (``shards/SqlShard.scala``'s timeout rescue path)."""
 
 
+_ACTIVE: ContextVar["QueryScope | None"] = ContextVar("flockdb_query_scope", default=None)
+
+
+class QueryScope:
+    """The intermediate caches of one query.  :meth:`active` makes the scope
+    the innermost one of the current thread (a ``ContextVar``: a new thread
+    starts with none, so concurrent service calls stay independent); while
+    it is active, :func:`hold` registers each cache an operator creates.
+    :meth:`release` unpersists them, blocking, DataFrames and broadcasts
+    alike, and never destroys a broadcast: a released frame still
+    re-executes (its caches recompute, its broadcasts re-ship lazily).
+
+    Activation and release are separate so one scope can span a frame's
+    construction and several executions (bench.py builds a query once and
+    releases its caches after each pass); :func:`query_class` pairs them."""
+
+    def __init__(self) -> None:
+        self.held: list = []
+
+    @contextmanager
+    def active(self):
+        token = _ACTIVE.set(self)
+        try:
+            yield self
+        finally:
+            _ACTIVE.reset(token)
+
+    def release(self) -> None:
+        held, self.held = self.held, []
+        for x in held:
+            x.unpersist(True)
+
+
+def hold(x):
+    """Register ``x`` (a cached DataFrame or a Broadcast) with the innermost
+    active :class:`QueryScope` and return it.  With no scope active this is a
+    no-op: a cached DataFrame then stays in Spark's CacheManager until
+    ``spark.catalog.clearCache()`` (the CacheManager references it, so
+    Spark's ContextCleaner never drops it), and a broadcast keeps its blocks
+    until the driver drops its last reference to it."""
+    scope = _ACTIVE.get()
+    if scope is not None:
+        scope.held.append(x)
+    return x
+
+
 @contextmanager
 def query_class(spark, cls: str, timeout: float | None = None):
     """Tag every Spark job launched in this block with the class's scheduler
     pool and a cancellable job group; cancel the group (and raise
     :class:`FlockTimeoutException`) if ``timeout`` seconds elapse first.
+    The block runs in a fresh :class:`QueryScope`, which it yields and
+    releases on exit, the timeout path included.
 
     Local properties are thread-local in Spark, so concurrent service calls
     on different threads classify independently — the same isolation the
@@ -92,8 +145,10 @@ def query_class(spark, cls: str, timeout: float | None = None):
         timer = threading.Timer(timeout, _cancel)
         timer.daemon = True
         timer.start()
+    scope = QueryScope()
     try:
-        yield
+        with scope.active():
+            yield scope
         if fired.is_set():
             raise FlockTimeoutException(f"{cls} exceeded {timeout}s")
     except FlockTimeoutException:
@@ -109,6 +164,7 @@ def query_class(spark, cls: str, timeout: float | None = None):
         sc.setLocalProperty("spark.jobGroup.id", prev_group)
         sc.setLocalProperty("spark.job.description", prev_desc)
         sc.setLocalProperty("spark.job.interruptOnCancel", prev_interrupt)
+        scope.release()
 
 
 def class_for_trees(trees, small_max: int) -> str:

@@ -20,6 +20,7 @@ from .functions import (
     splits, stats, text,
 )
 from . import tsutil
+from .operators.classes import hold
 from .queries import ORACLES, query, store_for
 from .sources.edges import _read, parquet_nrows, with_fixture_ctes
 from .sources.layout import zorder_key_sql
@@ -200,16 +201,14 @@ def x03(spark: SparkSession, sf_dir: str) -> DataFrame:
     8 bands) while the natural j<0.1 pairs stay out; the oracle re-derives
     the same signatures, buckets, and match counts in SQL."""
     corpus = _planted_corpus(spark, sf_dir, drop_words=2)
-    sig = dedup.minhash_signatures(
+    sig = hold(dedup.minhash_signatures(
         corpus, num_hashes=_NH, hash_mode="portable"
-    ).cache()
+    ).cache())
     pairs = dedup.minhash_lsh_candidates(
         corpus, num_hashes=_NH, bands=_BANDS, sig=sig, hash_mode="portable"
     )
     est = dedup.minhash_estimate_jaccard(corpus, pairs, num_hashes=_NH, sig=sig)
-    out = est.select("a", "b", "n_matches", "est_jaccard_micro")
-    out._flockdb_caches = [sig]  # dedup.release_caches convention
-    return out
+    return est.select("a", "b", "n_matches", "est_jaccard_micro")
 
 
 _PH_FEATURE = (
@@ -1271,11 +1270,9 @@ def x38(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb, threshold=_X38_THRESHOLD, planes=_X18_PLANES, hash_mode="portable",
         n_tables=1,
     )
-    out = dedup.resolve_duplicates(pairs.select("a", "b")).withColumnRenamed(
+    return dedup.resolve_duplicates(pairs.select("a", "b")).withColumnRenamed(
         "doc_id", "vec_id"
     )
-    # .select() severed pairs' cache handle — re-attach so release_caches works
-    return dedup.carry_caches(out, pairs)
 
 
 # ---------------------------------------------------------------------------

@@ -5,7 +5,21 @@ import pytest
 from pyspark.sql import functions as F
 
 from flockdb_spark.functions import analytics, dedup, multimodal, similarity, text
+from flockdb_spark.operators.classes import QueryClass, query_class
 from conftest import edge_rows_df
+
+
+def scoped(spark):
+    """The query scope every operator call below runs in: it holds the
+    caches the operator creates and releases them on exit."""
+    return query_class(spark, QueryClass.SELECT_COPY)
+
+
+def held_by(spark, build):
+    """What the query scope holds after ``build()`` (released on return)."""
+    with scoped(spark) as scope:
+        build()
+        return list(scope.held)
 
 
 @pytest.fixture(scope="module")
@@ -263,20 +277,20 @@ def test_relevance_memos_rekey_when_inputs_rewritten_in_place(spark, tmp_path):
 
 def test_pagerank_and_x03_release_convention(spark):
     """r11: pagerank's loop-invariant e_deg cache and x03's signature cache
-    follow the _flockdb_caches release convention (the bench releases them
-    post-query instead of leaking them across ~20 bench lines)."""
+    are held by the query scope, which releases them when the query ends
+    (instead of leaking them across ~20 bench lines)."""
     from flockdb_spark.functions import analytics
 
     edges = spark.createDataFrame(
         [(3, 1, 2, 0), (3, 2, 3, 0), (3, 3, 1, 0)],
         "graph_id long, source_id long, destination_id long, state int",
     )
-    out = analytics.pagerank(edges, graph_id=3)
-    handles = getattr(out, "_flockdb_caches", [])
-    assert len(handles) == 1
-    out.write.format("noop").mode("overwrite").save()
-    assert handles[0].storageLevel.useMemory
-    handles[0].unpersist(True)
+    with scoped(spark) as scope:
+        out = analytics.pagerank(edges, graph_id=3)
+        handles = list(scope.held)
+        assert len(handles) == 1
+        out.write.format("noop").mode("overwrite").save()
+        assert handles[0].storageLevel.useMemory
     assert not handles[0].storageLevel.useMemory
 
 
@@ -1438,15 +1452,15 @@ def test_heavy_hitters_exact_equivalence(spark):
             for r in text.heavy_hitters(df, per_mille=200, strategy=strategy).collect()
         }
         assert out == {"hot": 60, "warm": 30}, strategy
-    # the auto rule itself, observed via the cache handle each branch leaves
-    # behind: exact caches the (word, cnt) table, sketch caches the doc-grain
+    # the auto rule itself, observed via the cache each branch's scope
+    # holds: exact caches the (word, cnt) table, sketch caches the doc-grain
     # token ARRAYS (r11 — was the exploded stream).  A tiny PARQUET scan
     # (known stats) -> exact; an RDD-backed frame (stats unknown = Long.Max)
     # and sketch_min_bytes=0 both -> sketch, the scale-conservative branch.
     pq = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    assert text.heavy_hitters(pq)._flockdb_caches[0].columns == ["word", "cnt"]
-    assert text.heavy_hitters(df, per_mille=200)._flockdb_caches[0].columns == ["_w"]
-    assert text.heavy_hitters(pq, sketch_min_bytes=0)._flockdb_caches[0].columns == ["_w"]
+    assert held_by(spark, lambda: text.heavy_hitters(pq))[0].columns == ["word", "cnt"]
+    assert held_by(spark, lambda: text.heavy_hitters(df, per_mille=200))[0].columns == ["_w"]
+    assert held_by(spark, lambda: text.heavy_hitters(pq, sketch_min_bytes=0))[0].columns == ["_w"]
 
 
 def test_heavy_hitters_empty_corpus(spark):
@@ -1494,7 +1508,9 @@ def _dsir_corpus(spark):
 
 def test_dsir_selects_target_like_docs(spark):
     df = _dsir_corpus(spark)
-    out = text.dsir_importance(df, target_source="tgt", buckets=64, k=6)
+    with scoped(spark) as scope:
+        out = text.dsir_importance(df, target_source="tgt", buckets=64, k=6)
+        held = list(scope.held)
     got = {r["doc_id"]: r["weight_micro"] for r in out.collect()}
     # the 6 selected docs are exactly the 6 written in the target
     # vocabulary — including the raw doc 99 the method is meant to surface
@@ -1508,8 +1524,8 @@ def test_dsir_selects_target_like_docs(spark):
     # off-domain grams are rarer in target than raw -> negative log ratios
     assert all(all_w[d] < 0 for d in (10, 11, 12, 13, 14))
     # r11: the scoring pass is map-side over a literal lr array — nothing
-    # corpus-sized is cached, so no cache handle rides on the result
-    assert not getattr(out, "_flockdb_caches", None)
+    # corpus-sized is cached, so the scope holds nothing
+    assert not held
 
 
 def test_dsir_literal_lr_matches_spark_arithmetic(spark):
@@ -2050,10 +2066,9 @@ def test_hybrid_rrf_fuses_both_legs(spark):
         ],
         "vec_id long, embedding array<float>",
     )
-    out = relevance.hybrid_rrf_topk(docs, emb, [0], k=4, k_dense=3, k_lex=3)
-    rows = {r["doc_id"]: (r["rrf_micro"], r["rank"]) for r in out.collect()}
-    for c in getattr(out, "_flockdb_caches", []):
-        c.unpersist()
+    with scoped(spark):
+        out = relevance.hybrid_rrf_topk(docs, emb, [0], k=4, k_dense=3, k_lex=3)
+        rows = {r["doc_id"]: (r["rrf_micro"], r["rank"]) for r in out.collect()}
 
     # dense ranking for query 0: 2 (dot .999) > 3 (.6) > 1 (0)
     # lexical ranking: 1 (3 shared terms) > 3 (shares "zebra") ; 2 absent
@@ -2101,11 +2116,9 @@ def test_hybrid_rrf_literal_equals_broadcast_path(spark, monkeypatch):
     )
 
     def run():
-        out = relevance.hybrid_rrf_topk(docs, emb, [0, 4], k=4, k_dense=3, k_lex=3)
-        rows = sorted(tuple(r) for r in out.collect())
-        for c in getattr(out, "_flockdb_caches", []):
-            c.unpersist()
-        return rows
+        with scoped(spark):
+            out = relevance.hybrid_rrf_topk(docs, emb, [0, 4], k=4, k_dense=3, k_lex=3)
+            return sorted(tuple(r) for r in out.collect())
 
     lit_rows = run()
     monkeypatch.setattr(relevance, "_LEX_LITERAL_MAX_TERMS", 0)
@@ -2125,10 +2138,8 @@ def test_vocab_drift_planted_shift(spark):
         [(1, "spam spam spam spam alpha beta gamma delta")],
         "doc_id long, text string",
     )
-    out = stats.vocab_drift(a, b, k=3)
-    rows = out.collect()
-    for c in getattr(out, "_flockdb_caches", []):
-        c.unpersist()
+    with scoped(spark):
+        rows = stats.vocab_drift(a, b, k=3).collect()
     assert rows[0]["term"] == "spam" and rows[0]["rnk"] == 1
     # p_a = 0, p_b = 4/8 -> drift 500000 exactly
     assert rows[0]["drift_micro"] == 500_000 and rows[0]["c_a"] == 0
@@ -2140,10 +2151,8 @@ def test_vocab_drift_planted_shift(spark):
     # the single-scan form (one tokenize, one term-keyed agg, no
     # full-outer join) must be row-identical to the two-table form
     union = a.unionByName(b)
-    single = stats.vocab_drift_single_scan(union, F.col("doc_id") % 2, k=3)
-    srows = single.collect()
-    for c in getattr(single, "_flockdb_caches", []):
-        c.unpersist()
+    with scoped(spark):
+        srows = stats.vocab_drift_single_scan(union, F.col("doc_id") % 2, k=3).collect()
     key = lambda r: (r["term"], r["c_a"], r["c_b"], r["p_a_micro"],  # noqa: E731
                      r["p_b_micro"], r["drift_micro"], r["rnk"])
     assert [key(r) for r in srows] == [key(r) for r in rows]
@@ -2154,10 +2163,9 @@ def test_vocab_drift_planted_shift(spark):
     # ride a broadcast, the top-k is a TakeOrdered
     import re
 
-    fresh = stats.vocab_drift_single_scan(union, F.col("doc_id") % 2, k=3)
-    plan = fresh._jdf.queryExecution().executedPlan().toString()
-    for c in getattr(fresh, "_flockdb_caches", []):
-        c.unpersist()
+    with scoped(spark):
+        fresh = stats.vocab_drift_single_scan(union, F.col("doc_id") % 2, k=3)
+        plan = fresh._jdf.queryExecution().executedPlan().toString()
     ids = set(re.findall(r"Exchange hashpartitioning\(.*?plan_id=(\d+)", plan))
     assert len(ids) == 1, plan
 
@@ -2360,13 +2368,12 @@ def test_rerank_is_single_pass_no_joins(spark):
     from flockdb_spark.sources.edges import _read
 
     emb = _read(spark, "/root/testdata/sf0.001", "embeddings")
-    for df in (
-        similarity.binary_ann_topk(emb, [0, 1], k=3, k_cand=10),
-        similarity.pq_rerank_topk(emb, [0, 1], k=3, candidates=10),
+    for build in (
+        lambda: similarity.binary_ann_topk(emb, [0, 1], k=3, k_cand=10),
+        lambda: similarity.pq_rerank_topk(emb, [0, 1], k=3, candidates=10),
     ):
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        for c in getattr(df, "_flockdb_caches", []):
-            c.unpersist()
+        with scoped(spark):
+            plan = build()._jdf.queryExecution().executedPlan().toString()
         assert plan.count("MapInArrow") == 1, plan
         assert "Join" not in plan, plan  # no SMJ/BHJ/SHJ — nothing to join
         assert "BroadcastExchange" not in plan, plan
@@ -2988,19 +2995,17 @@ def test_mmr_and_ivfpq_sql_twins_valid_at_degenerate_shapes(spark):
 
 
 def test_ivfpq_broadcast_release_handle(spark):
-    """ADVICE r8: the IVF-PQ builders expose their broadcast via the
-    _flockdb_caches release convention so repeated index builds in one
-    session don't accumulate executor-side broadcast blocks; unpersist is
-    non-destructive (a re-execution lazily re-ships the driver copy)."""
+    """ADVICE r8: the IVF-PQ builders' broadcast is held by the query scope
+    so repeated index builds in one session don't accumulate executor-side
+    broadcast blocks; the scope's unpersist is non-destructive (a
+    re-execution lazily re-ships the driver copy)."""
     from flockdb_spark.sources.edges import _read
 
     emb = _read(spark, "/root/testdata/sf0.001", "embeddings")
-    out = similarity.ivfpq_ann_topk(emb, [0], k=3)
-    handles = out._flockdb_caches
-    assert len(handles) == 1
-    n1 = out.count()
-    for h in handles:
-        h.unpersist()
+    with scoped(spark) as scope:
+        out = similarity.ivfpq_ann_topk(emb, [0], k=3)
+        assert len(scope.held) == 1
+        n1 = out.count()
     assert out.count() == n1  # re-execution after unpersist still works
 
 
@@ -3044,20 +3049,18 @@ def test_binary_ann_full_candidate_budget_equals_brute(spark):
         (r["query_id"], r["rank"]): (r["neighbor_id"], r["dot_micro2"])
         for r in similarity.brute_force_topk(emb, qids, k=5).collect()
     }
-    full = similarity.binary_ann_topk(emb, qids, k=5, k_cand=10**6)
-    got = {
-        (r["query_id"], r["rank"]): (r["neighbor_id"], r["dot_micro2"])
-        for r in full.collect()
-    }
-    for c in getattr(full, "_flockdb_caches", []):
-        c.unpersist()
+    with scoped(spark):
+        full = similarity.binary_ann_topk(emb, qids, k=5, k_cand=10**6)
+        got = {
+            (r["query_id"], r["rank"]): (r["neighbor_id"], r["dot_micro2"])
+            for r in full.collect()
+        }
     assert got == brute
-    gate = similarity.binary_ann_topk(emb, qids, k=5, k_cand=100)
-    top1 = {
-        r["query_id"]: r["neighbor_id"] for r in gate.collect() if r["rank"] == 1
-    }
-    for c in getattr(gate, "_flockdb_caches", []):
-        c.unpersist()
+    with scoped(spark):
+        gate = similarity.binary_ann_topk(emb, qids, k=5, k_cand=100)
+        top1 = {
+            r["query_id"]: r["neighbor_id"] for r in gate.collect() if r["rank"] == 1
+        }
     assert top1 == {q: brute[(q, 1)][0] for q in qids}
 
 
@@ -3078,17 +3081,16 @@ def test_binary_ann_rotations_amplify(spark):
         for r in similarity.brute_force_topk(emb, qids, k=5).collect()
     }
 
-    def hits(df):
-        got = {(r["query_id"], r["rank"]): r["neighbor_id"] for r in df.collect()}
-        for c in getattr(df, "_flockdb_caches", []):
-            c.unpersist()
-        return got
+    def hits(**kw):
+        with scoped(spark):
+            df = similarity.binary_ann_topk(emb, qids, k=5, **kw)
+            return {(r["query_id"], r["rank"]): r["neighbor_id"] for r in df.collect()}
 
-    assert hits(similarity.binary_ann_topk(emb, qids, k=5, k_cand=10**6, rotations=3)) == brute
+    assert hits(k_cand=10**6, rotations=3) == brute
 
     truth = {q: {brute[(q, r)] for r in range(1, 6)} for q in qids}
-    base = hits(similarity.binary_ann_topk(emb, qids, k=5, k_cand=50))
-    rot = hits(similarity.binary_ann_topk(emb, qids, k=5, k_cand=50, rotations=4))
+    base = hits(k_cand=50)
+    rot = hits(k_cand=50, rotations=4)
     n_base = sum(len(truth[q] & {v for (qq, _), v in base.items() if qq == q}) for q in qids)
     n_rot = sum(len(truth[q] & {v for (qq, _), v in rot.items() if qq == q}) for q in qids)
     assert n_rot >= n_base

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from conftest import SF_DIR, edge_rows_df
 from flockdb_spark.graph import EdgeStore
+from flockdb_spark.operators.classes import QueryClass, query_class
 from flockdb_spark.operators.merge import temporal_merge
 
 
@@ -173,14 +174,15 @@ def test_boilerplate_one_doc_grain_agg_no_final_join(spark):
     docs = spark.createDataFrame(
         [(i, "a b c d e f g h") for i in range(30)], "doc_id long, text string"
     )
-    out = textmod.boilerplate_coverage(docs, n=5, min_docs=3)
-    plan = plan_str(out, "simple")
+    with query_class(spark, QueryClass.SELECT_COPY) as scope:
+        out = textmod.boilerplate_coverage(docs, n=5, min_docs=3)
+        plan = plan_str(out, "simple")
+        # the cache the scope holds is doc-grain arrays
+        assert len(scope.held) == 1
+        assert dict(scope.held[0].dtypes)["_grams"].startswith("array")
     # exactly one join (gram stream vs boiler set); none keyed on doc_id
     assert len(re.findall(r"BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin", plan)) == 1
     assert not re.search(r"hashpartitioning\(doc_id[^)]*\).*\n.*Sort", plan)
-    # the attached cache is doc-grain arrays
-    assert len(out._flockdb_caches) == 1
-    assert dict(out._flockdb_caches[0].dtypes)["_grams"].startswith("array")
 
 
 def test_ordered_prefix_sum_sharded_no_global_window(spark):

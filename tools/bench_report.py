@@ -1,7 +1,7 @@
-"""Regenerate BENCH_sf1.md (the three-point scaling study) from three
+"""Regenerate docs/history/BENCH_sf1.md (the three-point scaling study) from three
 bench.py JSON outputs.
 
-Usage: python tools/bench_report.py sf01.json sf10.json sf30.json > BENCH_sf1.md
+Usage: python tools/bench_report.py sf01.json sf10.json sf30.json > docs/history/BENCH_sf1.md
 """
 
 from __future__ import annotations
@@ -50,7 +50,7 @@ factors:
 
 Generated data lives under `_sfdata/` (gitignored) and is bench-only; the
 correctness gates run on the driver's testdata — except the committed
-`CORRECTNESS_sf1.md`, a full-registry DuckDB-oracle pass at sf1.0 (all
+`docs/history/CORRECTNESS_sf1.md`, a full-registry DuckDB-oracle pass at sf1.0 (all
 green), which pins that these plans stay value-exact at bench scale.
 
 ## Methodology: construction inside the timed pass

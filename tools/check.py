@@ -8,6 +8,7 @@ Usage: python tools/check.py [sf_dir] [query ...]
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
 import duckdb
 import pandas as pd
@@ -89,8 +90,9 @@ def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
     import __spark_entry__ as entrymod
+    from flockdb_spark.operators.classes import QueryClass, query_class
     from flockdb_spark.session import get_spark
 
     spark = get_spark(master="local[8]", shuffle_partitions=8)
@@ -103,7 +105,9 @@ def main() -> None:
         if only and name not in only:
             continue
         try:
-            sdf = fn(spark, sf_dir).toPandas()
+            # the entry's caches end with its scope, not at the next entry
+            with query_class(spark, QueryClass.SELECT_COPY):
+                sdf = fn(spark, sf_dir).toPandas()
         except Exception as e:  # noqa: BLE001
             print(f"FAIL {name}: spark error: {e}")
             failed.append(name)

@@ -1,5 +1,5 @@
 """Scale-up generator: synthesize sf(0.1 * K) parquet from the driver's sf0.1
-tables, for the scaling experiment BENCH_sf1.md (never used by the
+tables, for the scaling experiment docs/history/BENCH_sf1.md (never used by the
 correctness gate — the driver's own testdata stays the only gate input).
 
 Usage: python tools/gen_sfN.py K OUT_DIR   (e.g. K=10 → ~sf1.0)

@@ -25,6 +25,7 @@ def main() -> None:
     names = args
 
     from bench import shuffle_partitions_for
+    from flockdb_spark.operators.classes import QueryClass, query_class
     from flockdb_spark.session import get_spark
     import __spark_entry__ as entrymod
 
@@ -56,17 +57,17 @@ def main() -> None:
             # without this degraded 9s -> 28s -> 67s across attempts from
             # carried shuffle state, not the plan)
             spark._jvm.System.gc()
-            # unique per-attempt group: attempts share nothing, so each
-            # attempt's job/stage/task counts are exact, not cumulative
-            # (earlier revisions read the default group for before_jobs,
-            # which inflated attempts 1 and 2)
-            group = f"{name}#{attempt}"
-            spark.sparkContext.setJobGroup(group, group)
-            t0 = time.perf_counter()
-            df = qs[name](spark, sf_dir)
-            c1 = time.perf_counter()
-            df.write.format("noop").mode("overwrite").save()
-            dt = time.perf_counter() - t0
+            # each attempt runs in a query scope of its own: a unique job
+            # group (attempts share nothing, so each attempt's job/stage/
+            # task counts are exact, not cumulative) and its caches
+            # released at the end
+            with query_class(spark, QueryClass.SELECT_COPY):
+                group = spark.sparkContext.getLocalProperty("spark.jobGroup.id")
+                t0 = time.perf_counter()
+                df = qs[name](spark, sf_dir)
+                c1 = time.perf_counter()
+                df.write.format("noop").mode("overwrite").save()
+                dt = time.perf_counter() - t0
             job_ids = sorted(tracker.getJobIdsForGroup(group) or [])
             n_stages = 0
             n_tasks = 0
@@ -100,9 +101,6 @@ def main() -> None:
                     f"  job {j:>4} {ms / 1000.0:7.3f}s tasks={jd.numTasks():>4} {dtxt}",
                     flush=True,
                 )
-            spark.sparkContext.setJobGroup("", "")
-            for c in getattr(df, "_flockdb_caches", []):
-                c.unpersist()
     spark.stop()
 
 

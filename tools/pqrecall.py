@@ -33,6 +33,7 @@ def ranked_lists(df) -> dict[int, list[int]]:
 
 def main() -> None:
     from flockdb_spark.functions import similarity
+    from flockdb_spark.operators.classes import QueryClass, query_class
     from flockdb_spark.session import get_spark
     from flockdb_spark.sources.edges import _read
 
@@ -50,12 +51,10 @@ def main() -> None:
     }
 
     def measure(label: str, build):
-        t0 = time.perf_counter()
-        df = build()
-        got = ranked_lists(df)
-        wall = time.perf_counter() - t0
-        for h in getattr(df, "_flockdb_caches", []):
-            h.unpersist()
+        with query_class(spark, QueryClass.SELECT_COPY):
+            t0 = time.perf_counter()
+            got = ranked_lists(build())
+            wall = time.perf_counter() - t0
         r10 = sum(
             len(truth[q] & set(got.get(q, [])[:K])) / len(truth[q]) for q in truth
         ) / len(truth)

@@ -48,7 +48,7 @@ def main() -> None:
     from flockdb_spark import queries as q
     from flockdb_spark import queries_ext as qx
     from flockdb_spark.functions import dedup, similarity
-    from flockdb_spark.functions.dedup import release_caches
+    from flockdb_spark.operators.classes import QueryClass, query_class
     from flockdb_spark.session import get_spark
     from flockdb_spark.sources.edges import _read
 
@@ -66,11 +66,10 @@ def main() -> None:
         for name in ("x01_dedup_exact", "x03_minhash_lsh", "x18_lsh_neardup",
                      "x109_lsh_auto_neardup", "x71_source_overlap"):
             spark.catalog.clearCache()
-            t0 = time.monotonic()
-            out = q.QUERIES[name](spark, sf_dir)
-            rows = out.count()
-            dt = round(time.monotonic() - t0, 2)
-            release_caches(out)
+            with query_class(spark, QueryClass.SELECT_COPY):
+                t0 = time.monotonic()
+                rows = q.QUERIES[name](spark, sf_dir).count()
+                dt = round(time.monotonic() - t0, 2)
             print(f"RESULT {json.dumps({'sf_dir': sf_dir, 'query': name, 'sec': dt, 'rows': rows})}")
 
         # bucket-size distributions of each operator's candidate grain
