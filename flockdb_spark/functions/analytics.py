@@ -46,10 +46,10 @@ def pagerank(edges: DataFrame, graph_id: int, iterations: int = 3) -> DataFrame:
     # hash(src) layout satisfies every iteration's join) costs more than it
     # saves at local SFs — the explicit repartition defeats AQE's coalescing
     # of the tiny per-iteration shuffles (x14 0.76s→1.12s at sf0.1).  On a
-    # real cluster the equivalent co-location comes from the PERSISTED layout
-    # instead: read the edge table from write_optimized(buckets=N) and the
-    # scan itself reports hash(source_id) with zero exchanges — see
-    # test_plans.py's bucketed-join assertions.
+    # real cluster the equivalent co-location would come from a persisted
+    # layout bucketed by source_id, whose scan reports hash(source_id) with
+    # zero exchanges (a design note, SCALE.md §1 — the engine writes one
+    # range-clustered layout).
     e_deg = hold(e.join(out_deg, "src").cache())
     base = PR_UNIT * (PR_DAMP_DEN - PR_DAMP_NUM) // PR_DAMP_DEN
     pr_of = f"({base} + (coalesce(in_sum, 0) * {PR_DAMP_NUM}) div {PR_DAMP_DEN})"
@@ -159,57 +159,6 @@ def triangle_counts(pairs: DataFrame) -> DataFrame:
     )
 
 
-def link_prediction(
-    pairs: DataFrame,
-    min_common: int = 2,
-    max_center_degree: int | None = None,
-) -> DataFrame:
-    """Common-neighbor link prediction over an undirected graph given as
-    distinct (u, v) pairs with u < v (:func:`interaction_pairs`' contract):
-    for every NON-adjacent pair (a, b), the number of shared neighbors —
-    the classic "people you may know" score (Liben-Nowell & Kleinberg 2003;
-    the reference's follow-graph domain is exactly where this runs).
-
-    Plan: expand to (center, leaf) both orientations, self-join on the
-    shared ``center`` to enumerate wedges (one shuffle keyed on center),
-    aggregate wedge counts per (a, b), anti-join the existing adjacency.
-    Wedge output through center v is C(deg(v), 2), so hub centers dominate
-    cost quadratically — ``max_center_degree`` drops hubs from wedge
-    GENERATION (the same quadratic-output guard as
-    ``ngram_jaccard_pairs.max_shingle_df``: a neighbor shared with everyone
-    ranks nobody).  The cap changes results, so the gate replays it in the
-    oracle — guarded AND value-checked.
-
-    Output: (a, b, common_neighbors), a < b non-adjacent pairs with
-    ``common_neighbors >= min_common``.
-    """
-    und = pairs.select(F.col("u").alias("center"), F.col("v").alias("leaf")).union(
-        pairs.select(F.col("v").alias("center"), F.col("u").alias("leaf"))
-    )
-    wedge_src = und
-    if max_center_degree is not None:
-        small = (
-            und.groupBy("center")
-            .agg(F.count(F.lit(1)).alias("_d"))
-            .where(F.col("_d") <= max_center_degree)
-            .select("center")
-        )
-        wedge_src = und.join(small, "center", "left_semi")
-    x = wedge_src.select("center", F.col("leaf").alias("a"))
-    y = wedge_src.select("center", F.col("leaf").alias("b"))
-    cand = (
-        x.join(y, "center")
-        .where(F.col("a") < F.col("b"))
-        .groupBy("a", "b")
-        .agg(F.count(F.lit(1)).cast("long").alias("common_neighbors"))
-        .where(F.col("common_neighbors") >= min_common)
-    )
-    adj = pairs.select(F.col("u").alias("a"), F.col("v").alias("b"))
-    return cand.join(adj, ["a", "b"], "left_anti").select(
-        "a", "b", "common_neighbors"
-    )
-
-
 def funnel(
     events: DataFrame,
     steps: tuple[str, ...] = ("view", "click", "purchase"),
@@ -313,8 +262,8 @@ def k_hop(
     # each round re-reads the adjacency; over a materialized store that scan
     # is cheap, and both caching it and pre-partitioning it measured SLOWER
     # at local SFs (cache materialization + lost AQE coalescing; see the
-    # pagerank note).  On a cluster, co-location comes from reading the
-    # write_optimized(buckets) layout, whose scan is already hash(source_id).
+    # pagerank note).  On a cluster, co-location would come from a layout
+    # bucketed by source_id (SCALE.md §1), whose scan is hash(source_id).
     adj = edges.where((F.col("graph_id") == graph_id) & (F.col("state") == 0)).select(
         "source_id", "destination_id"
     )

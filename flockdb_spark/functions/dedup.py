@@ -131,66 +131,6 @@ def ngram_jaccard_pairs(
     return out.select("a", "b", "n_inter", "n_union", "jaccard_micro")
 
 
-def containment_pairs(
-    df: DataFrame,
-    threshold: float = 0.5,
-    n: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_shingle_df: int | None = None,
-) -> DataFrame:
-    """Exact n-gram CONTAINMENT pairs (a < b): |A∩B| / min(|A|, |B|) — the
-    directional overlap score Jaccard misses.  A short document fully
-    quoted inside a long one has containment ≈ 1 but Jaccard ≈ |A|/|B|,
-    which a union-normalized threshold never fires on; excerpt/quote
-    detection in a training corpus needs this score (Broder's original
-    resemblance/containment split, "On the resemblance and containment of
-    documents", 1997).
-
-    Same bucketed shingle self-join as :func:`ngram_jaccard_pairs` — the
-    intersection count is keyed on the shingle so cost scales with bucket
-    sizes, never the cross product; ``max_shingle_df`` is the identical
-    hot-shingle output guard (see that docstring).  Score in exact integer
-    micro-units: ``n_inter * 1e6 div least(n_a, n_b)`` — engine-portable.
-
-    Output: (a, b, n_inter, n_a, n_b, containment_micro), a < b,
-    containment_micro ≥ threshold·1e6.
-    """
-    sh = word_shingles(df, n, text_col, id_col)
-    if max_shingle_df is not None:
-        sh = hold(sh.cache())
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    pair_sh = sh
-    if max_shingle_df is not None:
-        rare = (
-            sh.groupBy("shingle")
-            .agg(F.count(F.lit(1)).alias("_df"))
-            .where(F.col("_df") <= max_shingle_df)
-            .select("shingle")
-        )
-        pair_sh = sh.join(rare, "shingle", "left_semi")
-    a = pair_sh.select(F.col("doc_id").alias("a"), "shingle")
-    b = pair_sh.select(F.col("doc_id").alias("b"), "shingle")
-    inter = (
-        a.join(b, "shingle")
-        .where(F.col("a") < F.col("b"))
-        .groupBy("a", "b")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("a"), F.col("n_sh").alias("n_a"))
-    sb = sizes.select(F.col("doc_id").alias("b"), F.col("n_sh").alias("n_b"))
-    return (
-        inter.join(sa, "a")
-        .join(sb, "b")
-        .withColumn(
-            "containment_micro",
-            F.expr("(n_inter * 1000000) div least(n_a, n_b)"),
-        )
-        .where(F.col("containment_micro") >= int(threshold * 1_000_000))
-        .select("a", "b", "n_inter", "n_a", "n_b", "containment_micro")
-    )
-
-
 # -- MinHash + LSH -----------------------------------------------------------
 #
 # Two hash modes everywhere in this family:

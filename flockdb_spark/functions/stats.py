@@ -264,74 +264,6 @@ WHERE p.purchase_s - c.touch_t <= {int(horizon_s)}
 """
 
 
-def corpus_datasheet(docs: DataFrame) -> DataFrame:
-    """Per-source corpus datasheet — the one-screen audit table a dataset
-    release ships ("Datasheets for Datasets", Gebru et al. 2018, made
-    computable): volume, token mass, exact-duplicate share, mean document
-    length, language spread, and the dominant language, per source.
-
-    All engine-portable integers: the duplicate share is exact per-mille
-    (``(n_docs - distinct_texts) * 1000 div n_docs``), mean length floors,
-    and the dominant language is max-count with ties to the
-    lexicographically smallest code.
-
-    Scale shape (100 TB): one aggregation keyed on (source, lang) collapses
-    the corpus to |sources|·|langs| rows (map-side combine does the heavy
-    lifting), plus one distinct over (source, 64-bit content hash) for the
-    exact duplicate share — 8-byte shuffle keys, never document bodies
-    (``exact_dedup``'s collision argument applies and the gate
-    value-checks the result against the oracle's count(DISTINCT text)).
-
-    Output: (source, n_docs, total_tokens, distinct_texts, dup_per_mille,
-    mean_tokens, n_langs, top_lang).
-    """
-    from .text import token_count
-
-    per_lang = (
-        docs.select(
-            "source",
-            "lang",
-            token_count("text").cast("long").alias("n_tok"),
-            F.xxhash64("text").alias("_h"),
-        )
-        .groupBy("source", "lang")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_docs"),
-            F.sum("n_tok").cast("long").alias("n_tokens"),
-        )
-    )
-    dtexts = (
-        docs.select("source", F.xxhash64("text").alias("_h"))
-        .distinct()
-        .groupBy("source")
-        .agg(F.count(F.lit(1)).cast("long").alias("distinct_texts"))
-    )
-    top = F.array_min(
-        F.collect_list(F.struct(F.negate(F.col("n_docs")).alias("neg"), F.col("lang")))
-    )
-    per_src = per_lang.groupBy("source").agg(
-        F.sum("n_docs").cast("long").alias("n_docs"),
-        F.sum("n_tokens").cast("long").alias("total_tokens"),
-        F.count(F.lit(1)).cast("long").alias("n_langs"),
-        top["lang"].alias("top_lang"),
-    )
-    return (
-        per_src.join(dtexts, "source")
-        .select(
-            "source",
-            "n_docs",
-            "total_tokens",
-            "distinct_texts",
-            F.expr("(n_docs - distinct_texts) * 1000 div n_docs").alias(
-                "dup_per_mille"
-            ),
-            F.expr("total_tokens div n_docs").alias("mean_tokens"),
-            "n_langs",
-            "top_lang",
-        )
-    )
-
-
 def vocab_drift(
     docs_a: DataFrame,
     docs_b: DataFrame,

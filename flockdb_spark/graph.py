@@ -4,14 +4,14 @@ Replaces the reference's shard/forwarding layer (``ForwardingManager.scala:24-38
 instead of a hash ring of MySQL shards with two mirrored tables per graph
 (forward/backward, ``doc/blog.md:90-93``), one columnar edges DataFrame serves
 both directions; Catalyst prunes partitions/files on whichever key the query
-filters.  At cluster scale the layout (partition by graph_id, bucket/sort by
-source_id, position) plays the role of the reference's two MySQL indexes
-(``shards/SqlShard.scala:64-67``).
+filters.  One persisted layout (``write_optimized``: partitioned by graph_id,
+range-clustered and sorted by source_id, position) plays the role of both of
+the reference's MySQL indexes (``shards/SqlShard.scala:64-67``).
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -20,54 +20,20 @@ from .schema import EDGE_COLUMNS
 from .sources.edges import build_edges, build_metadata
 
 
-#: bucket count for the UNIQUE-index twin layout (write_unique_twin); pinned
-#: because a bucketed table's spec must match its files across sessions — a
-#: cluster deployment re-writes the twin with a bucket count sized to its
-#: executor fleet (thousands), the fixture store uses a small fixed one
-UNIQUE_TWIN_BUCKETS = 8
-
-
 @dataclass
 class EdgeStore:
     spark: SparkSession
     edges: DataFrame
     metadata: DataFrame
-    #: optional UNIQUE (source_id, destination_id) index twin — a bucketed,
-    #: dest-sorted layout of the same rows (write_unique_twin); None when the
-    #: store was not materialized through the persisted layout.
-    #:
-    #: Maintenance contract (VERDICT r11 item 7): the twin is written ONCE
-    #: at store-layout build and is NOT incrementally maintained by the
-    #: write path — a store mutated through ``apply_oplog`` yields a fresh
-    #: ``EdgeStore`` (``from_edges``) with ``by_src_dst=None``, and every
-    #: twin consumer (q07's dest-ordered page) falls back to the primary
-    #: layout, which holds the same rows (correct, one exchange slower).
-    #: A deployment that wants the zero-exchange dest-order plan over a
-    #: mutated store re-publishes the layout: ``write_optimized`` +
-    #: ``write_unique_twin`` + re-read — the same once-per-publish step the
-    #: fixture store runs, and the Spark analogue of rebuilding a secondary
-    #: index rather than maintaining it per-write.  The reference maintains
-    #: its UNIQUE index transactionally per write; this engine's unit of
-    #: write is the published layout, so the twin's freshness is the
-    #: layout's freshness.  tests/test_plans.py pins fallback correctness
-    #: and rebuilt-twin equivalence over a mutated store.
-    by_src_dst: DataFrame | None = None
 
     @classmethod
-    def from_sf_dir(cls, spark: SparkSession, sf_dir: str, cache: bool = False) -> "EdgeStore":
-        edges = build_edges(spark, sf_dir)
-        if cache:
-            edges = edges.cache()
-        return cls(spark, edges, build_metadata(spark, sf_dir, edges))
+    def from_sf_dir(cls, spark: SparkSession, sf_dir: str) -> "EdgeStore":
+        return cls.from_edges(spark, build_edges(spark, sf_dir))
 
     @classmethod
     def from_edges(cls, spark: SparkSession, edges: DataFrame, metadata: DataFrame | None = None) -> "EdgeStore":
         if metadata is None:
-            metadata = edges.groupBy("graph_id", "source_id").agg(
-                F.count(F.when(F.col("state") == 0, 1)).cast("int").alias("count"),
-                F.lit(0).cast("int").alias("state"),
-                F.max("updated_at").alias("updated_at"),
-            )
+            metadata = build_metadata(spark, None, edges)
         return cls(spark, edges, metadata)
 
     # -- direction views ----------------------------------------------------
@@ -90,9 +56,10 @@ class EdgeStore:
 
     # -- persistence --------------------------------------------------------
 
-    def write_optimized(self, path: str, buckets: int = 0, table: str | None = None) -> None:
-        """Persist the edge table in the layout that replaces the reference's
-        two MySQL indexes (``SqlShard.scala:64-67``, §4 of SURVEY.md):
+    def write_optimized(self, path: str) -> None:
+        """Persist the edge table in the one layout that replaces the
+        reference's two MySQL indexes (``SqlShard.scala:64-67``, §4 of
+        SURVEY.md):
 
         - partitioned by graph_id → partition pruning ≙ per-graph tables
         - RANGE-partitioned then sorted by (source_id, position) → each file
@@ -102,72 +69,15 @@ class EdgeStore:
           here would scatter every source range across all files and reduce
           the stats to full-range no-ops — a point read would touch every
           file.)
-        - optional bucketing by source_id (saveAsTable) → shuffle-free
-          co-located joins on source_id at cluster scale.  The bucketed
-          layout trades point-read pruning for join co-location; a
-          deployment wanting both writes the range layout and the bucketed
-          twin, as the reference maintains both of its indexes.
+        - the UNIQUE (source_id, destination_id) index needs no copy: a
+          (source_id, destination_id) probe prunes on source_id like any
+          forward read, and a dest-ordered scan (q07) sorts the pruned rows
+          after one hash exchange.  Backward reads prune on graph_id and
+          push the destination filter into the scan (SCALE.md §1).
         """
-        if buckets and table:
-            df = self.edges.repartition("graph_id", "source_id").sortWithinPartitions(
-                "source_id", "position"
-            )
-            (
-                df.write.mode("overwrite")
-                .partitionBy("graph_id")
-                .bucketBy(buckets, "source_id")
-                .sortBy("source_id", "position")
-                .option("path", path)
-                .saveAsTable(table)
-            )
-        else:
-            (
-                self.edges.repartitionByRange("graph_id", "source_id")
-                .sortWithinPartitions("source_id", "position")
-                .select(*EDGE_COLUMNS)
-                .write.mode("overwrite")
-                .partitionBy("graph_id")
-                .parquet(path)
-            )
-
-    def write_unique_twin(self, path: str, table: str) -> None:
-        """The UNIQUE ``(source_id, destination_id)`` index analogue — the
-        reference's second per-edge index, which it forces for dest-ordered
-        scans (``shards/SqlShard.scala:64-67,240-244``).  Written as a Spark
-        BUCKETED table (hash(source_id) buckets, files sorted by
-        (source_id, destination_id)): a bucketed scan reports
-        hash(source_id) output partitioning, so per-source windows/joins on
-        source_id plan with ZERO exchanges — the dest-order rank (q07/R7)
-        becomes scan → filter → in-partition sort → window.
-
-        ``table`` is a scratch catalog name used for the bucketed write
-        (Spark only writes bucket-tagged files through saveAsTable); it is
-        dropped immediately — readers re-register the files as an external
-        bucketed table at their own name (queries.register_unique_twin)."""
         (
-            self.edges.repartition(UNIQUE_TWIN_BUCKETS, "source_id")
-            .sortWithinPartitions("source_id", "destination_id")
-            .select(*EDGE_COLUMNS)
-            .write.mode("overwrite")
-            .bucketBy(UNIQUE_TWIN_BUCKETS, "source_id")
-            .sortBy("source_id", "destination_id")
-            .option("path", path)
-            .saveAsTable(table)
-        )
-        # external table (explicit path): DROP unregisters, files stay
-        self.spark.sql(f"DROP TABLE IF EXISTS {table}")
-
-    def write_backward_twin(self, path: str) -> None:
-        """The optional performance twin for backward-heavy workloads
-        (SCALE.md §1): same rows, laid out for `destination_id` access —
-        the Spark analogue of the reference writing every edge twice into a
-        mirrored `-graph_id` table (``doc/blog.md:90-93``).  Unlike the
-        reference this is a pure layout choice: readers that don't have the
-        twin still answer backward queries from the primary layout via
-        row-group stats, just with more IO."""
-        (
-            self.edges.repartition("graph_id", "destination_id")
-            .sortWithinPartitions("destination_id", "position")
+            self.edges.repartitionByRange("graph_id", "source_id")
+            .sortWithinPartitions("source_id", "position")
             .select(*EDGE_COLUMNS)
             .write.mode("overwrite")
             .partitionBy("graph_id")

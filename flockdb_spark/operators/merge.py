@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..schema import EDGE_COLUMNS, METADATA_COLUMNS, state_priority
+from ..sources.edges import build_metadata
 
 _EDGE_KEY = ["graph_id", "source_id", "destination_id"]
 
@@ -297,18 +298,8 @@ def derive_metadata(edges: DataFrame, old_metadata: DataFrame | None = None) -> 
     (``SqlShard.scala:499``) — here vertices are Normal unless an op archived
     them, in which case ``old_metadata`` supplies the vertex state.
     """
-    agg = edges.groupBy("graph_id", "source_id").agg(
-        F.count(F.when(F.col("state") == 0, 1)).cast("int").alias("_n_normal"),
-        F.max("updated_at").alias("_max_ts"),
-    )
     if old_metadata is None:
-        return agg.select(
-            "graph_id",
-            "source_id",
-            F.col("_n_normal").alias("count"),
-            F.lit(0).cast("int").alias("state"),
-            F.col("_max_ts").alias("updated_at"),
-        )
+        return build_metadata(edges.sparkSession, None, edges)
     md = old_metadata.select(
         "graph_id", "source_id", F.col("state").alias("_v_state"), F.col("updated_at").alias("_v_ts")
     )

@@ -42,7 +42,7 @@ from .schema import (
     ordered_uuid_position_sql,
     position_to_millis,
 )
-from .sources.edges import _fingerprint, _read, build_edges, build_metadata, with_fixture_ctes
+from .sources.edges import _fingerprint, _read, with_fixture_ctes
 
 # supplier pairs for the set-op queries (graph 3 is the only graph whose
 # destinations are shared between sources); suppliers 1..5 exist at every sf
@@ -68,8 +68,8 @@ def query(name: str, oracle: str | None = None):
 #: bump when the store derivation (sources/edges.py build_edges /
 #: build_metadata) or the persisted layout shape changes — the cache tag
 #: includes it, so stale layouts from older code are never read
-#: (v2: added the UNIQUE (source_id, destination_id) bucketed index twin)
-_LAYOUT_VERSION = 2
+#: (v2 added a bucketed UNIQUE-index twin; v3 removed it again)
+_LAYOUT_VERSION = 3
 
 
 def _store_key(sf_dir: str) -> str:
@@ -102,44 +102,26 @@ def _drop_superseded_layouts(base: Path, input_path: str) -> None:
                 shutil.rmtree(d, ignore_errors=True)
 
 
-def register_unique_twin(spark: SparkSession, path: str, name: str) -> DataFrame:
-    """(Re-)register the UNIQUE-index twin files at ``path`` as an external
-    BUCKETED table — bucket metadata lives in the catalog, not the files, and
-    the default catalog is session-scoped, so every fresh session re-creates
-    the entry (the spec must match what ``EdgeStore.write_unique_twin``
-    wrote: hash(source_id) into UNIQUE_TWIN_BUCKETS, dest-sorted files)."""
-    from .graph import UNIQUE_TWIN_BUCKETS
-
-    if not spark.catalog.tableExists(name):
-        cols = ", ".join(
-            f"{f.name} {f.dataType.simpleString()}" for f in EDGE_SCHEMA.fields
-        )
-        spark.sql(
-            f"CREATE TABLE {name} ({cols}) USING PARQUET"
-            f" CLUSTERED BY (source_id) SORTED BY (source_id, destination_id)"
-            f" INTO {UNIQUE_TWIN_BUCKETS} BUCKETS LOCATION '{path}'"
-        )
-    return spark.table(name)
-
-
 def store_for(spark: SparkSession, sf_dir: str) -> EdgeStore:
     """Memoized fixture store, materialized ONCE per sf_dir — THROUGH the
     production layout.
 
-    The derived store (union-of-three-graphs build plus the g3 LWW window,
-    sources/edges.py) is written once per sf_dir via
+    The derived edges (union-of-three-graphs build plus the g3 LWW window,
+    sources/edges.py) are written once per input fingerprint via
     ``EdgeStore.write_optimized`` — graph_id-partitioned, source-RANGE
-    clustered, position-sorted parquet, the engine's replacement for the
-    reference's PRIMARY (source_id, state, position) index
+    clustered, position-sorted parquet, the engine's one replacement for
+    the reference's PRIMARY and UNIQUE indexes
     (``shards/SqlShard.scala:64-67``) — and every gate query then plans a
     plain pruned parquet scan: partition pruning on graph_id, min/max
     file/row-group skipping on source_id.  A point read touches one file
-    instead of the whole table, exactly as it would on the cluster; an
-    in-memory ``localCheckpoint`` (the previous shape) serves the same rows
-    but cannot prune, so every point read paid a full-table scan.
-    Metadata persists alongside (graph_id-partitioned, source-sorted).
-    Each layout records its resolved input path; publishing one removes the
-    layouts it supersedes (``_drop_superseded_layouts``).
+    instead of the whole table, exactly as it would on the cluster.
+    Metadata is derived from the written edges and persists alongside
+    (graph_id-partitioned, source-sorted), so the two published tables
+    describe the same rows.  The build itself caches and checkpoints
+    nothing, so it leaves no persistent RDD behind (the input scans it
+    reads are the session's pinned ``_read`` memos).  Each layout records
+    its resolved input path; publishing one removes the layouts it
+    supersedes (``_drop_superseded_layouts``).
     """
     key = (id(spark), _store_key(sf_dir))
     st = _STORES.get(key)
@@ -148,24 +130,15 @@ def store_for(spark: SparkSession, sf_dir: str) -> EdgeStore:
     if st is None:
         base = _store_cache_dir(sf_dir)
         epath, mpath = base / "edges", base / "metadata"
-        upath = base / "edges_by_src_dst"
         if not ((epath / "_SUCCESS").exists() and (mpath / "_SUCCESS").exists()):
             # build into a scratch dir, then one atomic rename publishes both
             # tables — a concurrent builder loses the rename and reads the
             # winner's layout; a killed builder leaves only scratch debris
             tmp = base.with_name(base.name + f".tmp-{os.getpid()}")
-            built = EdgeStore.from_sf_dir(spark, sf_dir)
-            built.edges = built.edges.localCheckpoint(eager=True)
-            built.write_optimized(str(tmp / "edges"))
-            # the second reference index: UNIQUE (source_id, destination_id)
-            # (SqlShard.scala:64-67) — bucketed twin for dest-ordered scans
-            built.write_unique_twin(
-                str(tmp / "edges_by_src_dst"),
-                table=f"edges_twin_build_{os.getpid()}",
-            )
+            EdgeStore.from_sf_dir(spark, sf_dir).write_optimized(str(tmp / "edges"))
             (
-                build_metadata(spark, sf_dir, built.edges)
-                .repartitionByRange("graph_id", "source_id")
+                EdgeStore.read_optimized(spark, str(tmp / "edges"))
+                .metadata.repartitionByRange("graph_id", "source_id")
                 .sortWithinPartitions("source_id")
                 .select(*METADATA_COLUMNS)
                 .write.mode("overwrite")
@@ -181,11 +154,6 @@ def store_for(spark: SparkSession, sf_dir: str) -> EdgeStore:
             _drop_superseded_layouts(base, input_path)
         st = EdgeStore.read_optimized(spark, str(epath))
         st.metadata = spark.read.parquet(str(mpath)).select(*METADATA_COLUMNS)
-        if (upath / "_SUCCESS").exists():
-            import re
-
-            tname = "edges_by_src_dst_" + re.sub(r"[^0-9A-Za-z]", "_", base.name)
-            st.by_src_dst = register_unique_twin(spark, str(upath), tname)
         _STORES[key] = st
     return st
 
@@ -437,28 +405,20 @@ WHERE graph_id = 1 AND state = 0 AND source_id IN (SELECT source_id FROM src10)
 """),
 )
 def q07(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source dest-ordered rank, served from the UNIQUE
-    (source_id, destination_id) index twin — the same index the reference
-    FORCES for dest-ordered scans (``shards/SqlShard.scala:240-244``
-    ``USE INDEX (unique_source_id_destination_id)``).  The bucketed twin's
-    scan reports hash(source_id) partitioning, the broadcast semi-join
-    preserves it, and the rank window plans with ZERO exchanges:
-    scan → filter → in-partition sort → window (r10 plan paid an exchange
-    of the post-join rows).  The 10-source probe follows R9's inline-≤64
-    rule (operators/algebra.py): an IN literal, not a broadcast join —
-    it pushes to the parquet scan, prunes buckets, and drops the broadcast
-    job from the floor.  Falls back to the primary layout when the store
-    has no twin (ad-hoc EdgeStore.from_edges callers)."""
-    st = store_for(spark, sf_dir)
-    base = (
-        st.by_src_dst.where(F.col("graph_id") == 1)
-        if st.by_src_dst is not None
-        else st.graph(1)
-    )
+    """Per-source dest-ordered rank — the scan the reference serves from its
+    UNIQUE (source_id, destination_id) index (``shards/SqlShard.scala:240-244``
+    ``USE INDEX (unique_source_id_destination_id)``).  Here it is the store's
+    one layout: the 10-source probe follows R9's inline-≤64 rule
+    (operators/algebra.py) — an IN literal, not a broadcast join — so it
+    pushes to the parquet scan and prunes graph_id partitions and
+    source-range files, and the rank window sorts the few surviving rows
+    after one hash exchange on source_id."""
     src10 = [int(i) for i in params_for(spark, sf_dir)["src10"]]
     w = Window.partitionBy("source_id").orderBy(F.desc("destination_id"))
     return (
-        base.where(F.col("state") == 0)
+        store_for(spark, sf_dir)
+        .graph(1)
+        .where(F.col("state") == 0)
         .where(F.col("source_id").isin(src10))
         .select(
             "source_id",

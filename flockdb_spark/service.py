@@ -171,10 +171,8 @@ class FlockService:
         return view
 
     def _swap(self, edges: DataFrame, metadata: DataFrame) -> None:
-        """Publish a write: new tables, no UNIQUE-index twin (graph.py's
-        contract — the twin describes the pre-write rows), view re-bound."""
+        """Publish a write: new tables, serving view re-bound."""
         self.store.edges, self.store.metadata = edges, metadata
-        self.store.by_src_dst = None
         self._bind()
 
     def _classed(self, cls: str):

@@ -159,11 +159,15 @@ def build_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     return g1.unionByName(g2).unionByName(g3).select(*EDGE_COLUMNS)
 
 
-def build_metadata(spark: SparkSession, sf_dir: str, edges: DataFrame | None = None) -> DataFrame:
+def build_metadata(
+    spark: SparkSession, sf_dir: str | None, edges: DataFrame | None = None
+) -> DataFrame:
     """Per-vertex metadata: count of Normal edges, state Normal, newest ts.
 
     Derived view per FIXTURES.md: ``count`` = edges in state 0 (the vertex
-    state), mirroring the count semantics of ``SqlShard.scala:499``.
+    state), mirroring the count semantics of ``SqlShard.scala:499``.  The
+    one derivation of a store's metadata: ``EdgeStore.from_edges`` and
+    ``merge.derive_metadata`` (no prior metadata) call it with ``edges``.
     """
     edges = edges if edges is not None else build_edges(spark, sf_dir)
     return edges.groupBy("graph_id", "source_id").agg(

@@ -21,8 +21,9 @@ def spark():
 @pytest.fixture(scope="session")
 def store(spark):
     from flockdb_spark.graph import EdgeStore
+    from flockdb_spark.sources.edges import build_edges
 
-    st = EdgeStore.from_sf_dir(spark, SF_DIR, cache=True)
+    st = EdgeStore.from_edges(spark, build_edges(spark, SF_DIR).cache())
     st.metadata = st.metadata.cache()
     return st
 

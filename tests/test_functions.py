@@ -5,8 +5,18 @@ import pytest
 from pyspark.sql import functions as F
 
 from flockdb_spark.functions import analytics, dedup, multimodal, similarity, text
-from flockdb_spark.operators.classes import QueryClass, query_class
+from flockdb_spark.operators.classes import QueryClass, QueryScope, query_class
 from conftest import edge_rows_df
+
+
+@pytest.fixture(autouse=True)
+def _query_scope():
+    """Every test runs in a query scope released at teardown, so the caches
+    an operator called outside ``scoped`` holds do not outlive its test."""
+    scope = QueryScope()
+    with scope.active():
+        yield scope
+    scope.release()
 
 
 def scoped(spark):

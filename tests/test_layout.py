@@ -111,3 +111,49 @@ def test_store_for_rebuilds_after_inputs_regenerated_in_place(spark, tmp_path, m
     assert sorted(cache.iterdir()) == sorted(
         [new_layout, twin_layout, scratch, cache / "sf-unrecorded"]
     )
+
+
+def test_cold_store_for_publishes_one_layout_and_persists_nothing(spark, tmp_path, monkeypatch):
+    """A cold ``store_for`` (empty layout cache, no memo) publishes exactly
+    the edges and metadata tables plus the recorded input path, and leaves
+    no persistent RDD behind: the session-level input scans are pinned
+    before counting, so any new entry is the build's own leak."""
+    from conftest import SF_DIR
+    from flockdb_spark import queries
+    from flockdb_spark.sources.edges import _read
+
+    for table in ("orders", "events", "lineitem"):
+        _read(spark, SF_DIR, table)
+    monkeypatch.setenv("FLOCKDB_STORE_CACHE", str(tmp_path / "cache"))
+    monkeypatch.setattr(queries, "_STORES", {})
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    before = persistent().size()
+
+    st = queries.store_for(spark, SF_DIR)
+    assert st.edges.count() > 0 and st.metadata.count() > 0
+    assert persistent().size() == before
+    layout = queries._store_cache_dir(SF_DIR)
+    assert sorted(p.name for p in layout.iterdir()) == ["edges", "input_path", "metadata"]
+
+
+def test_older_layout_version_is_superseded(spark, tmp_path, monkeypatch):
+    """A layout an older ``_LAYOUT_VERSION`` wrote for the same inputs is
+    removed, with every table it holds, when the current layout is
+    published (version 2 layouts also held a bucketed edge copy)."""
+    from pathlib import Path
+
+    from conftest import SF_DIR
+    from flockdb_spark import queries
+
+    cache = tmp_path / "cache"
+    monkeypatch.setenv("FLOCKDB_STORE_CACHE", str(cache))
+    monkeypatch.setattr(queries, "_STORES", {})
+    current = queries._LAYOUT_VERSION
+    monkeypatch.setattr(queries, "_LAYOUT_VERSION", current - 1)
+    old = queries._store_cache_dir(SF_DIR)
+    (old / "edges").mkdir(parents=True)
+    (old / "input_path").write_text(str(Path(SF_DIR).resolve()))
+    monkeypatch.setattr(queries, "_LAYOUT_VERSION", current)
+
+    queries.store_for(spark, SF_DIR)
+    assert list(cache.iterdir()) == [queries._store_cache_dir(SF_DIR)]

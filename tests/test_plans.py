@@ -39,6 +39,19 @@ def test_layout_prunes_partitions_and_pushes_filters(spark, store, tmp_path):
     assert m and "updated_at" not in m.group(1) and "count" not in m.group(1)
 
 
+def test_backward_twin_pushes_destination_filter(spark, store, tmp_path):
+    """Backward reads need no twin: the one published layout prunes the
+    graph partition and pushes the destination filter to parquet (row-group
+    stats do the rest), and it holds exactly the rows of the store."""
+    path = str(tmp_path / "edges_bwd")
+    store.write_optimized(path)
+    st = EdgeStore.read_optimized(spark, path)
+    plan = plan_str(st.backward(3, 42).select("source_id", "position"))
+    assert re.search(r"PartitionFilters:.*graph_id.*= 3", plan)
+    assert re.search(r"PushedFilters:.*EqualTo\(destination_id,42\)", plan)
+    assert st.edges.count() == store.edges.count()
+
+
 def test_semi_join_broadcasts_small_side(spark, store):
     small = spark.createDataFrame([(i,) for i in range(20)], "destination_id long")
     joined = store.graph(1).join(F.broadcast(small), "destination_id", "left_semi")
@@ -88,17 +101,6 @@ def test_wildcard_over_cache_stays_in_codegen(spark, store):
     post = df._jdf.queryExecution().executedPlan().toString()
     # "*(n)" prefixes mark WholeStageCodegen spans in the compact plan string
     assert re.search(r"\*\(\d+\) Filter", post)
-
-
-def test_backward_twin_pushes_destination_filter(spark, store, tmp_path):
-    path = str(tmp_path / "edges_bwd")
-    store.write_backward_twin(path)
-    st = EdgeStore.read_optimized(spark, path)
-    plan = plan_str(st.backward(3, 42).select("source_id", "position"))
-    assert re.search(r"PartitionFilters:.*graph_id.*= 3", plan)
-    assert re.search(r"PushedFilters:.*EqualTo\(destination_id,42\)", plan)
-    # and the twin holds exactly the same rows as the primary
-    assert st.edges.count() == store.edges.count()
 
 
 def test_stratified_sample_broadcasts_rates_no_fact_shuffle(spark):
@@ -298,50 +300,6 @@ def test_flat_compound_tree_is_one_scan_one_shuffle(spark, store):
     assert plan.count("InMemoryTableScan") <= 1
 
 
-def test_bucketed_layout_joins_without_exchange_on_edge_side(spark, store, tmp_path):
-    """The cluster co-location story for iterative graph ops (VERDICT r3
-    item 8): an edge table persisted via write_optimized(buckets=N) reports
-    hash(source_id) from the SCAN, so a source-keyed join plans no Exchange
-    on the edge side — the per-iteration shuffle a runtime repartition can't
-    remove without fighting AQE (measured note in analytics.pagerank)."""
-    path = str(tmp_path / "edges_bucketed")
-    spark.sql("DROP TABLE IF EXISTS edges_bucketed_t")
-    store.write_optimized(path, buckets=4, table="edges_bucketed_t")
-    bucketed = spark.table("edges_bucketed_t")
-
-    ranks = spark.range(0, 200).select(
-        F.col("id").alias("source_id"), (F.col("id") * 2).alias("rank")
-    )
-    joined = (
-        bucketed.where(F.col("graph_id") == 1)
-        .join(ranks.repartition(4, "source_id"), "source_id")
-        .groupBy("source_id")
-        .agg(F.sum("rank").alias("s"))
-    )
-    plan = plan_str(joined, "simple")
-    # the scan side of the join carries no Exchange: the bucket layout stands
-    # in for the shuffle (SelectedBucketsCount in the formatted plan)
-    formatted = plan_str(joined)
-    assert "SelectedBucketsCount" in formatted or "Bucketed: true" in formatted
-    # exactly one hashpartitioning exchange total: the ranks side; the
-    # bucketed edge side is exchange-free
-    assert plan.count("Exchange hashpartitioning") <= 1
-
-    # q07's residual exchange (PLANS.md "known job-floor residuals"): the
-    # per-source rank window needs hash(source_id) — on THIS layout the
-    # scan already provides it, so the window plans ZERO exchanges.  The
-    # range layout keeps the exchange and buys point-read pruning instead.
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("source_id").orderBy(F.desc("destination_id"))
-    ranked = (
-        bucketed.where((F.col("graph_id") == 1) & (F.col("state") == 0))
-        .select("source_id", "destination_id", F.row_number().over(w).alias("rn"))
-    )
-    assert plan_str(ranked, "simple").count("Exchange hashpartitioning") == 0
-    spark.sql("DROP TABLE IF EXISTS edges_bucketed_t")
-
-
 def test_hybrid_rrf_lexical_leg_is_single_corpus_pass(spark):
     """r8: the lexical leg's df comes from a count window over the matched
     subset, not a separately-built idf broadcast table — the whole hybrid
@@ -388,17 +346,15 @@ def test_hybrid_rrf_lexical_leg_is_single_corpus_pass(spark):
     assert "BroadcastExchange" not in raw, "literal fold regressed to a broadcast join"
 
 
-def test_unique_twin_fallback_and_rebuild_over_mutated_store(spark, tmp_path):
-    """Twin maintenance contract (graph.py `by_src_dst`, VERDICT r11 item 7):
-    the UNIQUE (source_id, destination_id) twin is written per layout
-    publish, not per write.  A store mutated via apply_oplog carries no
-    twin, so the dest-order page (q07's shape) falls back to the primary
-    layout — correct, one exchange slower; re-publishing the layout
-    rebuilds the twin and the twin-served page is row-identical."""
+def test_dest_page_over_mutated_store(spark, tmp_path):
+    """q07's dest-order page over a store mutated via apply_oplog: the add
+    is ranked, the removal is invisible, and re-publishing the mutated
+    store through the one layout (``write_optimized`` + ``read_optimized``)
+    serves the identical page with ONE hash exchange (the rank window's
+    hash(source_id); the range layout buys point-read pruning instead)."""
     from pyspark.sql import Window
 
     from flockdb_spark.operators.merge import apply_oplog
-    from flockdb_spark.queries import register_unique_twin
 
     rows = [(1, s, d, d, 10, 0) for s in (1, 2) for d in (101, 102, 103)]
     st = EdgeStore.from_edges(spark, edge_rows_df(spark, rows))
@@ -409,34 +365,24 @@ def test_unique_twin_fallback_and_rebuild_over_mutated_store(spark, tmp_path):
     )
     e2, m2 = apply_oplog(st.edges, st.metadata, ops)
     mutated = EdgeStore.from_edges(spark, e2, m2)
-    # apply_oplog does NOT maintain the twin — the documented contract
-    assert mutated.by_src_dst is None
+    w = Window.partitionBy("source_id").orderBy(F.desc("destination_id"))
 
-    def dest_page(base):
-        w = Window.partitionBy("source_id").orderBy(F.desc("destination_id"))
-        return sorted(
-            (r["source_id"], r["destination_id"], r["rn"])
-            for r in base.where((F.col("graph_id") == 1) & (F.col("state") == 0))
-            .select("source_id", "destination_id", F.row_number().over(w).alias("rn"))
-            .collect()
+    def ranked(base):
+        return base.where((F.col("graph_id") == 1) & (F.col("state") == 0)).select(
+            "source_id", "destination_id", F.row_number().over(w).alias("rn")
         )
 
-    fallback = dest_page(mutated.edges)  # q07's fallback: the primary layout
-    # the oplog really landed: the add is ranked, the removal is invisible
-    assert (1, 999, 1) in fallback
-    assert all(not (s == 2 and d == 102) for (s, d, _) in fallback)
-    # re-publish the layout (the documented rebuild step) and serve from it
-    tpath = str(tmp_path / "twin_rebuilt")
-    spark.sql("DROP TABLE IF EXISTS twin_rebuild_scratch")
-    spark.sql("DROP TABLE IF EXISTS twin_rebuilt_t")
-    mutated.write_unique_twin(tpath, table="twin_rebuild_scratch")
-    twin = register_unique_twin(spark, tpath, "twin_rebuilt_t")
-    assert dest_page(twin) == fallback
-    # and the rebuilt twin serves the window with ZERO exchanges (the plan
-    # property the twin exists for)
-    w = Window.partitionBy("source_id").orderBy(F.desc("destination_id"))
-    ranked = twin.where((F.col("graph_id") == 1) & (F.col("state") == 0)).select(
-        "source_id", "destination_id", F.row_number().over(w).alias("rn")
+    def dest_page(base):
+        return sorted(
+            (r["source_id"], r["destination_id"], r["rn"]) for r in ranked(base).collect()
+        )
+
+    page = dest_page(mutated.edges)
+    assert page == sorted(
+        [(1, 999, 1), (1, 103, 2), (1, 102, 3), (1, 101, 4), (2, 103, 1), (2, 101, 2)]
     )
-    assert plan_str(ranked, "simple").count("Exchange hashpartitioning") == 0
-    spark.sql("DROP TABLE IF EXISTS twin_rebuilt_t")
+    path = str(tmp_path / "republished")
+    mutated.write_optimized(path)
+    published = EdgeStore.read_optimized(spark, path).edges
+    assert dest_page(published) == page
+    assert plan_str(ranked(published), "simple").count("Exchange hashpartitioning") == 1

@@ -854,31 +854,27 @@ def test_serving_session_inherits_the_parent_conf(svc, spark):
         spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
 
 
-def test_writes_drop_the_stale_unique_twin(spark):
-    """graph.py's contract: a mutated store has no UNIQUE-index twin.
-    ``execute`` and ``bulk_load`` publish new tables, so q07 over the same
-    memoized store must rank the new edge, not serve the pre-write twin."""
+def test_q07_ranks_the_edges_execute_and_bulk_load_publish(spark):
+    """``execute`` and ``bulk_load`` publish new tables into the memoized
+    store, so q07 over that store ranks the new edge, not the pre-write
+    rows."""
     from conftest import SF_DIR as sf_dir
     from flockdb_spark.queries import params_for, q07, store_for
 
     st = store_for(spark, sf_dir)
-    saved = (st.edges, st.metadata, st.by_src_dst)
-    assert st.by_src_dst is not None
+    saved = (st.edges, st.metadata)
     first = int(params_for(spark, sf_dir)["first"])
     try:
         svc = FlockService(st)
         svc.execute([op(ExecuteOperationType.ADD, first, (10**12,))], at=2_000_000_000)
-        assert st.by_src_dst is None
         top = q07(spark, sf_dir).where(f"source_id = {first} AND rn = 1").collect()
         assert [r["destination_id"] for r in top] == [10**12]
 
-        st.by_src_dst = saved[2]
         svc.bulk_load(edge_rows_df(spark, [(1, first, 10**12 + 1, 1, 100, 0)]))
-        assert st.by_src_dst is None
         top = q07(spark, sf_dir).where(f"source_id = {first} AND rn = 1").collect()
         assert [r["destination_id"] for r in top] == [10**12 + 1]
     finally:
-        st.edges, st.metadata, st.by_src_dst = saved
+        st.edges, st.metadata = saved
 
 
 def test_racing_rebinds_never_leave_a_stale_view(svc, monkeypatch):

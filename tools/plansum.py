@@ -111,15 +111,16 @@ def main() -> None:
         "",
         "## Known job-floor residuals",
         "",
-        "- **q07** is exchange-FREE as of r11: the store materializes the",
-        "  reference's UNIQUE (source_id, destination_id) index as a bucketed",
-        "  twin (graph.py write_unique_twin ≙ the forced",
-        "  unique_source_id_destination_id index, shards/SqlShard.scala:240-244)",
-        "  and the dest-order rank window inherits hash(source_id) partitioning",
-        "  from the bucketed scan — 1 job / 1 stage / 8 tasks at sf3.0, with",
-        "  the 10-source probe inlined per R9's <=64 IN rule.  The residual",
-        "  ~0.4 s wall is the Spark job floor (DuckDB's denominator is",
-        "  sub-0.1 s).",
+        "- **q07** is a pruned primary scan plus one hash exchange: the",
+        "  reference forces its UNIQUE (source_id, destination_id) index for",
+        "  dest-ordered scans (shards/SqlShard.scala:240-244); here the one",
+        "  store layout serves it — graph_id partition pruned, the 10-source",
+        "  probe inlined per R9's <=64 IN rule and pushed to parquet (source-",
+        "  range file skipping), then one hashpartitioning(source_id)",
+        "  exchange of the surviving rows feeds the rank window.  2 jobs /",
+        "  3 stages / 5 tasks at sf0.1 (the bucketed twin it replaced ran 1 /",
+        "  1 / 8 at the same ~0.3 s warm wall); the residual is the Spark",
+        "  job floor (DuckDB's denominator is sub-0.1 s).",
         "- **q17** (the only core line whose identical-scale ratio rose",
         "  r6→r7, 7.2x→10.1x at sf1.0) re-audited in r8 with the status",
         "  tracker: the whole replay is exactly 2 jobs / 3 stages / 72",
