@@ -67,6 +67,13 @@ class EdgeQuery:
 _service_ids = itertools.count()
 
 
+def _release(checkpointed: DataFrame) -> None:
+    """Drop the blocks of a ``localCheckpoint`` frame: its plan is one
+    ``LogicalRDD`` over the persisted RDD, which ``unpersist`` on the frame
+    (a CacheManager call) never reaches."""
+    checkpointed._jdf.logicalPlan().rdd().unpersist(False)
+
+
 def _leaves(nodes):
     """Every leaf (Simple / WhereIn) of a list of query trees."""
     stack = list(nodes)
@@ -139,6 +146,7 @@ class FlockService:
         self._views_db = parent.conf.get("spark.sql.globalTempDatabase")
         self._views = f"flock_serving_{next(_service_ids)}"
         self._bind_lock = threading.Lock()
+        self._checkpoints: list[DataFrame] = []  # the store tables this service made
         self._bind()
 
     def _bind(self) -> tuple[DataFrame, DataFrame, EdgeStore]:
@@ -170,10 +178,32 @@ class FlockService:
             view = self._bind()[2]
         return view
 
+    def _checkpoint(self, *frames: DataFrame) -> list[DataFrame]:
+        """Eager local checkpoints of ``frames``, all or none: if one fails
+        (an O5 timeout cancelling the job group), those already made are
+        released before the error propagates."""
+        made = []
+        try:
+            for df in frames:
+                made.append(df.localCheckpoint(eager=True))
+        except BaseException:
+            for df in made:
+                _release(df)
+            raise
+        self._checkpoints.extend(made)
+        return made
+
     def _swap(self, edges: DataFrame, metadata: DataFrame) -> None:
-        """Publish a write: new tables, serving view re-bound."""
+        """Publish a write: new tables, serving view re-bound, then every
+        checkpoint this service made that the store no longer serves is
+        released (a direct ``store.edges =`` assignment's too)."""
         self.store.edges, self.store.metadata = edges, metadata
         self._bind()
+        live = [df for df in self._checkpoints if df is edges or df is metadata]
+        for df in self._checkpoints:
+            if df is not edges and df is not metadata:
+                _release(df)
+        self._checkpoints = live
 
     def _classed(self, cls: str):
         """Scheduler-pool + job-group + timeout scope for one service action
@@ -406,7 +436,9 @@ class FlockService:
         action, so class it there —
         ``with query_class(spark, QueryClass.SELECT_COPY): df.write...``
         (O5; the reference's 15 s SelectCopy budget lives in
-        ``FlockService.timeouts``)."""
+        ``FlockService.timeouts``).  Run it before the next ``execute`` or
+        ``bulk_load``: a write releases the checkpointed tables the frame
+        reads."""
         df = self.store.edges if graph_id is None else self.store.graph(graph_id)
         return df.orderBy("source_id", "destination_id")
 
@@ -421,10 +453,13 @@ class FlockService:
         """W8 — ``bulkUnsafeInsertEdges/Metadata`` (``SqlShard.scala:402-430``):
         plain append, bypassing LWW and count maintenance — the copy path's
         fast lane.  Use ``execute``/reconcile for anything user-facing."""
-        new_edges = self.store.edges.unionByName(edges).localCheckpoint(eager=True)
-        new_metadata = self.store.metadata
-        if metadata is not None:
-            new_metadata = new_metadata.unionByName(metadata).localCheckpoint(eager=True)
+        if metadata is None:
+            [new_edges] = self._checkpoint(self.store.edges.unionByName(edges))
+            new_metadata = self.store.metadata
+        else:
+            new_edges, new_metadata = self._checkpoint(
+                self.store.edges.unionByName(edges), self.store.metadata.unionByName(metadata)
+            )
         self._swap(new_edges, new_metadata)
 
     # -- writes (EdgesService.scala:121-129) --------------------------------
@@ -449,6 +484,5 @@ class FlockService:
             # Both checkpoints land in LOCALS first so an O5 timeout cancelling
             # the job group mid-write can never tear the store (edges updated,
             # metadata stale); the store is swapped only after both succeed.
-            new_edges = edges.localCheckpoint(eager=True)
-            new_metadata = metadata.localCheckpoint(eager=True)
+            new_edges, new_metadata = self._checkpoint(edges, metadata)
         self._swap(new_edges, new_metadata)

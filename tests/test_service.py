@@ -360,6 +360,50 @@ def test_execute_timeout_never_tears_the_store(svc):
     assert svc.contains(1, 1, 99)
 
 
+def _persistent_rdds(spark):
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+def _checkpoint_rdd(df):
+    return df._jdf.logicalPlan().rdd().id()
+
+
+def test_writes_release_the_checkpoints_they_supersede(svc, spark):
+    """Each write swaps in fresh edge and metadata checkpoints and releases
+    the ones it replaced: over three single-edge executes the RDDs the
+    service pins stay exactly the two its store serves."""
+    before = _persistent_rdds(spark)
+    for i, dest in enumerate((90, 91, 92)):
+        svc.execute([op(ExecuteOperationType.ADD, 1, (dest,))], at=6000 + i)
+        live = {_checkpoint_rdd(svc.store.edges), _checkpoint_rdd(svc.store.metadata)}
+        assert _persistent_rdds(spark) - before == live
+    assert all(svc.contains(1, 1, d) for d in (90, 91, 92))
+    svc.bulk_load(edge_rows_df(spark, [(1, 3, 30, 300, 100, 0)]))
+    live = {_checkpoint_rdd(svc.store.edges), _checkpoint_rdd(svc.store.metadata)}
+    assert _persistent_rdds(spark) - before == live
+    assert svc.contains(3, 1, 30)
+
+
+def test_a_failed_write_releases_the_checkpoints_it_made(svc, spark, monkeypatch):
+    """When the second checkpoint of a write fails (as under an O5 timeout),
+    the first, already made, is released and the store is untouched."""
+    edges = svc.store.edges
+    made = []
+    real = type(edges).localCheckpoint
+
+    def recording(self, *args, **kwargs):
+        made.append(real(self, *args, **kwargs))
+        return made[-1]
+
+    monkeypatch.setattr(type(edges), "localCheckpoint", recording)
+    bad = spark.range(1).selectExpr("raise_error('cancelled') AS id")
+    with pytest.raises(Exception, match="cancelled"):
+        svc._checkpoint(spark.range(3), bad)
+    assert len(made) == 1
+    assert _checkpoint_rdd(made[0]) not in _persistent_rdds(spark)
+    assert svc.store.edges is edges
+
+
 def test_select_edges_batch_classified_like_single(svc, spark):
     """ADVICE r7: a batch of WhereIn pages must land in the intersection
     pool (class_for_trees), not unconditionally in SELECT — parity with the
