@@ -7,9 +7,12 @@ select2 / select_edges / execute  (count and select are the deprecated pair).
 
 from __future__ import annotations
 
+import collections
+import contextlib
 import itertools
 import threading
 import time
+import weakref
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
@@ -72,6 +75,92 @@ def _release(checkpointed: DataFrame) -> None:
     ``LogicalRDD`` over the persisted RDD, which ``unpersist`` on the frame
     (a CacheManager call) never reaches."""
     checkpointed._jdf.logicalPlan().rdd().unpersist(False)
+
+
+class _Leases:
+    """The store tables service writes made, and the reads in flight on them.
+
+    A read leases the ``(edges, metadata)`` pair it reads for its whole run:
+    every service read and write, and a ``select_all`` frame for as long as
+    the frame lives.  A write publishes its tables and supersedes the old
+    ones; a superseded table that a write made (a local checkpoint) is
+    released at once if nothing leases it, else when its last lease ends.
+    Leasing and publishing share one lock, so a read never leases a table
+    already superseded, and a write's own checkpoints are never released
+    before it publishes them.  One registry for the process: services
+    sharing a store see each other's reads.
+
+    A collected ``select_all`` frame's lease is queued, not ended, by its
+    finalizer (which may run inside any allocation, this class's locked
+    code included) and ends at the next lease, end or publish."""
+
+    def __init__(self):
+        self._lock = threading.Lock()
+        self._made: weakref.WeakValueDictionary = weakref.WeakValueDictionary()
+        self._reads: collections.Counter = collections.Counter()  # id(table) -> leases
+        self._superseded: set[int] = set()  # made tables superseded while leased
+        self._dropped: collections.deque = collections.deque()
+
+    def made(self, tables) -> None:
+        with self._lock:
+            for df in tables:
+                self._made[id(df)] = df
+
+    def lease(self, store: EdgeStore) -> tuple[DataFrame, DataFrame]:
+        with self._lock:
+            free = self._drain()
+            tables = (store.edges, store.metadata)
+            self._reads.update(id(df) for df in tables)
+        self._free(free)
+        return tables
+
+    def end(self, tables) -> None:
+        with self._lock:
+            free = self._drain() + self._end(tables)
+        self._free(free)
+
+    def end_later(self, tables) -> None:
+        self._dropped.append(tables)
+
+    def publish(self, store: EdgeStore, edges: DataFrame, metadata: DataFrame) -> None:
+        with self._lock:
+            free = self._drain()
+            old = (store.edges, store.metadata)
+            store.edges, store.metadata = edges, metadata
+            for df in old:
+                if df is edges or df is metadata or self._made.get(id(df)) is not df:
+                    continue
+                del self._made[id(df)]
+                if self._reads[id(df)]:
+                    self._superseded.add(id(df))
+                else:
+                    free.append(df)
+        self._free(free)
+
+    def _end(self, tables) -> list[DataFrame]:
+        free = []
+        for df in tables:
+            self._reads[id(df)] -= 1
+            if not self._reads[id(df)]:
+                del self._reads[id(df)]
+                if id(df) in self._superseded:
+                    self._superseded.discard(id(df))
+                    free.append(df)
+        return free
+
+    def _drain(self) -> list[DataFrame]:
+        free = []
+        while self._dropped:
+            free += self._end(self._dropped.popleft())
+        return free
+
+    @staticmethod
+    def _free(tables) -> None:
+        for df in tables:
+            _release(df)
+
+
+_LEASES = _Leases()
 
 
 def _leaves(nodes):
@@ -146,11 +235,10 @@ class FlockService:
         self._views_db = parent.conf.get("spark.sql.globalTempDatabase")
         self._views = f"flock_serving_{next(_service_ids)}"
         self._bind_lock = threading.Lock()
-        self._checkpoints: list[DataFrame] = []  # the store tables this service made
-        self._bind()
+        self._bind(store.edges, store.metadata)
 
-    def _bind(self) -> tuple[DataFrame, DataFrame, EdgeStore]:
-        """(Re)bind the serving view to the store's current tables.
+    def _bind(self, edges: DataFrame, metadata: DataFrame) -> tuple[DataFrame, DataFrame, EdgeStore]:
+        """(Re)bind the serving view to ``edges`` and ``metadata``.
 
         ``_serving`` is ``(edges, metadata, view store)``: the tables bound
         and the store over them, published as one attribute so a reader
@@ -158,7 +246,6 @@ class FlockService:
         lock keeps one bind's replace-then-read of the shared view names
         from interleaving with another's."""
         with self._bind_lock:
-            edges, metadata = self.store.edges, self.store.metadata
             views = []
             for df, table in ((edges, "edges"), (metadata, "metadata")):
                 view = f"{self._views}_{table}"
@@ -169,14 +256,26 @@ class FlockService:
             )
             return self._serving
 
-    def _store_for(self, forward: bool = True) -> EdgeStore:
-        """The serving view for a pruned read, else the main store."""
+    def _store_for(self, forward: bool = True, tables=None) -> EdgeStore:
+        """The serving view for a pruned read, else the main session's
+        store, over ``tables`` (default: the store's current pair)."""
+        edges, metadata = tables or (self.store.edges, self.store.metadata)
         if not forward:
-            return self.store
-        edges, metadata, view = self._serving
-        if edges is not self.store.edges or metadata is not self.store.metadata:
-            view = self._bind()[2]
-        return view
+            return EdgeStore(self.store.spark, edges, metadata)
+        serving = self._serving
+        if serving[0] is not edges or serving[1] is not metadata:
+            serving = self._bind(edges, metadata)
+        return serving[2]
+
+    @contextlib.contextmanager
+    def _reading(self, forward: bool = True):
+        """``_store_for`` over the store's current tables, leased until the
+        block exits: a write that lands meanwhile releases them only then."""
+        tables = _LEASES.lease(self.store)
+        try:
+            yield self._store_for(forward, tables)
+        finally:
+            _LEASES.end(tables)
 
     def _checkpoint(self, *frames: DataFrame) -> list[DataFrame]:
         """Eager local checkpoints of ``frames``, all or none: if one fails
@@ -190,20 +289,16 @@ class FlockService:
             for df in made:
                 _release(df)
             raise
-        self._checkpoints.extend(made)
+        _LEASES.made(made)
         return made
 
     def _swap(self, edges: DataFrame, metadata: DataFrame) -> None:
-        """Publish a write: new tables, serving view re-bound, then every
-        checkpoint this service made that the store no longer serves is
-        released (a direct ``store.edges =`` assignment's too)."""
-        self.store.edges, self.store.metadata = edges, metadata
-        self._bind()
-        live = [df for df in self._checkpoints if df is edges or df is metadata]
-        for df in self._checkpoints:
-            if df is not edges and df is not metadata:
-                _release(df)
-        self._checkpoints = live
+        """Publish a write: new tables, serving view re-bound.  The tables
+        it supersedes are released once no read leases them (``_Leases``);
+        a table replaced by a direct ``store.edges =`` assignment is not
+        (Spark's ContextCleaner drops it after a JVM GC)."""
+        _LEASES.publish(self.store, edges, metadata)
+        self._bind(edges, metadata)
 
     def _classed(self, cls: str):
         """Scheduler-pool + job-group + timeout scope for one service action
@@ -219,9 +314,9 @@ class FlockService:
         Thrift ``get`` THROWS ``FlockException`` on absence
         (``Flockdb.thrift:141-144``); the Pythonic default here returns
         ``None``.  Pass ``strict=True`` for reference-exact raising."""
-        with self._classed(QueryClass.SELECT_SINGLE):
+        with self._classed(QueryClass.SELECT_SINGLE), self._reading() as store:
             rows = (
-                self._store_for().edges.where(
+                store.edges.where(
                     f"graph_id = {int(graph_id)} AND source_id = {_bigint(source_id)} "
                     f"AND destination_id = {_bigint(destination_id)}"
                 )
@@ -247,9 +342,9 @@ class FlockService:
         Same documented divergence as :meth:`get`: the reference throws on
         absence (``Flockdb.thrift:146-149``); default here is ``None``,
         ``strict=True`` raises ``FlockException``."""
-        with self._classed(QueryClass.SELECT_METADATA):
+        with self._classed(QueryClass.SELECT_METADATA), self._reading() as store:
             rows = (
-                self._store_for().metadata.where(
+                store.metadata.where(
                     f"graph_id = {int(graph_id)} AND source_id = {_bigint(source_id)}"
                 )
                 .limit(1)
@@ -283,9 +378,9 @@ class FlockService:
         if not queries:
             return []
         trees = [compile_select(q.operations) for q in queries]
-        store = self._store_for(all(leaf.term.forward for leaf in _leaves(trees)))
+        forward = all(leaf.term.forward for leaf in _leaves(trees))
         cls = class_for_trees(trees, INLINE_IN_LIST_MAX)
-        with self._classed(cls):
+        with self._classed(cls), self._reading(forward) as store:
             batched = None
             if all(q.cursor == CURSOR_START for q in queries):
                 batched = batch_flat_pages(
@@ -333,8 +428,8 @@ class FlockService:
         cursor: Cursor | str,
     ) -> Page:
         node = Simple(term) if destination_ids is None else WhereIn(term, destination_ids)
-        store = self._store_for(term.forward)
-        with self._classed(class_for_trees([node], INLINE_IN_LIST_MAX)):
+        cls = class_for_trees([node], INLINE_IN_LIST_MAX)
+        with self._classed(cls), self._reading(term.forward) as store:
             return paginate(
                 node.edges(store),
                 "position",
@@ -362,10 +457,6 @@ class FlockService:
                 self._term_page(q.term, q.destination_ids, q.count, q.cursor)
                 for q in queries
             ]
-        batched = batch_edge_pages(
-            self._store_for(all(q.term.forward for q in queries)),
-            [(q.term, q.destination_ids, q.count) for q in queries],
-        )
         by_qix: dict[int, list] = {i: [] for i in range(len(queries))}
         # Classify the whole batch by its heaviest member, exactly as the
         # single-query path does per-tree (the reference classifies every
@@ -375,8 +466,12 @@ class FlockService:
             Simple(q.term) if q.destination_ids is None else WhereIn(q.term, q.destination_ids)
             for q in queries
         ]
-        with self._classed(class_for_trees(nodes, INLINE_IN_LIST_MAX)):
-            rows_all = batched.collect()
+        with self._reading(all(q.term.forward for q in queries)) as store:
+            batched = batch_edge_pages(
+                store, [(q.term, q.destination_ids, q.count) for q in queries]
+            )
+            with self._classed(class_for_trees(nodes, INLINE_IN_LIST_MAX)):
+                rows_all = batched.collect()
         for r in rows_all:
             by_qix[r["qix"]].append(r)
         out = []
@@ -407,8 +502,7 @@ class FlockService:
         lookups for all programs are batched into a single metadata collect
         (``Flockdb.thrift:154-156`` takes the whole program list at once)."""
         trees = [compile_select(p) for p in programs]
-        store = self._store_for()
-        with self._classed(QueryClass.SELECT):
+        with self._classed(QueryClass.SELECT), self._reading() as store:
             counts = fetch_leaf_counts(store, trees)
             return [size_estimate(store, t, _counts=counts) for t in trees]
 
@@ -436,30 +530,49 @@ class FlockService:
         action, so class it there —
         ``with query_class(spark, QueryClass.SELECT_COPY): df.write...``
         (O5; the reference's 15 s SelectCopy budget lives in
-        ``FlockService.timeouts``).  Run it before the next ``execute`` or
-        ``bulk_load``: a write releases the checkpointed tables the frame
-        reads."""
-        df = self.store.edges if graph_id is None else self.store.graph(graph_id)
-        return df.orderBy("source_id", "destination_id")
+        ``FlockService.timeouts``).  The frame keeps the tables it reads
+        leased while it lives, so a write landing before or during its copy
+        job does not release them; a frame derived from it holds no lease,
+        so keep this one referenced until the job ends."""
+
+        def read(st: EdgeStore) -> DataFrame:
+            df = st.edges if graph_id is None else st.graph(graph_id)
+            return df.orderBy("source_id", "destination_id")
+
+        return self._leased_frame(read)
 
     def select_all_metadata(self, graph_id: int | None = None) -> DataFrame:
-        """R16 metadata pass (``SqlShard.scala:151-173``)."""
-        md = self.store.metadata
-        if graph_id is not None:
-            md = md.where(F.col("graph_id") == graph_id)
-        return md.orderBy("source_id")
+        """R16 metadata pass (``SqlShard.scala:151-173``); leased as
+        :meth:`select_all`'s frame is."""
+
+        def read(st: EdgeStore) -> DataFrame:
+            md = st.metadata
+            if graph_id is not None:
+                md = md.where(F.col("graph_id") == graph_id)
+            return md.orderBy("source_id")
+
+        return self._leased_frame(read)
+
+    def _leased_frame(self, read) -> DataFrame:
+        """``read`` over the store's current tables, leased until the frame
+        it returns is garbage-collected."""
+        tables = _LEASES.lease(self.store)
+        df = read(EdgeStore(self.store.spark, *tables))
+        weakref.finalize(df, _LEASES.end_later, tables)
+        return df
 
     def bulk_load(self, edges: DataFrame, metadata: DataFrame | None = None) -> None:
         """W8 — ``bulkUnsafeInsertEdges/Metadata`` (``SqlShard.scala:402-430``):
         plain append, bypassing LWW and count maintenance — the copy path's
         fast lane.  Use ``execute``/reconcile for anything user-facing."""
-        if metadata is None:
-            [new_edges] = self._checkpoint(self.store.edges.unionByName(edges))
-            new_metadata = self.store.metadata
-        else:
-            new_edges, new_metadata = self._checkpoint(
-                self.store.edges.unionByName(edges), self.store.metadata.unionByName(metadata)
-            )
+        with self._reading(False) as store:
+            if metadata is None:
+                [new_edges] = self._checkpoint(store.edges.unionByName(edges))
+                new_metadata = store.metadata
+            else:
+                new_edges, new_metadata = self._checkpoint(
+                    store.edges.unionByName(edges), store.metadata.unionByName(metadata)
+                )
         self._swap(new_edges, new_metadata)
 
     # -- writes (EdgesService.scala:121-129) --------------------------------
@@ -467,10 +580,10 @@ class FlockService:
     def execute(self, operations: list[ExecuteOperation], at: int | None = None) -> None:
         now = at if at is not None else int(time.time())
         ops_df = compile_execute(self.store.spark, operations, now)
-        with self._classed(QueryClass.EXECUTE):
+        with self._reading(False) as store, self._classed(QueryClass.EXECUTE):
             edges, metadata = apply_oplog(
-                self.store.edges,
-                self.store.metadata,
+                store.edges,
+                store.metadata,
                 ops_df,
                 resolve_with_metadata=True,
                 # the compiled program's shape is known here — prune dead branches

@@ -10,16 +10,17 @@ Every Python worker runs under the engine's own daemon module,
 worker re-reads the central directory of every zip and jar on its
 ``sys.path`` before each task (160-235 ms a task on Python 3.11); the
 engine's daemon re-reads an archive only when its size or mtime changed.
-The package's parent directory is put on ``spark.executorEnv.PYTHONPATH``
-so workers import the engine (the daemon and every engine UDF) from any
-working directory.
+The package's parent directory is put ahead of any configured
+``spark.executorEnv.PYTHONPATH`` in the environment every Python function
+ships to its workers (``SparkContext.environment``, read once the JVM has
+the full conf), so workers import the engine (the daemon and every engine
+UDF) from any working directory.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark import SparkConf
 from pyspark.sql import SparkSession
 
 _PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -41,13 +42,6 @@ def _default_heap(cap_gb: int = 32, floor_gb: int = 8) -> str:
     except OSError:
         pass
     return f"{cap_gb}g"
-
-
-def _executor_pythonpath() -> str:
-    """The package's parent directory, ahead of any configured value."""
-    existing = SparkConf().get("spark.executorEnv.PYTHONPATH", "")
-    parts = [p for p in existing.split(os.pathsep) if p and p != _PACKAGE_PARENT]
-    return os.pathsep.join([_PACKAGE_PARENT, *parts])
 
 
 def get_spark(
@@ -94,9 +88,8 @@ def get_spark(
         # Arrow batches for the pandas-UDF slow path (similarity/multimodal)
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # the engine's daemon: no per-task zip/jar directory re-read
-        # (pyworker.py); workers find the package from any cwd
+        # (pyworker.py)
         .config("spark.python.daemon.module", "flockdb_spark.pyworker")
-        .config("spark.executorEnv.PYTHONPATH", _executor_pythonpath())
         # whole-stage-codegen class cache: the default 100 entries thrash on
         # a many-query session (this engine's 53-line bench compiles
         # 300-500 codegen units; r9 measured every pass recompiling every
@@ -134,5 +127,12 @@ def get_spark(
         # the same interval a long-lived production driver wants.
         .config("spark.cleaner.periodicGC.interval", "2min")
     )
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    # workers find the package from any cwd: its parent goes ahead of the
+    # configured spark.executorEnv.PYTHONPATH, which the context has read
+    # into the environment every Python function ships with
+    env = spark.sparkContext.environment
+    paths = [p for p in env.get("PYTHONPATH", "").split(os.pathsep) if p and p != _PACKAGE_PARENT]
+    env["PYTHONPATH"] = os.pathsep.join([_PACKAGE_PARENT, *paths])
+    return spark
 

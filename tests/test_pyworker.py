@@ -95,6 +95,11 @@ def test_add_py_file_after_a_first_python_job(spark, tmp_path):
 
 
 def test_engine_udfs_run_outside_the_repo_cwd(tmp_path):
+    """From another cwd with PYTHONPATH unset, workers import the engine,
+    and a configured ``spark.executorEnv.PYTHONPATH`` still reaches them."""
+    extra = tmp_path / "extra"
+    extra.mkdir()
+    (extra / "flock_probe_path.py").write_text("VALUE = 7\n")
     script = textwrap.dedent(f"""
         import sys
         sys.path.insert(0, {str(REPO)!r})
@@ -106,12 +111,16 @@ def test_engine_udfs_run_outside_the_repo_cwd(tmp_path):
             [(i, [1.0, float(i % 3), float(i % 5)]) for i in range(20)],
             "vec_id long, embedding array<float>")
         print("ROWS", len(similarity.brute_force_topk(emb, [0, 1], k=3).collect()))
+        probe = spark.sparkContext.parallelize([0], 1)
+        print("CONFIGURED", probe.map(lambda _: __import__("flock_probe_path").VALUE).collect())
         spark.stop()
     """)
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
     env.setdefault("SPARK_DRIVER_MEMORY", "1g")
+    env["PYSPARK_SUBMIT_ARGS"] = f"--conf spark.executorEnv.PYTHONPATH={extra} pyspark-shell"
     out = subprocess.run(
         [sys.executable, "-c", script], cwd=tmp_path, env=env,
         capture_output=True, text=True, timeout=300,
     )
     assert "ROWS 6" in out.stdout, out.stderr[-3000:]
+    assert "CONFIGURED [7]" in out.stdout, out.stderr[-3000:]

@@ -404,6 +404,120 @@ def test_a_failed_write_releases_the_checkpoints_it_made(svc, spark, monkeypatch
     assert svc.store.edges is edges
 
 
+def test_a_read_keeps_its_tables_across_a_write(svc, spark):
+    """A read leases the tables it reads: a write landing mid-read, from
+    this service or another over the same store, releases them only when
+    the read ends, on the serving view and on the main session alike."""
+    other = FlockService(svc.store)
+    for i, (reader, forward) in enumerate(((svc, True), (other, True), (svc, False))):
+        svc.execute([op(ExecuteOperationType.ADD, 1, (90 + i,))], at=6000 + 2 * i)
+        old = _checkpoint_rdd(svc.store.edges)
+        with reader._reading(forward) as store:
+            svc.execute([op(ExecuteOperationType.ADD, 1, (95 + i,))], at=6001 + 2 * i)
+            assert old in _persistent_rdds(spark)
+            dests = {r["destination_id"] for r in store.edges.where("source_id = 1").collect()}
+        assert 90 + i in dests and 95 + i not in dests
+        assert old not in _persistent_rdds(spark)
+
+
+def test_a_read_in_flight_on_another_thread_survives_a_write(svc, spark, monkeypatch):
+    """A select2 already holding the store's tables when an execute lands
+    on another thread still runs to completion and returns the rows it
+    started on; the superseded tables go when it ends."""
+    import threading
+
+    import flockdb_spark.service as svcmod
+
+    svc.execute([op(ExecuteOperationType.ADD, 1, (90,))], at=6000)
+    old = _checkpoint_rdd(svc.store.edges)
+    reading, written = threading.Event(), threading.Event()
+    real = svcmod.batch_flat_pages
+
+    def held(store, programs):
+        reading.set()
+        assert written.wait(timeout=60)
+        return real(store, programs)
+
+    monkeypatch.setattr(svcmod, "batch_flat_pages", held)
+    S = SelectOperationType.SIMPLE_QUERY
+    prog = [SelectOperation(S, QueryTerm(1, 1)), SelectOperation(S, QueryTerm(2, 1)),
+            SelectOperation(SelectOperationType.UNION)]
+    got = {}
+    reader = threading.Thread(target=lambda: got.update(page=svc.select2([SelectQuery(prog)])[0]))
+    reader.start()
+    assert reading.wait(timeout=60)
+    svc.execute([op(ExecuteOperationType.ADD, 1, (95,))], at=6001)
+    assert old in _persistent_rdds(spark)
+    written.set()
+    reader.join(timeout=120)
+    assert sorted(v for v, _ in got["page"].rows) == [10, 11, 12, 13, 90]
+    assert old not in _persistent_rdds(spark)
+    assert svc.contains(1, 1, 95)
+
+
+def test_a_select_all_frame_keeps_its_tables_while_it_lives(svc, spark):
+    """A copy job's frame from ``select_all`` leases the tables it reads:
+    it still runs after a write, and the superseded tables go once it is
+    collected (at the next service call)."""
+    import gc
+
+    svc.execute([op(ExecuteOperationType.ADD, 1, (90,))], at=6000)
+    old = _checkpoint_rdd(svc.store.edges)
+    frame, metadata = svc.select_all(1), svc.select_all_metadata(1)
+    svc.execute([op(ExecuteOperationType.ADD, 1, (95,))], at=6001)
+    rows = frame.collect()
+    assert [r["destination_id"] for r in rows if r["source_id"] == 1] == [10, 11, 12, 90]
+    assert [r["count"] for r in metadata.where("source_id = 1").collect()] == [4]
+    del frame, metadata
+    gc.collect()
+    assert svc.contains(1, 1, 95)
+    assert old not in _persistent_rdds(spark)
+
+
+def test_overlapping_writes_leave_a_readable_store(svc, spark, monkeypatch):
+    """Two executes on two threads, both past reading the store before
+    either publishes: neither releases a table the other still reads or
+    has made but not yet published, so the store stays readable and holds
+    exactly its two live checkpoints."""
+    import threading
+
+    import flockdb_spark.service as svcmod
+
+    svc.execute([op(ExecuteOperationType.ADD, 1, (90,))], at=6000)
+    before = _persistent_rdds(spark) - {
+        _checkpoint_rdd(svc.store.edges), _checkpoint_rdd(svc.store.metadata)
+    }
+    both_read = threading.Barrier(2, timeout=60)
+    real = svcmod.apply_oplog
+
+    def apply_together(*args, **kwargs):
+        both_read.wait()
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(svcmod, "apply_oplog", apply_together)
+    errors = []
+
+    def write(dest, at):
+        try:
+            svc.execute([op(ExecuteOperationType.ADD, 1, (dest,))], at=at)
+        except Exception as e:  # surfaced below
+            errors.append(e)
+
+    writers = [threading.Thread(target=write, args=(d, 6001 + i)) for i, d in enumerate((95, 96))]
+    for t in writers:
+        t.start()
+    for t in writers:
+        t.join(timeout=120)
+    assert not errors
+    assert svc.contains(1, 1, 90) and svc.get_metadata(1, 1) is not None
+    dests = {r["destination_id"] for r in svc.select_all(1).collect() if r["source_id"] == 1}
+    # both writes read the same base and overlapping writes are not merged:
+    # the store is the one published last, the other's edge is lost
+    assert dests in ({10, 11, 12, 90, 95}, {10, 11, 12, 90, 96})
+    live = {_checkpoint_rdd(svc.store.edges), _checkpoint_rdd(svc.store.metadata)}
+    assert _persistent_rdds(spark) - before == live
+
+
 def test_select_edges_batch_classified_like_single(svc, spark):
     """ADVICE r7: a batch of WhereIn pages must land in the intersection
     pool (class_for_trees), not unconditionally in SELECT — parity with the
